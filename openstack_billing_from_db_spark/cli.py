@@ -68,6 +68,9 @@ def build_parser() -> argparse.ArgumentParser:
 
 
 def main(argv: list[str] | None = None) -> str:
+    from openstack_billing_from_db_spark.operators.sessionize import (
+        DEFAULT_TRIGGER_STATES,
+    )
     from openstack_billing_from_db_spark.plans.billing import (
         TESTDATA_TRIGGERS,
         invoice_csv_rows,
@@ -132,26 +135,20 @@ def main(argv: list[str] | None = None) -> str:
         actions = instance_actions.select(
             "instance_uuid", "created_at", "action", "message"
         )
-        invoice = nova_invoice(
-            actions,
-            dim,
-            rates,
-            args.start,
-            args.end,
-            include_stopped_runtime=include_stopped,
-        )
+        trigger_states, message_col = DEFAULT_TRIGGER_STATES, "message"
     else:
         actions, dim = testdata_billing_tables(spark, args.data_dir)
-        invoice = nova_invoice(
-            actions,
-            dim,
-            rates,
-            args.start,
-            args.end,
-            include_stopped_runtime=include_stopped,
-            trigger_states=TESTDATA_TRIGGERS,
-            message_col=None,
-        )
+        trigger_states, message_col = TESTDATA_TRIGGERS, None
+    invoice = nova_invoice(
+        actions,
+        dim,
+        rates,
+        args.start,
+        args.end,
+        include_stopped_runtime=include_stopped,
+        trigger_states=trigger_states,
+        message_col=message_col,
+    )
     from datetime import timezone
 
     generated_at = datetime.now(timezone.utc).isoformat(timespec="seconds")

@@ -3,9 +3,7 @@ from openstack_billing_from_db_spark.operators.sessionize import (  # noqa: F401
     build_state_intervals,
     build_state_intervals_bucketed,
     map_event_states,
-    runtime_micros,
     state_micros_in_window,
-    state_micros_in_window_excluding,
     with_synthetic_deletes,
 )
 from openstack_billing_from_db_spark.operators.asof import as_of_join  # noqa: F401

@@ -10,13 +10,21 @@ per window — and it is re-run from scratch for every outage interval
 Here the same semantics are three declarative steps, each distributed:
 
 1. ``map_event_states``   — action/message → state (a CASE expression;
-   reference trigger table model.py:141-150, Error path model.py:100-107).
+   reference trigger table model.py:141-150, Error path model.py:100-107)
+   over the Nova ``instance_actions`` columns (instance_uuid, created_at,
+   action, message); ``with_synthetic_deletes`` adds the instance
+   ``deleted_at`` transitions.
 2. ``build_state_intervals`` — lag/lead over (id, ts): each trigger event
    opens a state interval ``[ts, next_trigger_ts)``; the last interval is
    open-ended. Window-independent, so intervals are computed ONCE and
    reused for every billing window and every outage interval.
 3. ``state_micros_in_window`` — clamped-overlap aggregation: per id,
-   Σ |interval ∩ window| − Σ_o |interval ∩ outage_o| per state.
+   Σ |interval ∩ window| − Σ_o |interval ∩ outage_o| per billed state,
+   with the outages passed as driver-side ``(start, end)`` tuples.
+
+``plans.billing.instance_runtime`` composes the three steps; it is the one
+runtime entry point (the invoice and the registered billing queries go
+through it).
 
 Equivalences (SURVEY.md §2.5, pinned by tests/test_sessionize_golden.py):
 
@@ -39,7 +47,7 @@ the whole operator is a single exchange. Outage exclusion is literal
 column arithmetic — zero joins. Skewed ids (an instance with millions of
 events) are the one hazard; AQE skew handling does not apply to window
 functions, so extremely hot ids use ``build_state_intervals_bucketed``:
-two passes with bounded per-(id, time-bucket) sorts, boundaries stitched
+two passes with bounded per-(id, month) sorts, boundaries stitched
 via tiny per-bucket summaries — identical output, test-pinned.
 
 Known deviations from the reference (documented, SURVEY.md §2.11 #4):
@@ -52,9 +60,9 @@ Known deviations from the reference (documented, SURVEY.md §2.11 #4):
 from __future__ import annotations
 
 from datetime import datetime
-from typing import Iterable, Mapping, Sequence
+from typing import Iterable, Mapping
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.operators.intervals import (
@@ -79,55 +87,49 @@ BILLED_STATES: tuple[str, ...] = ("Running", "Stopped")  # reference model.py:15
 def map_event_states(
     events: DataFrame,
     *,
-    id_col: str = "instance_uuid",
-    ts_col: str = "created_at",
-    action_col: str = "action",
     message_col: str | None = "message",
     trigger_states: Mapping[str, str] = DEFAULT_TRIGGER_STATES,
-    error_message: str = "Error",
 ) -> DataFrame:
-    """action/message → ``state``; non-trigger events are dropped.
+    """(instance_uuid, created_at, action[, message]) → (instance_uuid,
+    event_ts, state); non-trigger events are dropped.
 
     Error detection is message-based and takes precedence over the action
     (reference model.py:100-107: any event whose message is "Error" enters
     the Error state regardless of its action).
+
+    ``event_ts`` is a ``TIMESTAMP``: a ``TIMESTAMP_NTZ`` ``created_at``
+    (naive parquet) is cast, which keeps its instants in the UTC session.
     """
-    state: Column = F.lit(None).cast("string")
     # build the CASE from the trigger table; Error checked first
     expr = None
     if message_col is not None:
-        expr = F.when(F.col(message_col) == error_message, F.lit("Error"))
+        expr = F.when(F.col(message_col) == "Error", F.lit("Error"))
     for action, st in trigger_states.items():
-        cond = F.col(action_col) == action
+        cond = F.col("action") == action
         expr = F.when(cond, F.lit(st)) if expr is None else expr.when(cond, F.lit(st))
     state = expr.otherwise(F.lit(None))
     return (
         events.withColumn("state", state)
         .filter(F.col("state").isNotNull())
         .select(
-            F.col(id_col).alias("instance_uuid"),
-            F.col(ts_col).alias("event_ts"),
+            F.col("instance_uuid"),
+            F.col("created_at").cast("timestamp").alias("event_ts"),
             F.col("state"),
         )
     )
 
 
-def with_synthetic_deletes(
-    states: DataFrame,
-    instances: DataFrame,
-    *,
-    id_col: str = "uuid",
-    deleted_at_col: str = "deleted_at",
-) -> DataFrame:
-    """Append a synthetic Deleted transition at ``deleted_at`` (reference
-    model.py:119-125). ``__order`` makes the synthetic event sort after a
-    real event at the same timestamp, matching the reference's
+def with_synthetic_deletes(states: DataFrame, instances: DataFrame) -> DataFrame:
+    """Append a synthetic Deleted transition at each instance's
+    ``deleted_at`` (reference model.py:119-125); ``instances`` is keyed by
+    ``uuid``. ``__order`` makes the synthetic event sort after a real
+    event at the same timestamp, matching the reference's
     process-events-then-apply-deleted_at order."""
     synthetic = (
-        instances.filter(F.col(deleted_at_col).isNotNull())
+        instances.filter(F.col("deleted_at").isNotNull())
         .select(
-            F.col(id_col).alias("instance_uuid"),
-            F.col(deleted_at_col).alias("event_ts"),
+            F.col("uuid").alias("instance_uuid"),
+            F.col("deleted_at").alias("event_ts"),
             F.lit("Deleted").alias("state"),
             F.lit(1).alias("__order"),
         )
@@ -157,15 +159,13 @@ def build_state_intervals(states: DataFrame) -> DataFrame:
     )
 
 
-def build_state_intervals_bucketed(
-    states: DataFrame, *, bucket: str = "month"
-) -> DataFrame:
+def build_state_intervals_bucketed(states: DataFrame) -> DataFrame:
     """Skew-resistant variant of :func:`build_state_intervals` for hot
     instances (an id with tens of millions of events would bottleneck the
     single per-id window sort).
 
     Two passes:
-    1. window over (id, time-bucket): intervals within each bucket — the
+    1. window over (id, calendar month): intervals within each bucket — the
        per-partition sort is bounded by bucket size, so a hot id spreads
        across buckets instead of landing in one task;
     2. window over per-(id, bucket) summary rows (tiny: one row per
@@ -178,7 +178,7 @@ def build_state_intervals_bucketed(
     order_cols = [F.col("event_ts")]
     if "__order" in states.columns:
         order_cols.append(F.col("__order"))
-    with_bucket = states.withColumn("__bucket", F.date_trunc(bucket, F.col("event_ts")))
+    with_bucket = states.withColumn("__bucket", F.date_trunc("month", F.col("event_ts")))
 
     w1 = Window.partitionBy("instance_uuid", "__bucket").orderBy(*order_cols)
     local = with_bucket.select(
@@ -218,15 +218,15 @@ def state_micros_in_window(
     window_end: datetime,
     *,
     outages: Iterable[tuple[datetime, datetime]] = (),
-    states: Sequence[str] = BILLED_STATES,
 ) -> DataFrame:
     """Per-id microseconds in each billed state within ``[start, end)``,
     minus each outage interval's overlap (reference billing.py:88-102).
 
     Outage math is inline column arithmetic over interval bounds — the
-    outage dimension is tiny, so it is folded into the projection rather
-    than joined (zero extra shuffles; the only exchange is the groupBy,
-    which reuses the window's hash partitioning on id).
+    outage dimension is a handful of driver-side tuples, so it is folded
+    into the projection rather than joined (zero extra shuffles; the only
+    exchange is the groupBy, which reuses the window's hash partitioning
+    on id). Output columns: ``running_us``, ``stopped_us``.
     """
     w0, w1 = to_micros(window_start), to_micros(window_end)
     s, e = F.col("start_us"), F.col("end_us")
@@ -237,181 +237,6 @@ def state_micros_in_window(
     aggs = [
         F.sum(F.when(F.col("state") == st, net).otherwise(F.lit(0).cast("long")))
         .alias(f"{st.lower()}_us")
-        for st in states
+        for st in BILLED_STATES
     ]
     return intervals.groupBy("instance_uuid").agg(*aggs)
-
-
-def state_micros_in_window_outages_df(
-    intervals: DataFrame,
-    window_start: datetime,
-    window_end: datetime,
-    outages_df: DataFrame,
-    *,
-    states: Sequence[str] = BILLED_STATES,
-) -> DataFrame:
-    """Outage exclusion via a broadcast join instead of inline literals —
-    the right formulation when the outage dimension is large (thousands
-    of intervals would bloat the literal expression tree; a broadcast
-    join scales to any dimension that fits an executor).
-
-    Σ over (interval × outage) overlap pairs equals the reference's
-    per-outage state-machine replay (billing.py:95-100) by distributivity
-    — identical to the literal path, test-pinned."""
-    base = state_micros_in_window(intervals, window_start, window_end, states=states)
-    o = outages_df.select(
-        F.unix_micros("outage_start").alias("o0"),
-        F.unix_micros("outage_end").alias("o1"),
-    )
-    ov = overlap_micros(F.col("start_us"), F.col("end_us"), F.col("o0"), F.col("o1"))
-    exc = (
-        intervals.join(F.broadcast(o))
-        .groupBy("instance_uuid")
-        .agg(
-            *[
-                F.sum(F.when(F.col("state") == st, ov).otherwise(F.lit(0).cast("long")))
-                .alias(f"exc_{st.lower()}_us")
-                for st in states
-            ]
-        )
-    )
-    joined = base.join(exc, "instance_uuid", "left")
-    return joined.select(
-        "instance_uuid",
-        *[
-            (
-                F.col(f"{st.lower()}_us")
-                - F.coalesce(F.col(f"exc_{st.lower()}_us"), F.lit(0).cast("long"))
-            ).alias(f"{st.lower()}_us")
-            for st in states
-        ],
-    )
-
-
-# above this many intervals the inline-literal path would bloat the
-# expression tree (one overlap term per outage per state); the
-# broadcast-join path takes over (same auto-select idea as
-# dedup._pick_verify_path)
-_LITERAL_OUTAGES_MAX_ROWS = 64
-# a file-backed dimension whose Catalyst size estimate exceeds this is
-# big without needing a row probe (64 rows × a generous 256 B/row)
-_LITERAL_OUTAGES_MAX_BYTES = _LITERAL_OUTAGES_MAX_ROWS * 256
-
-
-def _probe_outage_literals(
-    outages_df: DataFrame,
-) -> list[tuple[datetime, datetime]] | None:
-    """The tuples for the literal path if the dimension is small, else
-    None (→ broadcast join).
-
-    Catalyst's size estimate settles file-backed dimensions for free
-    (real bytes, no job); Python-created local relations report unknown
-    (Long.MaxValue), so those get a BOUNDED probe: collect at most
-    max_rows+1 narrow rows — trivial for a real outage dim, and the
-    limit caps the work if the dimension is huge. When the probe fits,
-    the collected rows ARE the literals (no second job)."""
-    from openstack_billing_from_db_spark.operators.parallelism import (
-        plan_size_estimate,
-    )
-
-    size = plan_size_estimate(outages_df)
-    if size is not None and size > _LITERAL_OUTAGES_MAX_BYTES:
-        return None  # known-big: skip the probe
-    # unknown size (None): fall through to the bounded probe
-    rows = (
-        outages_df.select("outage_start", "outage_end")
-        .limit(_LITERAL_OUTAGES_MAX_ROWS + 1)
-        .collect()
-    )
-    if len(rows) > _LITERAL_OUTAGES_MAX_ROWS:
-        return None
-    return [(r.outage_start, r.outage_end) for r in rows]
-
-
-def state_micros_in_window_excluding(
-    intervals: DataFrame,
-    window_start: datetime,
-    window_end: datetime,
-    outages: DataFrame | Iterable[tuple[datetime, datetime]],
-    *,
-    states: Sequence[str] = BILLED_STATES,
-) -> DataFrame:
-    """ONE entry point for outage exclusion — auto-selects the physical
-    strategy by dimension size, removing the manual choice between the
-    two equivalent formulations (test-pinned equal):
-
-    - small dimension → inline literal arithmetic
-      (``state_micros_in_window``): zero extra shuffles, the overlap
-      terms fold into the projection;
-    - large dimension → broadcast join
-      (``state_micros_in_window_outages_df``): scales to any dimension
-      that fits an executor without bloating the expression tree.
-
-    ``outages`` may be driver-side ``(start, end)`` tuples (always the
-    literal path — the caller already materialized them) or an outage
-    DataFrame (path picked by Catalyst size estimate + bounded probe,
-    see ``_probe_outage_literals``).
-    """
-    if isinstance(outages, DataFrame):
-        literals = _probe_outage_literals(outages)
-        if literals is None:
-            return state_micros_in_window_outages_df(
-                intervals, window_start, window_end, outages, states=states
-            )
-        outages = literals
-    return state_micros_in_window(
-        intervals, window_start, window_end, outages=outages, states=states
-    )
-
-
-def outages_during(
-    outages_df: DataFrame,
-    window_start: datetime,
-    window_end: datetime,
-    cluster: str,
-) -> list[tuple[datetime, datetime]]:
-    """Reference ``get_outages_during`` (billing.py:121-124): the cluster's
-    outage intervals overlapping the billing window, as driver-side tuples
-    for the literal exclusion path. The dimension is tiny by construction;
-    collect is intentional."""
-    rows = (
-        outages_df.filter(F.col("cluster") == cluster)
-        .filter(
-            (F.col("outage_end") > F.lit(window_start))
-            & (F.col("outage_start") < F.lit(window_end))
-        )
-        .select("outage_start", "outage_end")
-        .collect()
-    )
-    return [(r.outage_start, r.outage_end) for r in rows]
-
-
-def runtime_micros(
-    events: DataFrame,
-    window_start: datetime,
-    window_end: datetime,
-    *,
-    instances: DataFrame | None = None,
-    outages: Iterable[tuple[datetime, datetime]] = (),
-    id_col: str = "instance_uuid",
-    ts_col: str = "created_at",
-    action_col: str = "action",
-    message_col: str | None = "message",
-    trigger_states: Mapping[str, str] = DEFAULT_TRIGGER_STATES,
-) -> DataFrame:
-    """End-to-end: raw events (+optional instances for deleted_at) →
-    per-id (running_us, stopped_us) within the window."""
-    states = map_event_states(
-        events,
-        id_col=id_col,
-        ts_col=ts_col,
-        action_col=action_col,
-        message_col=message_col,
-        trigger_states=trigger_states,
-    )
-    if instances is not None:
-        states = with_synthetic_deletes(states, instances)
-    intervals = build_state_intervals(states)
-    return state_micros_in_window(
-        intervals, window_start, window_end, outages=outages
-    )

@@ -72,12 +72,11 @@ def nova_invoice(
     include_stopped_runtime: bool = True,
     trigger_states: Mapping[str, str] = DEFAULT_TRIGGER_STATES,
     message_col: str | None = "message",
-    deleted_at_in_dim: bool = True,
 ) -> DataFrame:
     """Long-format invoice: (project_id, su_type, su_hours, rate, cost).
 
-    ``instance_dim`` columns: uuid, project_id, su_type, service_units
-    (+ deleted_at when ``deleted_at_in_dim``). The reference's six
+    ``instance_dim`` columns: uuid, project_id, su_type, service_units,
+    deleted_at (see ``su_instance_dim``). The reference's six
     ``*_su_hours`` accumulator attributes (billing.py:105-113) become a
     single ``su_type`` value column — grouped sum instead of attribute
     dispatch.
@@ -86,7 +85,7 @@ def nova_invoice(
         actions,
         window_start,
         window_end,
-        instances=instance_dim if deleted_at_in_dim else None,
+        instances=instance_dim,
         outages=outages,
         trigger_states=trigger_states,
         message_col=message_col,
@@ -169,6 +168,24 @@ def invoice_csv_rows(
     )
 
 
+def su_instance_dim(instances: DataFrame) -> DataFrame:
+    """The 7-column SU dimension (uuid, project_id, su_type, gpu_count,
+    service_units, quarantine, deleted_at) from instance rows carrying
+    uuid, project_id, pci_requests, vcpus, memory_mb and deleted_at."""
+    su_type, gpu_count, service_units, quarantine = service_unit_columns(
+        "pci_requests", "vcpus", "memory_mb"
+    )
+    return instances.select(
+        "uuid",
+        "project_id",
+        su_type.alias("su_type"),
+        gpu_count.alias("gpu_count"),
+        service_units.alias("service_units"),
+        quarantine.alias("quarantine"),
+        "deleted_at",
+    )
+
+
 def nova_instance_dim(
     instances: DataFrame,
     instance_extra: DataFrame | None,
@@ -197,18 +214,7 @@ def nova_instance_dim(
         ).drop("instance_uuid")
     else:
         joined = live.withColumn("pci_requests", F.lit(None).cast("string"))
-    su_type, gpu_count, service_units, quarantine = service_unit_columns(
-        "pci_requests", "vcpus", "memory_mb"
-    )
-    dim = joined.select(
-        "uuid",
-        "project_id",
-        su_type.alias("su_type"),
-        gpu_count.alias("gpu_count"),
-        service_units.alias("service_units"),
-        quarantine.alias("quarantine"),
-        "deleted_at",
-    )
+    dim = su_instance_dim(joined)
     if fail_on_quarantine:
         bad = dim.filter(F.col("quarantine").isNotNull())
         first = bad.select("uuid", "quarantine").take(1)
@@ -267,19 +273,7 @@ def testdata_billing_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame
         F.when(is_gpu, pci_json).otherwise(F.lit(None).cast("string")).alias("pci_requests"),
         F.lit(None).cast("timestamp").alias("deleted_at"),
     )
-    su_type, gpu_count, service_units, quarantine = service_unit_columns(
-        "pci_requests", "vcpus", "memory_mb"
-    )
-    dim = base.select(
-        "uuid",
-        "project_id",
-        su_type.alias("su_type"),
-        gpu_count.alias("gpu_count"),
-        service_units.alias("service_units"),
-        quarantine.alias("quarantine"),
-        "deleted_at",
-    )
-    return actions, dim
+    return actions, su_instance_dim(base)
 
 
 def testdata_invoice(

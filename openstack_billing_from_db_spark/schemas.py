@@ -61,14 +61,6 @@ RATES = T.StructType(
     ]
 )
 
-OUTAGES = T.StructType(
-    [
-        T.StructField("cluster", T.StringType(), False),
-        T.StructField("outage_start", T.TimestampType(), False),
-        T.StructField("outage_end", T.TimestampType(), False),
-    ]
-)
-
 # --- Driver testdata tables (/root/testdata/sf*/ — TESTDATA.md) ---
 
 EVENTS = T.StructType(

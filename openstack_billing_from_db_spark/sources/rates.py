@@ -99,16 +99,3 @@ def fetch_rate_card(
     include_stopped = str(stopped_raw).strip().lower() in ("true", "1", "yes")
     return rates, include_stopped
 
-
-def rates_from_url(
-    spark: SparkSession,
-    url: str,
-    invoice_month: str,
-    *,
-    fetcher=None,
-) -> DataFrame:
-    """Rate card fetched from the nerc-rates repo as the broadcastable
-    6-row dimension (reference main.py:176-192). Network stays on the
-    driver; executors only ever see the tiny DataFrame."""
-    card, _ = fetch_rate_card(invoice_month, url=url, fetcher=fetcher)
-    return rates_df(spark, card)

@@ -23,7 +23,7 @@ from openstack_billing_from_db_spark.sources.mysqldump import (
 )
 from openstack_billing_from_db_spark.sources.rates import (
     fetch_rate_card,
-    rates_from_url,
+    rates_df,
 )
 
 
@@ -123,8 +123,10 @@ def test_fetch_rate_card_month_ranges():
 
 
 def test_rates_from_url_dataframe(spark):
-    df = rates_from_url(spark, "https://example/rates.yaml", "2024-01",
-                        fetcher=lambda u: RATES_YAML)
+    card, _ = fetch_rate_card(
+        "2024-01", url="https://example/rates.yaml", fetcher=lambda u: RATES_YAML
+    )
+    df = rates_df(spark, card)
     rows = {r.service_unit_type: r for r in df.collect()}
     assert len(rows) == 6 and float(rows["gpu_a100"].rate) == 1.803
 

@@ -216,6 +216,25 @@ def test_minhash_auto_picks_by_size(spark, tmp_path):
     assert "array_intersect" not in unknown_plan
 
 
+def test_plan_size_estimate_version_gate(spark, tmp_path, monkeypatch):
+    """The private queryExecution() size probe is wrapped behind an
+    explicit Spark-major gate (VERDICT r8 Next #5): file-backed sources
+    give a real byte estimate on a verified major; an UNVERIFIED major
+    degrades to None, and the dedup verify chooser falls back to its
+    conservative path."""
+    from openstack_billing_from_db_spark.operators import parallelism as P
+
+    spark.range(200).write.parquet(str(tmp_path / "sz"))
+    fdf = spark.read.parquet(str(tmp_path / "sz"))
+    est = P.plan_size_estimate(fdf)
+    assert isinstance(est, int) and 0 < est < (1 << 40)
+
+    monkeypatch.setattr(P, "_PLAN_STATS_VERIFIED_MAJORS", frozenset())
+    assert P.plan_size_estimate(fdf) is None
+    # dedup verify chooser: unknown -> assume big (exploded verify)
+    assert dedup._pick_verify_path(fdf) == "exploded"
+
+
 # --- VERDICT: adaptive LSH width + OR-amplification -------------------------
 
 

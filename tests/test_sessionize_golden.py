@@ -11,7 +11,13 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
-from openstack_billing_from_db_spark.operators.sessionize import runtime_micros
+from openstack_billing_from_db_spark.operators.sessionize import (
+    build_state_intervals_bucketed,
+    map_event_states,
+    state_micros_in_window,
+    with_synthetic_deletes,
+)
+from openstack_billing_from_db_spark.plans.billing import instance_runtime
 
 WINDOW_START = datetime(2000, 1, 1)
 WINDOW_END = datetime(2000, 2, 1)
@@ -23,26 +29,43 @@ DAY = 24 * HOUR
 MONTH = 31 * DAY
 
 
-def _events_df(spark, rows):
+def _events_df(spark, rows, ts_type="timestamp"):
     """rows: (ts, action, message) for a single instance 'i1'."""
     data = [("i1", ts, action, message) for ts, action, message in rows]
     return spark.createDataFrame(
-        data, "instance_uuid string, created_at timestamp, action string, message string"
+        data, f"instance_uuid string, created_at {ts_type}, action string, message string"
     )
 
 
-def _instances_df(spark, deleted_at):
+def _instances_df(spark, deleted_at, ts_type="timestamp"):
     return spark.createDataFrame(
-        [("i1", deleted_at)], "uuid string, deleted_at timestamp"
+        [("i1", deleted_at)], f"uuid string, deleted_at {ts_type}"
     )
 
 
-def _runtime(spark, rows, deleted_at=None, window=(WINDOW_START, WINDOW_END), outages=()):
-    events = _events_df(spark, rows)
-    instances = _instances_df(spark, deleted_at) if deleted_at is not None else None
-    out = runtime_micros(
-        events, window[0], window[1], instances=instances, outages=outages
-    ).collect()
+def _runtime(
+    spark,
+    rows,
+    deleted_at=None,
+    window=(WINDOW_START, WINDOW_END),
+    outages=(),
+    ts_type="timestamp",
+    bucketed=False,
+):
+    events = _events_df(spark, rows, ts_type)
+    instances = _instances_df(spark, deleted_at, ts_type) if deleted_at is not None else None
+    if bucketed:
+        states = map_event_states(events)
+        if instances is not None:
+            states = with_synthetic_deletes(states, instances)
+        runtime = state_micros_in_window(
+            build_state_intervals_bucketed(states), *window, outages=outages
+        )
+    else:
+        runtime = instance_runtime(
+            events, window[0], window[1], instances=instances, outages=outages
+        )
+    out = runtime.collect()
     if not out:
         return 0, 0
     row = out[0]
@@ -121,16 +144,22 @@ def test_stopped_then_deleted_at(spark):  # test_instance.py:118-137
 
 
 def test_stop_start_then_deleted_at(spark):  # test_instance.py:140-160
-    r, s = _runtime(
-        spark,
-        [
-            (off(), "create", ""),
-            (off(minutes=40), "stop", ""),
-            (off(days=1), "start", ""),
-        ],
-        deleted_at=off(days=1, minutes=40),
-    )
-    assert (r, s) == (80 * MIN, DAY - 40 * MIN)
+    rows = [
+        (off(), "create", ""),
+        (off(minutes=40), "stop", ""),
+        (off(days=1), "start", ""),
+    ]
+    # naive parquet times (TIMESTAMP_NTZ) bill the same instants, through
+    # the single-pass and the bucketed interval builder alike
+    for ts_type, bucketed in (
+        ("timestamp", False),
+        ("timestamp_ntz", False),
+        ("timestamp_ntz", True),
+    ):
+        r, s = _runtime(
+            spark, rows, deleted_at=off(days=1, minutes=40), ts_type=ts_type, bucketed=bucketed
+        )
+        assert (r, s) == (80 * MIN, DAY - 40 * MIN), (ts_type, bucketed)
 
 
 def test_create_stop_delete_hour_each(spark):  # test_instance.py:163-182
@@ -272,7 +301,7 @@ def test_zero_events_yields_zero_not_crash(spark):
         [], "instance_uuid string, created_at timestamp, action string, message string"
     )
     instances = _instances_df(spark, datetime(2000, 1, 5))
-    out = runtime_micros(events, WINDOW_START, WINDOW_END, instances=instances).collect()
+    out = instance_runtime(events, WINDOW_START, WINDOW_END, instances=instances).collect()
     # a deleted_at-only instance has one Deleted interval → zero billed time
     assert all(row.running_us == 0 and row.stopped_us == 0 for row in out)
 

@@ -11,8 +11,8 @@ from datetime import datetime, timedelta
 
 from openstack_billing_from_db_spark.operators.sessionize import (
     DEFAULT_TRIGGER_STATES,
-    runtime_micros,
 )
+from openstack_billing_from_db_spark.plans.billing import instance_runtime
 
 WINDOW = (datetime(2000, 1, 1), datetime(2000, 2, 1))
 ACTIONS = ["create", "start", "stop", "shelve", "unshelve", "delete", "resize", "noop"]
@@ -82,7 +82,7 @@ def test_random_sequences_match_simulator(spark):
     )
     got = {
         r.instance_uuid: (r.running_us // 1_000_000, r.stopped_us // 1_000_000)
-        for r in runtime_micros(events, *WINDOW).collect()
+        for r in instance_runtime(events, *WINDOW).collect()
     }
     mismatches = {
         iid: (got.get(iid, (0, 0)), exp)
@@ -112,7 +112,7 @@ def test_random_sequences_with_outages(spark):
     )
     got = {
         r.instance_uuid: (r.running_us // 1_000_000, r.stopped_us // 1_000_000)
-        for r in runtime_micros(events, *WINDOW, outages=outages).collect()
+        for r in instance_runtime(events, *WINDOW, outages=outages).collect()
     }
     mismatches = {
         iid: (got.get(iid, (0, 0)), exp)
