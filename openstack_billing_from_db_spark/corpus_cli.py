@@ -339,7 +339,7 @@ def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> di
                     f"jaccard >= {args.threshold}"
                 )
             elif args.method == "simhash":
-                pairs = dd.simhash_near_duplicates(docs)
+                pairs = dd.simhash_near_duplicates(dd.simhash(docs))
             elif args.method == "setsim":
                 pairs = dd.set_similarity_join(
                     docs, threshold_bp=int(round(args.threshold * 10000))

@@ -1,8 +1,17 @@
 """Deduplication operators for training-data pipelines: exact,
-MinHash+LSH near-dup, SimHash near-dup — each designed so the heavy
-signature computation is a pure map-side projection (array expressions,
-no explode, no shuffle) and the only shuffles are the final
-bucket-equality self-joins on LSH keys.
+MinHash+LSH near-dup, SimHash and multi-word perceptual-hash near-dup —
+each designed so the heavy signature computation is a pure map-side
+projection (array expressions, no explode, no shuffle) and the only
+shuffles are the final bucket-equality self-joins on LSH keys.
+
+Every banded hamming kernel (:func:`simhash_near_duplicates`,
+:func:`multiword_hamming_pairs`, :func:`framewise_multiword_hamming_pairs`,
+:func:`multiword_hamming_matches`, :func:`framewise_hamming_matches`) is
+one join built from four shared helpers, each written once: the band
+melt (``_band_melt``), the bucket cap (``_bucket_cap``), the
+canonical-band test (``_first_band_sql``) and the hamming verify
+(``_hamming``), assembled by a self-join core (``_hamming_pairs``) and a
+probe core (``_hamming_matches``).
 
 Scale notes (100 TB):
 - signatures: embarrassingly parallel, whole-stage-codegen'd; no Python.
@@ -23,7 +32,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.functions.hashing import (
-    portable_hash64,
     py_hash64,
     seeded_hash64,
 )
@@ -44,9 +52,10 @@ def _multiword_band_layout(
     band_bits: int,
     bits: int | None,
     max_hamming: int,
-) -> tuple[int, int, int, int]:
-    """Validated band geometry shared by the multi-word hamming kernels:
-    returns ``(bpw, n_bands, bits, mask)``. ``band_bits`` must divide
+) -> int:
+    """Validated band count shared by the hamming entry points that
+    check their geometry (all but :func:`simhash_near_duplicates`):
+    returns ``n_bands``. ``band_bits`` must divide
     ``word_bits`` so a band never straddles two words — EXCEPT when
     ``n_words == 1``, where straddling is impossible and any width with
     ``bpw = word_bits // band_bits >= 1`` reproduces the single-word
@@ -65,21 +74,20 @@ def _multiword_band_layout(
         raise ValueError(
             f"band_bits ({band_bits}) wider than word_bits ({word_bits})"
         )
-    full_bands = n_words * bpw
     if bits is None:
         bits = n_words * word_bits
     if not 0 < bits <= n_words * word_bits:
         raise ValueError(
             f"bits ({bits}) must be in (0, {n_words * word_bits}]"
         )
-    n_bands = min(full_bands, -(-bits // band_bits))
+    n_bands = min(n_words * bpw, -(-bits // band_bits))
     if n_bands <= max_hamming:
         raise ValueError(
             f"only {n_bands} non-padding bands at band_bits={band_bits} "
             f"over a {bits}-bit fingerprint — pigeonhole recall needs "
             f"more than max_hamming={max_hamming}; narrow the bands"
         )
-    return bpw, n_bands, bits, (1 << band_bits) - 1
+    return n_bands
 
 
 def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
@@ -125,21 +133,14 @@ def _pick_verify_path(docs: DataFrame) -> str:
     return "arrays" if size < _ARRAY_VERIFY_MAX_BYTES else "exploded"
 
 
-def shingle_hashes(shingle_arr: Column) -> Column:
-    """One md5-derived base hash per shingle (mod MINHASH_P). Materialized
-    once per row; the per-permutation minhashes are cheap affine
-    transforms of this array (1 md5 per shingle instead of num_hashes)."""
-    return F.transform(shingle_arr, lambda s: portable_hash64(s) % MINHASH_P)
-
-
 # --- SQL-text twins of the signature builders --------------------------------
 #
 # Building the shingle/minhash/band expressions as Column objects costs
 # one py4j round trip per operator — ~0.7 s of pure driver time per
 # minhash_near_duplicates call (and the composed recipes build the
-# chain once per execution). Each builder below emits the IDENTICAL
-# expression tree as one SQL string parsed in a single round trip; the
-# golden tests and oracle parity pin output equality.
+# chain once per execution). Each builder below emits its expression
+# tree as one SQL string parsed in a single round trip; the golden tests
+# and oracle parity pin output equality.
 
 
 def _words_sql(text_expr: str) -> str:
@@ -192,37 +193,6 @@ def _minhash_band_sql(num_hashes: int, rows_per_band: int) -> list[str]:
             for r in range(rows_per_band)
         )
         + "))"
-        for b in range(n_bands)
-    ]
-
-
-def minhash_signature(hash_arr: Column, num_hashes: int) -> list[Column]:
-    """num_hashes min-hashes via the affine family (a_j·h + b_j) mod p,
-    computed as array_min over a transform — per-row expressions, no
-    explode, no additional cryptographic hashing."""
-    coeffs = minhash_coefficients(num_hashes)
-    return [
-        F.array_min(
-            F.transform(hash_arr, lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P)
-        ).alias(f"mh{j}")
-        for j, (a, b) in enumerate(coeffs)
-    ]
-
-
-def minhash_bands(num_hashes: int, rows_per_band: int) -> list[Column]:
-    """Band signatures: md5 over the concatenated minhashes of each band."""
-    assert num_hashes % rows_per_band == 0
-    n_bands = num_hashes // rows_per_band
-    return [
-        F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"mh{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ],
-            )
-        ).alias(f"band{b}")
         for b in range(n_bands)
     ]
 
@@ -474,6 +444,200 @@ def simhash(
     )
 
 
+# --- banded hamming join -------------------------------------------------------
+#
+# Every hamming kernel below is one join, written once: melt each
+# fingerprint into (band, bucket) rows (_band_melt), optionally drop
+# oversized buckets (_bucket_cap), join on the bucket, keep a joined row
+# only from the pair's first matching band (_first_band_sql) and verify
+# the summed popcount (_hamming). A fingerprint is a list of BIGINT words
+# of ``word_bits`` bits; band b reads bits [band_bits·(b mod bpw), …) of
+# word b div bpw (bpw = word_bits // band_bits), so a band never
+# straddles two words. The helpers validate nothing: the public entry
+# points that validate do so before calling them. Each melt, cap and
+# canonical-band test is one SQL parse — chained py4j Column calls cost
+# a driver round trip per operator, seconds of pure build time at
+# n_bands~11 × n_words~3.
+
+
+def _band_sql(words: list[str], b: int, word_bits: int, band_bits: int) -> str:
+    """SQL for band ``b`` of the fingerprint held in ``words``."""
+    bpw = word_bits // band_bits
+    return (
+        f"(shiftright({words[b // bpw]}, {band_bits * (b % bpw)}) & "
+        f"{(1 << band_bits) - 1})"
+    )
+
+
+def _band_melt(
+    df: DataFrame, keep: list, words: list, word_bits: int, band_bits: int,
+    n_bands: int,
+) -> DataFrame:
+    """``keep`` exploded to one row per (band, bucket) of the first
+    ``n_bands`` bands of ``words``."""
+    struct_arr = ", ".join(
+        f"named_struct('band', {b}, 'bucket', "
+        f"{_band_sql(words, b, word_bits, band_bits)})"
+        for b in range(n_bands)
+    )
+    return df.select(
+        *keep, F.expr(f"explode(array({struct_arr}))").alias("bb")
+    ).select(*keep, "bb.*")
+
+
+def _bucket_cap(
+    melted: DataFrame, gcols: list[str], max_bucket_size: int
+) -> DataFrame:
+    """The melted rows whose ([group,] band, bucket) key holds at most
+    ``max_bucket_size`` rows, plus ``bv``: the per-(doc[, group]) bucket
+    sizes in band order, which the bucket-aware canonical-band test
+    reads. A degenerate population (boilerplate families,
+    constant/black frames) collapses into one bucket with quadratic
+    candidates; capped, an oversized bucket emits nothing and a pair
+    survives iff one of its colliding bands is under the cap."""
+    keys = [*gcols, "band", "bucket"]
+    sizes = melted.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bn"))
+    with_bn = melted.join(sizes, keys)
+    bv = with_bn.groupBy("doc_id", *gcols).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("band", "__bn"))),
+            lambda s: s["__bn"],
+        ).alias("bv")
+    )
+    return with_bn.filter(F.col("__bn") <= max_bucket_size).join(
+        bv, ["doc_id", *gcols]
+    )
+
+
+def _side(
+    melted: DataFrame, id_as: str, suffix: str, gcols: list, words: list, *extra
+) -> DataFrame:
+    """One side of the bucket join: the id renamed to ``id_as`` and the
+    words to ``w{i}{suffix}``, the names the canonical-band test and the
+    hamming verify read."""
+    renamed = [F.col(w).alias(f"w{i}{suffix}") for i, w in enumerate(words)]
+    doc = F.col("doc_id").alias(id_as)
+    return melted.select("band", "bucket", *gcols, doc, *renamed, *extra)
+
+
+def _first_band_sql(
+    n_words: int, word_bits: int, band_bits: int, n_bands: int,
+    max_bucket_size: int | None,
+) -> str:
+    """Canonical-band predicate over a joined row: keep it only if NO
+    EARLIER band also matches. A pair colliding in m bands would
+    otherwise be emitted m times and need a distinct SHUFFLE over the
+    (huge) near-dup output; both fingerprints are present, so this is a
+    map-side bit test, each pair survives exactly once, and the distinct
+    exchange disappears from the plan (pinned by test_round2_fixes).
+    With a bucket cap an earlier band only counts if its bucket was kept
+    (``bv``: a colliding pair shares the bucket, hence the size)."""
+    wa = [f"w{i}a" for i in range(n_words)]
+    wb = [f"w{i}b" for i in range(n_words)]
+    fbo = "true"
+    for j in range(n_bands):
+        earlier = (
+            f"((band > {j}) AND ({_band_sql(wa, j, word_bits, band_bits)} = "
+            f"{_band_sql(wb, j, word_bits, band_bits)}))"
+        )
+        if max_bucket_size is not None:
+            earlier = f"({earlier} AND (bv[{j}] <= {max_bucket_size}))"
+        fbo = f"({fbo} AND (NOT {earlier}))"
+    return fbo
+
+
+def _hamming(n_words: int) -> Column:
+    """The verify: Σᵢ bit_count(wᵢa xor wᵢb), as ``hamming``."""
+    ham_sql = " + ".join(f"bit_count(w{i}a ^ w{i}b)" for i in range(n_words))
+    return F.expr(f"CAST((0 + {ham_sql}) AS INT)").alias("hamming")
+
+
+def _hamming_pairs(
+    fingerprints: DataFrame,
+    words: list[str],
+    bands: tuple[int, int, int],
+    *,
+    max_hamming: int,
+    gcols: list[str],
+    max_bucket_size: int | None,
+    persist_input: bool = True,
+) -> DataFrame:
+    """Self-join form over ``bands`` = (word_bits, band_bits, n_bands):
+    (doc_a, doc_b, *gcols, hamming) for every doc_a < doc_b sharing a
+    band (within the same ``gcols`` group) at hamming ≤ ``max_hamming``.
+    Both sides read the same (capped) melt."""
+    if persist_input:
+        # both sides of the self-join read the same fingerprints instead
+        # of recomputing their lineage twice
+        fingerprints = tracked_persist(fingerprints)
+    melted = _band_melt(fingerprints, ["doc_id", *gcols, *words], words, *bands)
+    bv = []
+    if max_bucket_size is not None:
+        melted = _bucket_cap(melted, gcols, max_bucket_size)
+        bv = ["bv"]  # read via the a side only (shared bucket ⇒ equal sizes)
+    a = _side(melted, "doc_a", "a", gcols, words, *bv)
+    b = _side(melted, "doc_b", "b", gcols, words)
+    fbo = _first_band_sql(len(words), *bands, max_bucket_size)
+    return (
+        a.join(b, [*gcols, "band", "bucket"])
+        .filter(F.expr(f"doc_a < doc_b AND {fbo}"))
+        .select("doc_a", "doc_b", *gcols, _hamming(len(words)))
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _hamming_matches(
+    existing: DataFrame,
+    new: DataFrame,
+    words: list[str],
+    bands: tuple[int, int, int],
+    *,
+    max_hamming: int,
+    gcols: list[str],
+    max_bucket_size: int | None,
+) -> DataFrame:
+    """Probe form over ``bands`` = (word_bits, band_bits, n_bands):
+    (new_id, match_id, *gcols, hamming, match_in_new) for every NEW
+    fingerprint against the index plus the batch itself, self excluded.
+    No ``doc_a < doc_b`` cut: a verdict is per NEW doc, so a new-new
+    pair appears in both directions. The cap measures occupancy on the
+    index+batch union; the new side needs no filter of its own —
+    dropping the oversized union rows empties the band's join output."""
+    keep = ["doc_id", *gcols, *words]
+    new = tracked_persist(new)
+    union = existing.select(*keep, F.lit(False).alias("__new")).unionByName(
+        new.select(*keep, F.lit(True).alias("__new"))
+    )
+    a = _side(_band_melt(new, keep, words, *bands), "new_id", "a", gcols, words)
+    b = _band_melt(union, [*keep, "__new"], words, *bands)
+    bv = []
+    if max_bucket_size is not None:
+        b = _bucket_cap(b, gcols, max_bucket_size)
+        bv = ["bv"]
+    in_new = F.col("__new").alias("match_in_new")
+    b = _side(b, "match_id", "b", gcols, words, in_new, *bv)
+    fbo = _first_band_sql(len(words), *bands, max_bucket_size)
+    return (
+        a.join(b, [*gcols, "band", "bucket"])
+        .filter(F.expr(f"new_id != match_id AND {fbo}"))
+        .select("new_id", "match_id", *gcols, _hamming(len(words)), "match_in_new")
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def _frame_majority(
+    frame_rows: DataFrame, keys: list[str], min_frames: int
+) -> DataFrame:
+    """Entities matching on at least ``min_frames`` frame positions: the
+    canonical-band test left one row per (pair, frame), so the majority
+    is a plain count(1) per pair, no distinct shuffle."""
+    return (
+        frame_rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
+        .filter(F.col("n_frames_matched") >= min_frames)
+    )
+
+
 def simhash_near_duplicates(
     fingerprints: DataFrame,
     *,
@@ -482,9 +646,11 @@ def simhash_near_duplicates(
     max_hamming: int = 4,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Banded hamming join over simhash fingerprints: candidates share at
-    least one exact band (probabilistic recall, standard LSH trade-off),
-    verified with bit_count(xor) ≤ max_hamming.
+    """Banded hamming join over (doc_id, simhash) fingerprints:
+    candidates share at least one exact band of ``bits // band_bits``
+    (probabilistic recall, standard LSH trade-off — unlike the
+    multi-word kernels this entry point does NOT require more bands
+    than ``max_hamming``), verified with bit_count(xor) ≤ max_hamming.
 
     Output: (doc_a, doc_b, hamming).
 
@@ -492,83 +658,13 @@ def simhash_near_duplicates(
     ``minhash_near_duplicates`` does (oversized buckets — boilerplate
     families with quadratic pair counts — emit nothing; a pair survives
     iff one of its colliding bands is under the cap)."""
-    n_bands = bits // band_bits
-    mask = (1 << band_bits) - 1
-    # persisted: both sides of the self-join read the same fingerprints
-    # instead of recomputing the simhash lineage twice
-    fingerprints = tracked_persist(fingerprints)
-    # one SQL parse for the band melt (see the _words_sql block note)
-    struct_arr = ", ".join(
-        f"named_struct('band', {k}, 'bucket', "
-        f"(shiftright(simhash, {k * band_bits}) & {mask}))"
-        for k in range(n_bands)
-    )
-    melted = fingerprints.select(
-        "doc_id",
-        "simhash",
-        F.expr(f"explode(array({struct_arr}))").alias("bb"),
-    ).select("doc_id", "simhash", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-
-    side_cols = ["band", "bucket", "doc_id", "simhash"]
-    if max_bucket_size is not None:
-        sizes = melted.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = melted.join(sizes, ["band", "bucket"])
-        bnvec = with_bn.groupBy("doc_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bnvec")
-        )
-        melted = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, "doc_id")
-        )
-        side_cols.append("bnvec")
-
-    def _side(suffix: str) -> DataFrame:
-        renames = {"doc_id": f"doc_{suffix}", "simhash": f"fp_{suffix}",
-                   "bnvec": f"bv_{suffix}"}
-        # bv is read only via bv_a (shared bucket ⇒ equal sizes) — drop
-        # it from the b side of the self-join
-        cols = side_cols if suffix == "a" else [
-            c for c in side_cols if c != "bnvec"
-        ]
-        return melted.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in cols]
-        )
-
-    a, b = _side("a"), _side("b")
-
-    # canonical-band dedup: a pair colliding in m bands would otherwise be
-    # emitted m times and need a full distinct SHUFFLE over the (huge)
-    # near-dup output. Instead keep a joined row only when NO EARLIER band
-    # also matches — both fingerprints are present, so this is a map-side
-    # bit test, each pair survives exactly once, and the distinct exchange
-    # disappears from the plan (pinned by test_round2_fixes). With a
-    # bucket cap, an earlier band only counts if its bucket was kept.
-    fbo = "true"
-    for j in range(n_bands):
-        eq_j = (
-            f"((shiftright(fp_a, {j * band_bits}) & {mask}) = "
-            f"(shiftright(fp_b, {j * band_bits}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_a[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.expr(fbo))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b"))).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_pairs(
+        fingerprints,
+        ["simhash"],
+        (bits, band_bits, bits // band_bits),
+        max_hamming=max_hamming,
+        gcols=[],
+        max_bucket_size=max_bucket_size,
     )
 
 
@@ -585,7 +681,7 @@ def multiword_hamming_pairs(
     persist_input: bool = True,
 ) -> DataFrame:
     """Banded hamming join over MULTI-WORD fingerprints (doc_id, w0 ..
-    w{n-1}) — the wide-hash companion of :func:`simhash_near_duplicates`
+    w{n-1}) — the wide-hash form of :func:`simhash_near_duplicates`
     for fingerprints past 63 bits (e.g. the 72-bit grid=9 dHash,
     media.dhash_words packing). ``band_bits`` must divide ``word_bits``
     so every band lives inside one word: band b reads bits
@@ -606,246 +702,40 @@ def multiword_hamming_pairs(
 
     Candidates share an exact band; the verify is the full hamming
     distance Σᵢ bit_count(wᵢᵃ xor wᵢᵇ) ≤ max_hamming. Pairs colliding
-    in several bands are emitted once via the same canonical-band
-    (no-earlier-band-matches) map-side test simhash_near_duplicates
-    uses, so no distinct shuffle. Output: (doc_a, doc_b, hamming).
+    in several bands are emitted once via the canonical-band
+    (no-earlier-band-matches) map-side test, so no distinct shuffle.
+    Output: (doc_a, doc_b, hamming).
 
     ``group_col`` scopes the banding WITHIN a group: the join keys
     become (group, band, bucket) and the output carries the group —
     how :func:`framewise_multiword_hamming_pairs` matches video frames
     at the same position only. ``max_bucket_size`` caps per-(group,)
-    (band, bucket) membership exactly like
-    :func:`framewise_hamming_pairs`: a degenerate population
-    (constant/black frames) collapses into one bucket and produces
-    quadratic candidates at scale; with the cap, oversized buckets
-    emit nothing and a pair survives iff one of its colliding bands is
-    under the cap (the canonical-band test is bucket-aware, so a
-    surviving pair is still emitted exactly once).
+    (band, bucket) membership: a degenerate population (constant/black
+    frames) collapses into one bucket and produces quadratic
+    candidates at scale; with the cap, oversized buckets emit nothing
+    and a pair survives iff one of its colliding bands is under the cap
+    (the canonical-band test is bucket-aware, so a surviving pair is
+    still emitted exactly once).
 
     ``persist_input=False`` skips the fingerprint cache — for callers
     whose input is already a cheap projection of a persisted frame
     (:func:`chunked_hamming_pairs` subsets: caching every chunk-pair
     filter would hold ~(C+1)× the corpus in storage concurrently)."""
-    # a band whose start bit is past the fingerprint width is pure
-    # padding (constant bucket 0 for every doc) — _multiword_band_layout
-    # drops it from both the melt and the canonical-band test (ADVICE r8)
-    bpw, n_bands, bits, mask = _multiword_band_layout(
+    n_bands = _multiword_band_layout(
         n_words=n_words,
         word_bits=word_bits,
         band_bits=band_bits,
         bits=bits,
         max_hamming=max_hamming,
     )
-    wcols = [f"w{i}" for i in range(n_words)]
-    gcols = [group_col] if group_col is not None else []
-    if persist_input:
-        fingerprints = tracked_persist(fingerprints)
-
-    # one SQL parse for the band melt / canonical-band test / hamming sum
-    # (chained py4j Column calls cost one driver round trip per operator;
-    # at n_bands~11 × n_words~3 that is seconds of pure build time — same
-    # treatment as simhash_near_duplicates)
-    struct_arr = ", ".join(
-        f"named_struct('band', {b}, 'bucket', "
-        f"(shiftright(w{b // bpw}, {band_bits * (b % bpw)}) & {mask}))"
-        for b in range(n_bands)
-    )
-    melted = fingerprints.select(
-        "doc_id",
-        *gcols,
-        *wcols,
-        F.expr(f"explode(array({struct_arr}))").alias("bb"),
-    ).select(
-        "doc_id",
-        *gcols,
-        *wcols,
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    )
-
-    side_extra: list[str] = []
-    if max_bucket_size is not None:
-        sizes = melted.groupBy(*gcols, "band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = melted.join(sizes, [*gcols, "band", "bucket"])
-        # per-(doc[, group]) vector of bucket sizes in band order: the
-        # canonical-band test below needs each EARLIER band's occupancy
-        bnvec = with_bn.groupBy("doc_id", *gcols).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bnvec")
-        )
-        melted = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, ["doc_id", *gcols])
-        )
-        side_extra.append("bnvec")
-
-    def _side(suffix: str) -> DataFrame:
-        cols = [F.col("band"), F.col("bucket"), F.col("doc_id").alias(f"doc_{suffix}")]
-        cols += [F.col(g) for g in gcols]
-        cols += [F.col(w).alias(f"{w}{suffix}") for w in wcols]
-        if suffix == "a":
-            # bv is read only via bv_a (shared bucket ⇒ equal sizes)
-            cols += [F.col(c).alias("bv_a") for c in side_extra]
-        return melted.select(*cols)
-
-    a, b_ = _side("a"), _side("b")
-    fbo = "true"
-    for j in range(n_bands):
-        word_a, word_b = f"w{j // bpw}a", f"w{j // bpw}b"
-        sh = band_bits * (j % bpw)
-        eq_j = (
-            f"((shiftright({word_a}, {sh}) & {mask}) = "
-            f"(shiftright({word_b}, {sh}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_a[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-
-    ham_sql = " + ".join(f"bit_count({w}a ^ {w}b)" for w in wcols)
-    hamming = F.expr(f"CAST((0 + {ham_sql}) AS INT)")
-    return (
-        a.join(b_, [*gcols, "band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.expr(fbo))
-        .select("doc_a", "doc_b", *gcols, hamming.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
-def framewise_hamming_pairs(
-    fingerprints: DataFrame,
-    *,
-    bits: int,
-    band_bits: int,
-    max_hamming: int = 4,
-    min_frames: int = 2,
-    frame_col: str = "frame_idx",
-    fp_col: str = "dhash",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Frame-majority near-dup join for MULTI-FINGERPRINT entities
-    (videos as sets of per-frame hashes): input is one
-    (doc_id, frame_idx, fp) row per sampled frame; two docs pair iff at
-    least ``min_frames`` frame positions match at hamming ≤
-    ``max_hamming``. The banded join keys on (frame, band, bucket) — a
-    candidate must share a band WITHIN the same frame position — and
-    the canonical-band test keeps exactly one row per
-    (pair, frame), so the majority count is a plain count(1) per pair,
-    no distinct shuffle. Per-frame recall keeps the pigeonhole
-    guarantee whenever bits//band_bits > max_hamming; the frame melt is
-    narrow (doc, frame, fp, band, bucket) rows.
-
-    ``max_bucket_size`` caps per-(frame, band) bucket membership the
-    same way :func:`simhash_near_duplicates` does — a degenerate frame
-    population (constant/black frames, common in real video) collapses
-    into one (frame, band, bucket) key and produces quadratic candidate
-    pairs at scale; with the cap, oversized buckets emit nothing and a
-    (pair, frame) match survives iff one of its colliding bands is
-    under the cap (the canonical-band test is bucket-aware, so the
-    surviving frame match is still counted exactly once).
-
-    Output: (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
-    n_bands = bits // band_bits
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"only {n_bands} bands at band_bits={band_bits} — pigeonhole "
-            f"recall needs more than max_hamming={max_hamming}"
-        )
-    if min_frames < 1:
-        raise ValueError(f"min_frames must be >= 1, got {min_frames}")
-    mask = (1 << band_bits) - 1
-    fingerprints = tracked_persist(
-        fingerprints.select(
-            "doc_id",
-            F.col(frame_col).alias("__f"),
-            F.col(fp_col).alias("__fp"),
-        )
-    )
-    # single-parse SQL band melt (same py4j-build-cost treatment as
-    # simhash_near_duplicates / multiword_hamming_pairs)
-    struct_arr = ", ".join(
-        f"named_struct('band', {k}, 'bucket', "
-        f"(shiftright(__fp, {k * band_bits}) & {mask}))"
-        for k in range(n_bands)
-    )
-    melted = fingerprints.select(
-        "doc_id",
-        "__f",
-        "__fp",
-        F.expr(f"explode(array({struct_arr}))").alias("bb"),
-    ).select(
-        "doc_id",
-        "__f",
-        "__fp",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bucket").alias("bucket"),
-    )
-
-    side_cols = ["doc_id", "__fp", "__f", "band", "bucket"]
-    if max_bucket_size is not None:
-        sizes = melted.groupBy("__f", "band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = melted.join(sizes, ["__f", "band", "bucket"])
-        # per-(doc, frame) vector of bucket sizes in band order: the
-        # canonical-band test below needs each EARLIER band's occupancy
-        bnvec = with_bn.groupBy("doc_id", "__f").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bnvec")
-        )
-        melted = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, ["doc_id", "__f"])
-        )
-        side_cols.append("bnvec")
-
-    def _side(suffix: str) -> DataFrame:
-        renames = {
-            "doc_id": f"doc_{suffix}",
-            "__fp": f"fp_{suffix}",
-            "bnvec": f"bv_{suffix}",
-        }
-        # bv is read only via bv_a (shared bucket ⇒ equal sizes) — drop
-        # it from the b side of the self-join
-        cols = side_cols if suffix == "a" else [
-            c for c in side_cols if c != "bnvec"
-        ]
-        return melted.select(
-            *[F.col(c).alias(renames.get(c, c)) for c in cols]
-        )
-
-    a, b = _side("a"), _side("b")
-    fbo = "true"
-    for j in range(n_bands):
-        eq_j = (
-            f"((shiftright(fp_a, {j * band_bits}) & {mask}) = "
-            f"(shiftright(fp_b, {j * band_bits}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_a[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-    frame_matches = (
-        a.join(b, ["__f", "band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .filter(F.expr(fbo))
-        .filter(
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-            <= F.lit(max_hamming)
-        )
-        .select("doc_a", "doc_b", "__f")
-    )
-    return (
-        frame_matches.groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
-        .filter(F.col("n_frames_matched") >= min_frames)
+    return _hamming_pairs(
+        fingerprints,
+        [f"w{i}" for i in range(n_words)],
+        (word_bits, band_bits, n_bands),
+        max_hamming=max_hamming,
+        gcols=[group_col] if group_col is not None else [],
+        max_bucket_size=max_bucket_size,
+        persist_input=persist_input,
     )
 
 
@@ -862,20 +752,19 @@ def framewise_multiword_hamming_pairs(
     max_bucket_size: int | None = None,
     persist_input: bool = True,
 ) -> DataFrame:
-    """Frame-majority near-dup join over MULTI-WORD per-frame
-    fingerprints — the wide-hash companion of
-    :func:`framewise_hamming_pairs` for per-frame hashes past 63 bits
-    (e.g. the 72-bit grid=9 frame dHash): input is one
-    (doc_id, frame_idx, w0 .. w{n-1}) row per sampled frame; two docs
-    pair iff at least ``min_frames`` frame positions match at hamming ≤
-    ``max_hamming``. The per-(pair, frame) match set is exactly
-    :func:`multiword_hamming_pairs` scoped within the frame position
-    (``group_col=frame_col`` — banding keys (frame, band, bucket), so
-    the tuner's occupancy bound applies per frame position, and the
-    canonical-band test keeps one row per (pair, frame)); the majority
-    count is then a plain count(1) per pair, no distinct shuffle.
-    ``max_bucket_size`` passes through the degenerate-frame skew cap.
-    Output: (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
+    """Frame-majority near-dup join for MULTI-FINGERPRINT entities
+    (videos as sets of per-frame hashes): input is one
+    (doc_id, frame_idx, w0 .. w{n-1}) row per sampled frame — a single
+    56-bit frame dHash is ``n_words=1, word_bits=56`` with the hash as
+    ``w0``; two docs pair iff at least ``min_frames`` frame positions
+    match at hamming ≤ ``max_hamming``. The per-(pair, frame) match set
+    is exactly :func:`multiword_hamming_pairs` scoped within the frame
+    position (``group_col=frame_col`` — banding keys (frame, band,
+    bucket), so the tuner's occupancy bound applies per frame position,
+    and the canonical-band test keeps one row per (pair, frame)); the
+    majority count is then a plain count(1) per pair, no distinct
+    shuffle. ``max_bucket_size`` passes through the degenerate-frame
+    skew cap. Output: (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
     if min_frames < 1:
         raise ValueError(f"min_frames must be >= 1, got {min_frames}")
     frame_pairs = multiword_hamming_pairs(
@@ -889,11 +778,7 @@ def framewise_multiword_hamming_pairs(
         max_bucket_size=max_bucket_size,
         persist_input=persist_input,
     )
-    return (
-        frame_pairs.groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
-        .filter(F.col("n_frames_matched") >= min_frames)
-    )
+    return _frame_majority(frame_pairs, ["doc_a", "doc_b"], min_frames)
 
 
 def framewise_hamming_matches(
@@ -908,10 +793,10 @@ def framewise_hamming_matches(
     fp_col: str = "dhash",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Probe NEW multi-fingerprint entities (videos: one hash per
-    sampled frame) against a persisted per-frame fingerprint index PLUS
-    the new batch itself — the incremental companion of
-    :func:`framewise_hamming_pairs` (what
+    """Probe NEW multi-fingerprint entities (videos: one ``bits``-bit
+    hash per sampled frame) against a persisted per-frame fingerprint
+    index PLUS the new batch itself — the incremental companion of
+    :func:`framewise_multiword_hamming_pairs` (what
     :func:`multiword_hamming_matches` is to the single-entity pairs
     join). Both inputs are (doc_id, frame_idx, fp) rows; a candidate
     shares an exact band WITHIN the same frame position between a NEW
@@ -925,121 +810,39 @@ def framewise_hamming_matches(
     occupancy) — the index side carries only narrow (doc, frame, hash)
     BIGINT rows; payloads never enter.
 
-    ``max_bucket_size`` is the same degenerate-frame skew cap as
-    :func:`framewise_hamming_pairs`: constant/black frames accumulate
-    in the persisted index across epochs, so without the cap each new
-    batch's black frames join O(batch × full index) candidates.
-    Occupancy is measured on the index+batch union per (frame, band,
-    bucket); a frame match survives iff one of its colliding bands is
-    under the cap (bucket-aware canonical-band test — a colliding pair
-    shares the bucket, so the union-side size vector decides for both).
+    ``max_bucket_size`` is the degenerate-frame skew cap:
+    constant/black frames accumulate in the persisted index across
+    epochs, so without the cap each new batch's black frames join
+    O(batch × full index) candidates. Occupancy is measured on the
+    index+batch union per (frame, band, bucket); a frame match survives
+    iff one of its colliding bands is under the cap.
 
     Output: (new_id, match_id, n_frames_matched, match_in_new)."""
-    n_bands = bits // band_bits
-    if n_bands <= max_hamming:
-        raise ValueError(
-            f"only {n_bands} bands at band_bits={band_bits} — pigeonhole "
-            f"recall needs more than max_hamming={max_hamming}"
-        )
+    n_bands = _multiword_band_layout(
+        n_words=1,
+        word_bits=bits,
+        band_bits=band_bits,
+        bits=bits,
+        max_hamming=max_hamming,
+    )
     if min_frames < 1:
         raise ValueError(f"min_frames must be >= 1, got {min_frames}")
-    mask = (1 << band_bits) - 1
-    new = tracked_persist(
-        new.select(
-            "doc_id",
-            F.col(frame_col).alias("__f"),
-            F.col(fp_col).alias("__fp"),
-        )
-    )
-    union = existing.select(
-        "doc_id",
-        F.col(frame_col).alias("__f"),
-        F.col(fp_col).alias("__fp"),
-        F.lit(False).alias("__new"),
-    ).unionByName(new.withColumn("__new", F.lit(True)))
 
-    # single-parse SQL band melt (same py4j-build-cost treatment as
-    # simhash_near_duplicates / framewise_hamming_pairs)
-    struct_arr = ", ".join(
-        f"named_struct('band', {k}, 'bucket', "
-        f"(shiftright(__fp, {k * band_bits}) & {mask}))"
-        for k in range(n_bands)
-    )
+    def narrow(df: DataFrame) -> DataFrame:
+        return df.select("doc_id", frame_col, F.col(fp_col).alias("w0"))
 
-    def melt(df: DataFrame, keep: list) -> DataFrame:
-        return df.select(
-            *keep,
-            F.expr(f"explode(array({struct_arr}))").alias("bb"),
-        ).select(
-            *keep,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-
-    a = melt(new, ["doc_id", "__f", "__fp"]).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("__fp").alias("fp_a"),
-        "__f",
-        "band",
-        "bucket",
+    frame_matches = _hamming_matches(
+        narrow(existing),
+        narrow(new),
+        ["w0"],
+        (bits, band_bits, n_bands),
+        max_hamming=max_hamming,
+        gcols=[frame_col],
+        max_bucket_size=max_bucket_size,
     )
-    b_m = melt(union, ["doc_id", "__f", "__fp", "__new"])
-    b_cols = [
-        F.col("doc_id").alias("match_id"),
-        F.col("__fp").alias("fp_b"),
-        F.col("__new").alias("match_in_new"),
-        F.col("__f"),
-        F.col("band"),
-        F.col("bucket"),
-    ]
-    if max_bucket_size is not None:
-        # occupancy over the index+batch union, keyed like the probe
-        # join; the a side (new ⊆ union) needs no filter of its own —
-        # dropping the oversized b rows empties the band's join output,
-        # and the canonical test reads the b side's vector (a colliding
-        # pair shares the bucket, hence the size)
-        sizes = b_m.groupBy("__f", "band", "bucket").agg(
-            F.count(F.lit(1)).alias("__bn")
-        )
-        with_bn = b_m.join(sizes, ["__f", "band", "bucket"])
-        bnvec = with_bn.groupBy("doc_id", "__f").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("band", "__bn"))),
-                lambda s: s["__bn"],
-            ).alias("bv_b")
-        )
-        b_m = (
-            with_bn.filter(F.col("__bn") <= max_bucket_size)
-            .join(bnvec, ["doc_id", "__f"])
-        )
-        b_cols.append(F.col("bv_b"))
-    b = b_m.select(*b_cols)
-    fbo = "true"
-    for j in range(n_bands):
-        eq_j = (
-            f"((shiftright(fp_a, {j * band_bits}) & {mask}) = "
-            f"(shiftright(fp_b, {j * band_bits}) & {mask}))"
-        )
-        earlier = f"((band > {j}) AND {eq_j})"
-        if max_bucket_size is not None:
-            earlier = f"({earlier} AND (bv_b[{j}] <= {max_bucket_size}))"
-        fbo = f"({fbo} AND (NOT {earlier}))"
-    frame_matches = (
-        a.join(b, ["__f", "band", "bucket"])
-        .filter(F.col("new_id") != F.col("match_id"))
-        .filter(F.expr(fbo))
-        .filter(
-            F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-            <= F.lit(max_hamming)
-        )
-        .select("new_id", "match_id", "match_in_new", "__f")
-    )
-    return (
-        frame_matches.groupBy("new_id", "match_id", "match_in_new")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_frames_matched"))
-        .filter(F.col("n_frames_matched") >= min_frames)
-        .select("new_id", "match_id", "n_frames_matched", "match_in_new")
-    )
+    return _frame_majority(
+        frame_matches, ["new_id", "match_id", "match_in_new"], min_frames
+    ).select("new_id", "match_id", "n_frames_matched", "match_in_new")
 
 
 def multiword_hamming_matches(
@@ -1076,71 +879,21 @@ def multiword_hamming_matches(
     SURVIVING band count.
 
     Output: (new_id, match_id, hamming, match_in_new)."""
-    bpw, n_bands, bits, mask = _multiword_band_layout(
+    n_bands = _multiword_band_layout(
         n_words=n_words,
         word_bits=word_bits,
         band_bits=band_bits,
         bits=bits,
         max_hamming=max_hamming,
     )
-    wcols = [f"w{i}" for i in range(n_words)]
-    new = tracked_persist(new)
-    union = existing.select(
-        "doc_id", *wcols, F.lit(False).alias("__new")
-    ).unionByName(new.select("doc_id", *wcols, F.lit(True).alias("__new")))
-
-    # single-parse SQL band melt (same py4j-build-cost treatment as
-    # simhash_near_duplicates / multiword_hamming_pairs)
-    struct_arr = ", ".join(
-        f"named_struct('band', {b}, 'bucket', "
-        f"(shiftright(w{b // bpw}, {band_bits * (b % bpw)}) & {mask}))"
-        for b in range(n_bands)
-    )
-
-    def melt(df: DataFrame, keep: list) -> DataFrame:
-        return df.select(
-            *keep,
-            F.expr(f"explode(array({struct_arr}))").alias("bb"),
-        ).select(
-            *keep,
-            F.col("bb.band").alias("band"),
-            F.col("bb.bucket").alias("bucket"),
-        )
-
-    a = melt(new, ["doc_id", *wcols]).select(
-        F.col("doc_id").alias("new_id"),
-        *[F.col(w).alias(f"{w}a") for w in wcols],
-        "band",
-        "bucket",
-    )
-    b = melt(union, ["doc_id", *wcols, "__new"]).select(
-        F.col("doc_id").alias("match_id"),
-        *[F.col(w).alias(f"{w}b") for w in wcols],
-        F.col("__new").alias("match_in_new"),
-        "band",
-        "bucket",
-    )
-    fbo = "true"
-    for j in range(n_bands):
-        sh = band_bits * (j % bpw)
-        eq_j = (
-            f"((shiftright(w{j // bpw}a, {sh}) & {mask}) = "
-            f"(shiftright(w{j // bpw}b, {sh}) & {mask}))"
-        )
-        fbo = f"({fbo} AND (NOT ((band > {j}) AND {eq_j})))"
-    ham_sql = " + ".join(f"bit_count({w}a ^ {w}b)" for w in wcols)
-    hamming = F.expr(f"CAST((0 + {ham_sql}) AS INT)")
-    return (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("new_id") != F.col("match_id"))
-        .filter(F.expr(fbo))
-        .select(
-            "new_id",
-            "match_id",
-            hamming.alias("hamming"),
-            "match_in_new",
-        )
-        .filter(F.col("hamming") <= max_hamming)
+    return _hamming_matches(
+        existing,
+        new,
+        [f"w{i}" for i in range(n_words)],
+        (word_bits, band_bits, n_bands),
+        max_hamming=max_hamming,
+        gcols=[],
+        max_bucket_size=None,
     )
 
 

@@ -594,12 +594,13 @@ def video_near_duplicates(
 ) -> DataFrame:
     """Corpus-size-driven video perceptual dedup — frame-majority
     matching over per-frame dHashes: the RVID index walk decodes ONLY
-    the ``n_samples`` sampled frames, each gets the 56-bit dHash, and
-    dedup.framewise_hamming_pairs joins banded WITHIN frame position at
-    the tuner's width (the banding keys include the frame, so bucket
-    occupancy is per frame position and the documents-count bound
-    applies per frame). Past the 56-bit tuner's occupancy bound (~262k
-    clips at the default) the grid=9 / 72-bit two-word per-frame mesh
+    the ``n_samples`` sampled frames, each gets the 56-bit dHash (one
+    word), and dedup.framewise_multiword_hamming_pairs joins banded
+    WITHIN frame position at the tuner's width (the banding keys
+    include the frame, so bucket occupancy is per frame position and
+    the documents-count bound applies per frame). Past the 56-bit
+    tuner's occupancy bound (~262k clips at the default) the grid=9 /
+    72-bit two-word per-frame mesh
     (:func:`video_frame_dhash_multiword`,
     dedup.framewise_multiword_hamming_pairs) takes over with its own
     tuned width — the image-family escalation contract; past even the
@@ -658,9 +659,10 @@ def video_near_duplicates(
             max_mean_bucket=max_mean_bucket,
         )
     fp = video_frame_dhash(df, payload_col, n_samples=n_samples, grid=8)
-    return dedup.framewise_hamming_pairs(
-        fp,
-        bits=8 * 7,
+    return dedup.framewise_multiword_hamming_pairs(
+        fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+        n_words=1,
+        word_bits=8 * 7,
         band_bits=band_bits,
         max_hamming=max_hamming,
         min_frames=min_frames,
@@ -882,8 +884,9 @@ def video_frame_dhash(
     index to ``n_samples`` evenly spaced frames (idx_j = ⌊n·j/k⌋ —
     skipped frames never decode, same contract as sample_video_frames),
     BMP-decode only those, dHash each. Output: one narrow
-    (doc_id, frame_idx, dhash) row per sampled frame — the input to
-    dedup.framewise_hamming_pairs' frame-majority video dedup."""
+    (doc_id, frame_idx, dhash) row per sampled frame — with ``dhash``
+    as ``w0``, the input to dedup.framewise_multiword_hamming_pairs'
+    frame-majority video dedup."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:

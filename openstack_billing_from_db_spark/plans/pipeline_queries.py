@@ -2511,8 +2511,9 @@ def q145_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 family-textured BMP frames (media.synth_family_video_frames), the
     container index walk decodes exactly the sampled frames
     (multimodal.video_frame_dhash — skipped frames never decode, the
-    100 TB property), each frame gets the q141 dHash, and
-    dedup.framewise_hamming_pairs joins banded WITHIN frame position
+    100 TB property), each frame gets the q141 dHash (one 56-bit
+    word), and dedup.framewise_multiword_hamming_pairs joins banded
+    WITHIN frame position
     and keeps pairs matching on >= {_VW_MIN_FRAMES} of 3 frames. The
     fixture's distorted-frame members make the majority rule
     discriminative (family pairs match 3 or 2 frames; the doubly-
@@ -2526,9 +2527,10 @@ def q145_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs), n_samples=3
     )
-    return dedup.framewise_hamming_pairs(
-        fp,
-        bits=56,
+    return dedup.framewise_multiword_hamming_pairs(
+        fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+        n_words=1,
+        word_bits=56,
         band_bits=_VW_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
         min_frames=_VW_MIN_FRAMES,

@@ -19,11 +19,7 @@ import time
 sys.path.insert(0, os.getcwd())
 sys.path.insert(0, os.path.join(os.getcwd(), "scripts"))
 
-# gate_sim parses sys.argv at import time — hide ours during the import
-_argv, sys.argv = sys.argv, sys.argv[:1]
 from gate_sim import canon_rows  # noqa: E402  (scripts/ sibling import)
-
-sys.argv = _argv
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "

@@ -24,8 +24,6 @@ import time
 
 sys.path.insert(0, os.getcwd())
 
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-FIRST_N = int(sys.argv[2]) if len(sys.argv) > 2 else 50
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -60,6 +58,8 @@ def canon_rows(cols, rows):
 
 
 def main() -> int:
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    first_n = int(sys.argv[2]) if len(sys.argv) > 2 else 50
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -70,17 +70,17 @@ def main() -> int:
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{SF_DIR}/{t}.parquet')"
+            f"read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    names = list(queries)[:FIRST_N]
+    names = list(queries)[:first_n]
     n_pass = n_fail = 0
     for name in names:
         t0 = time.time()
         try:
-            df = queries[name](spark, SF_DIR)
+            df = queries[name](spark, sf_dir)
             scols = df.columns
             srows = [tuple(r) for r in df.collect()]
             if name not in oracles:

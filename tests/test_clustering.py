@@ -726,16 +726,21 @@ def test_bpe_batched_b1_bitident_to_sequential(spark):
     """bpe_train_batched at batch=1, window=1 IS sequential greedy BPE:
     the window holds only the top pair, acceptance is trivial, and one
     merge applies per round — every rule (rank, pair, merged, count)
-    must match bpe_train bit-for-bit (the q78 ≡ q162 twin pin)."""
-    from openstack_billing_from_db_spark.operators.bpe import (
-        bpe_train,
-        bpe_train_batched,
-    )
+    must match the sequential greedy trace bit-for-bit (bpe_train is
+    this call, so q78 ≡ q162's B=1 path). The reference is that trace
+    worked by hand: merging (a, b) first leaves "abc" as "ab c", so
+    (b, c) counts 4 not 5; "aaaa" holds 3 overlapping (a, a) pairs and
+    merges greedily to "aa aa"; count ties break by pair asc."""
+    from openstack_billing_from_db_spark.operators.bpe import bpe_train_batched
 
     corpus = " ".join(["ab"] * 6 + ["bc"] * 4 + ["abc", "aaaa", "cd cd"])
     seq = [
-        (r.merge_rank, r.pair, r.merged, r.pair_count)
-        for r in bpe_train(_docs(spark, [corpus]), n_merges=6).collect()
+        (0, "a b", "ab", 7),
+        (1, "b c", "bc", 4),
+        (2, "a a", "aa", 3),
+        (3, "c d", "cd", 2),
+        (4, "aa aa", "aaaa", 1),
+        (5, "ab c", "abc", 1),
     ]
     bat = [
         (r.merge_rank, r.pair, r.merged, r.pair_count)

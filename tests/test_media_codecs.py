@@ -485,15 +485,24 @@ def test_single_word_non_divisor_bands(spark):
     so non-divisor widths are legal and reproduce the single-word
     kernel's banding — the 56-bit audio fingerprint probes at the
     batch path's tuner-derived 11-bit bands (5 bands > max_hamming=4).
-    The multiword kernels at (n_words=1, band_bits=11) must emit the
-    same pairs as simhash_near_duplicates at band_bits=11."""
+    Both the multiword kernel at (n_words=1, band_bits=11) and
+    simhash_near_duplicates at band_bits=11 must emit exactly the
+    all-pairs brute-force set at hamming ≤ 4 (5 bands > 4: exact recall)."""
+    import itertools
+
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
     fp = multimodal.audio_dhash(
         multimodal.synthesize_family_audio_payloads(docs)
     )
+    h = {r.doc_id: r.ahash for r in fp.collect()}
     want = {
+        (a, b): bin(h[a] ^ h[b]).count("1")
+        for a, b in itertools.combinations(sorted(h), 2)
+        if bin(h[a] ^ h[b]).count("1") <= 4
+    }
+    assert want == {
         (r.doc_a, r.doc_b): r.hamming
         for r in dedup.simhash_near_duplicates(
             fp.select("doc_id", F.col("ahash").alias("simhash")),
@@ -696,7 +705,7 @@ def test_video_family_frame_majority(spark):
     pairs touching one distorted frame match 2, and the
     (var=3, var=4) doubly-distorted pair is dropped."""
     from openstack_billing_from_db_spark.operators.dedup import (
-        framewise_hamming_pairs,
+        framewise_multiword_hamming_pairs,
     )
 
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
@@ -705,8 +714,10 @@ def test_video_family_frame_majority(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.n_frames_matched
-        for r in framewise_hamming_pairs(
-            fp, bits=56, band_bits=11, max_hamming=4, min_frames=2
+        for r in framewise_multiword_hamming_pairs(
+            fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+            n_words=1, word_bits=56, band_bits=11, max_hamming=4,
+            min_frames=2,
         ).collect()
     }
     for fam_base in (0, 5):
@@ -792,7 +803,7 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
     import random
 
     from openstack_billing_from_db_spark.operators.dedup import (
-        framewise_hamming_pairs,
+        framewise_multiword_hamming_pairs,
     )
 
     rng = random.Random(3)
@@ -817,7 +828,7 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
 
     df = spark.createDataFrame(
         [(d, f, h) for (d, f), h in fp.items()],
-        "doc_id long, frame_idx int, dhash long",
+        "doc_id long, frame_idx int, w0 long",
     )
 
     def brute(cap):
@@ -856,9 +867,9 @@ def test_framewise_hamming_pairs_bucket_cap(spark):
     for cap, min_frames in ((None, 1), (5, 1), (5, 2)):
         got = {
             (r.doc_a, r.doc_b): r.n_frames_matched
-            for r in framewise_hamming_pairs(
-                df, bits=bits, band_bits=band_bits, max_hamming=4,
-                min_frames=min_frames, max_bucket_size=cap,
+            for r in framewise_multiword_hamming_pairs(
+                df, n_words=1, word_bits=bits, band_bits=band_bits,
+                max_hamming=4, min_frames=min_frames, max_bucket_size=cap,
             ).collect()
         }
         want = {
@@ -1166,37 +1177,42 @@ def test_multiword_hamming_pairs_bucket_cap(spark):
 
 
 def test_framewise_multiword_matches_narrow_kernel(spark):
-    """framewise_multiword_hamming_pairs at n_words=1/word_bits=56 must
-    reproduce framewise_hamming_pairs on the same 56-bit per-frame
-    hashes — the two kernels share semantics, not just intent."""
+    """framewise_multiword_hamming_pairs over one 56-bit word per frame
+    (the single-dHash video shape) must emit exactly the brute-force
+    frame-majority set — every frame position compared for every pair
+    at hamming ≤ 4 — at the tuned 11-bit bands (non-divisor, 5 bands)
+    and at 8-bit bands (divisor, 7 bands): exact recall either way."""
+    import itertools
+
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
     fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs), n_samples=3
     )
-    narrow = {
-        (r.doc_a, r.doc_b): r.n_frames_matched
-        for r in dedup.framewise_hamming_pairs(
-            fp, bits=56, band_bits=11, max_hamming=4, min_frames=2
-        ).collect()
+    h = {(r.doc_id, r.frame_idx): r.dhash for r in fp.collect()}
+    ids = sorted({d for d, _ in h})
+    n_match = {
+        (a, b): sum(
+            bin(h[(a, f)] ^ h[(b, f)]).count("1") <= 4 for f in range(3)
+        )
+        for a, b in itertools.combinations(ids, 2)
     }
-    # band widths differ (8 divides the 56-bit word; the narrow kernel
-    # runs its tuned 11) — exact recall makes the outputs identical
-    # anyway: both emit ALL (pair, frame) matches at hamming ≤ 4
-    wide = {
-        (r.doc_a, r.doc_b): r.n_frames_matched
-        for r in dedup.framewise_multiword_hamming_pairs(
-            fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
-            n_words=1,
-            word_bits=56,
-            band_bits=8,
-            max_hamming=4,
-            min_frames=2,
-            bits=56,
-        ).collect()
-    }
-    assert wide == narrow and narrow
+    want = {p: n for p, n in n_match.items() if n >= 2}
+    for band_bits in (11, 8):
+        got = {
+            (r.doc_a, r.doc_b): r.n_frames_matched
+            for r in dedup.framewise_multiword_hamming_pairs(
+                fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+                n_words=1,
+                word_bits=56,
+                band_bits=band_bits,
+                max_hamming=4,
+                min_frames=2,
+                bits=56,
+            ).collect()
+        }
+        assert got == want and want, band_bits
 
 
 # --- video scene cuts (round 11) -----------------------------------------------

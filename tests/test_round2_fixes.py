@@ -4,8 +4,10 @@ and VERDICT.md scale-hardening (exploded MinHash verify, adaptive LSH)."""
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.operators import dedup, similarity
@@ -375,16 +377,90 @@ def test_ivf_partial_probe_recall(spark):
 # --- simhash canonical-band dedup (no distinct exchange) ---------------------
 
 
-def test_simhash_near_dup_plan_has_no_distinct_exchange(spark):
-    """Pairs are emitted from their first matching band only — the plan
-    must contain NO aggregate-based dedup over the output pairs."""
-    docs = _near_dup_docs(spark)
-    fp = dedup.simhash(docs)
-    plan = (
-        dedup.simhash_near_duplicates(fp)
-        ._jdf.queryExecution().optimizedPlan().toString()
+def _words(fp, parity=None):
+    """``fp`` as two-word (doc_id, frame_idx, w0, w1) fingerprints, all
+    at frame 0; ``parity`` keeps only even (0) or odd (1) doc ids."""
+    if parity is not None:
+        fp = fp.filter(f"doc_id % 2 = {parity}")
+    return fp.select(
+        "doc_id",
+        F.lit(0).alias("frame_idx"),
+        F.col("simhash").alias("w0"),
+        F.col("simhash").alias("w1"),
     )
-    assert "Deduplicate" not in plan and "Aggregate [doc_a" not in plan
+
+
+def _frames(fp, parity):
+    return _words(fp, parity).select(
+        "doc_id", "frame_idx", F.col("w0").alias("dhash")
+    )
+
+
+_TWO = dict(n_words=2, word_bits=32, band_bits=8)
+
+
+@pytest.mark.parametrize(
+    "build, id_col, majority",
+    [
+        pytest.param(
+            dedup.simhash_near_duplicates, "doc_a", False, id="simhash"
+        ),
+        pytest.param(
+            lambda fp: dedup.multiword_hamming_pairs(
+                _words(fp).drop("frame_idx"), **_TWO
+            ),
+            "doc_a",
+            False,
+            id="multiword_pairs",
+        ),
+        pytest.param(
+            lambda fp: dedup.framewise_multiword_hamming_pairs(
+                _words(fp), min_frames=1, max_bucket_size=10, **_TWO
+            ),
+            "doc_a",
+            True,
+            id="framewise_pairs",
+        ),
+        pytest.param(
+            lambda fp: dedup.multiword_hamming_matches(
+                _words(fp, 0).drop("frame_idx"),
+                _words(fp, 1).drop("frame_idx"),
+                **_TWO,
+            ),
+            "new_id",
+            False,
+            id="multiword_matches",
+        ),
+        pytest.param(
+            lambda fp: dedup.framewise_hamming_matches(
+                _frames(fp, 0), _frames(fp, 1), bits=32, band_bits=6,
+                min_frames=1, max_bucket_size=10,
+            ),
+            "new_id",
+            True,
+            id="framewise_matches",
+        ),
+    ],
+)
+def test_simhash_near_dup_plan_has_no_distinct_exchange(
+    spark, build, id_col, majority
+):
+    """Pairs are emitted from their first matching band only — for every
+    banded hamming kernel shape, the pair-producing subplan must contain
+    NO aggregate-based dedup over the output pairs. The framewise shapes'
+    own frame-majority count is the top Aggregate; the subplan below it
+    is what the canonical-band test keeps duplicate-free."""
+    plan = build(dedup.simhash(_near_dup_docs(spark)))
+    plan = plan._jdf.queryExecution().optimizedPlan()
+    if majority:
+        while plan.nodeName() != "Aggregate":
+            plan = plan.child()
+        plan = plan.child()
+    plan = plan.toString()
+    assert "Join" in plan and "Deduplicate" not in plan
+    # no Aggregate grouping on the pair ids (the cap's own size
+    # aggregates group on doc_id / band / bucket)
+    assert not re.search(rf"Aggregate \[[^\]]*\b{id_col}#", plan)
     release_operator_caches()
 
 

@@ -270,6 +270,26 @@ def test_corpus_cli_dedup_methods(spark, sf_dir, tmp_path):
         "edit_distance",
     }
 
+    # simhash fingerprints the raw (doc_id, text) corpus before the join
+    out3 = str(tmp_path / "pairs_simhash")
+    res3 = corpus_cli.main(
+        [
+            "dedup",
+            "--path",
+            f"{sf_dir}/documents.parquet",
+            "--method",
+            "simhash",
+            "--output",
+            out3,
+        ],
+        spark=spark,
+    )
+    assert res3["method"] == "simhash"
+    back3 = spark.read.parquet(out3)
+    assert set(back3.columns) == {"doc_a", "doc_b", "hamming"}
+    assert back3.count() == res3["rows"]
+    assert back3.filter("hamming > 4").count() == 0
+
 
 def test_corpus_cli_dedup_exact_emits_pairs(spark, sf_dir, tmp_path):
     from openstack_billing_from_db_spark import corpus_cli
