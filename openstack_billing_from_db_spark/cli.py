@@ -3,7 +3,9 @@
 ``python -m openstack_billing_from_db_spark.cli --start ... --end ...``
 
 Differences from the reference, by design:
-- the source is parquet (or JDBC), not a mysqldump→SQLite load;
+- a mysqldump is converted to parquet, not loaded into SQLite
+  (``--sql-dump-file``; sources/mysqldump.py); without one, the invoice
+  reads the driver testdata parquet under ``--data-dir``;
 - rates come from CLI flags or the built-in example card (the
   reference's nerc-rates HTTP fetch is environment-specific);
 - the computation is the Spark DAG in plans/billing.py.
@@ -105,7 +107,11 @@ def main(argv: list[str] | None = None) -> str:
             flag = f"rate_{su_type}_su".replace("-", "_")
             override = getattr(args, flag, None)
             card.append(
-                (su_type, su_name, Decimal(override) if override else Decimal(default_rate))
+                (
+                    su_type,
+                    su_name,
+                    Decimal(default_rate if override is None else override),
+                )
             )
 
     dump_file = args.sql_dump_file
@@ -121,15 +127,15 @@ def main(argv: list[str] | None = None) -> str:
     if dump_file:
         # reference main.py:163-172 dump path; dump → parquet → Nova-shaped
         # billing inputs (conversion replaces mysql2sqlite, fetch.py:98-124)
-        import tempfile
-
         from openstack_billing_from_db_spark.plans.billing import nova_instance_dim
         from openstack_billing_from_db_spark.sources.mysqldump import (
             nova_tables_from_dump,
         )
 
+        # the converted files live in a temporary directory that is
+        # removed once these DataFrames are garbage (here: when main returns)
         instances, instance_extra, instance_actions = nova_tables_from_dump(
-            spark, dump_file, tempfile.mkdtemp(prefix="nova_dump_pq_")
+            spark, dump_file
         )
         dim = nova_instance_dim(instances, instance_extra, args.start)
         actions = instance_actions.select(

@@ -12,19 +12,30 @@ Here the same semantics are three declarative steps, each distributed:
 1. ``map_event_states``   — action/message → state (a CASE expression;
    reference trigger table model.py:141-150, Error path model.py:100-107)
    over the Nova ``instance_actions`` columns (instance_uuid, created_at,
-   action, message); ``with_synthetic_deletes`` adds the instance
-   ``deleted_at`` transitions.
+   action, message).
 2. ``build_state_intervals`` — lag/lead over (id, ts): each trigger event
    opens a state interval ``[ts, next_trigger_ts)``; the last interval is
    open-ended. Window-independent, so intervals are computed ONCE and
    reused for every billing window and every outage interval.
+   ``end_at_deletion`` then applies the instance's ``deleted_at``
+   (reference model.py:119-125) as an end clamp: the one interval with
+   ``start_us ≤ deleted_us < end_us`` ends at ``deleted_us``.
 3. ``state_micros_in_window`` — clamped-overlap aggregation: per id,
    Σ |interval ∩ window| − Σ_o |interval ∩ outage_o| per billed state,
    with the outages passed as driver-side ``(start, end)`` tuples.
 
-``plans.billing.instance_runtime`` composes the three steps; it is the one
-runtime entry point (the invoice and the registered billing queries go
-through it).
+``plans.billing.instance_runtime`` composes the three steps, joining
+``deleted_us`` (and any dimension columns the caller carries through the
+per-id aggregation) onto the intervals; it is the one runtime entry point
+(the invoice and the registered billing queries go through it).
+
+The clamp equals the reference's formulation — a synthetic Deleted event
+at ``deleted_at``, sorted after a real event at the same timestamp
+(``with_synthetic_deletes``, kept as the test reference): that event
+cuts the interval it falls in and opens an unbilled Deleted interval
+that later events close. Later intervals are unchanged either way, and a
+``deleted_at`` before the first event cuts nothing billed. The clamp
+needs no second read of the instance dimension.
 
 Equivalences (SURVEY.md §2.5, pinned by tests/test_sessionize_golden.py):
 
@@ -41,18 +52,21 @@ Equivalences (SURVEY.md §2.5, pinned by tests/test_sessionize_golden.py):
   outage extends past the window.
 
 Scale notes (100 TB): one shuffle to hash-partition events by id for the
-lead() window; the per-id aggregation reuses that partitioning (Catalyst
-sees hashpartitioning(id) already satisfies the groupBy distribution), so
-the whole operator is a single exchange. Outage exclusion is literal
-column arithmetic — zero joins. Skewed ids (an instance with millions of
-events) are the one hazard; AQE skew handling does not apply to window
-functions, so extremely hot ids use ``build_state_intervals_bucketed``:
+lead() window; the dimension join broadcasts the dimension (one row per
+instance), so the intervals keep that partitioning, and the per-id
+aggregation reuses it (Catalyst sees hashpartitioning(id) already
+satisfies the groupBy distribution, also with carried dimension columns
+as extra grouping keys), so the intervals cross a single exchange.
+Outage exclusion is literal column arithmetic — zero joins. Skewed ids
+(an instance with millions of events) are the one hazard; AQE skew
+handling does not apply to window functions, so extremely hot ids use
+``build_state_intervals_bucketed``:
 two passes with bounded per-(id, month) sorts, boundaries stitched
 via tiny per-bucket summaries — identical output, test-pinned.
 
 Known deviations from the reference (documented, SURVEY.md §2.11 #4):
-- zero-event instances and deleted_at-without-events yield zero runtime
-  (the reference crashes on ``None.exit``, model.py:124,127);
+- zero-event instances, deleted_at-without-events included, yield no
+  runtime row (the reference crashes on ``None.exit``, model.py:124,127);
 - a ``deleted_at`` earlier than the last event sorts into timestamp order
   (the reference appends it after all events, accumulating negative time).
 """
@@ -60,7 +74,7 @@ Known deviations from the reference (documented, SURVEY.md §2.11 #4):
 from __future__ import annotations
 
 from datetime import datetime
-from typing import Iterable, Mapping
+from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -124,7 +138,11 @@ def with_synthetic_deletes(states: DataFrame, instances: DataFrame) -> DataFrame
     ``deleted_at`` (reference model.py:119-125); ``instances`` is keyed by
     ``uuid``. ``__order`` makes the synthetic event sort after a real
     event at the same timestamp, matching the reference's
-    process-events-then-apply-deleted_at order."""
+    process-events-then-apply-deleted_at order.
+
+    No invoice path calls this: ``end_at_deletion`` gives the same
+    runtimes from one read of the dimension. It stays as the reference
+    formulation the clamp is tested against."""
     synthetic = (
         instances.filter(F.col("deleted_at").isNotNull())
         .select(
@@ -143,7 +161,8 @@ def build_state_intervals(states: DataFrame) -> DataFrame:
     Output: (instance_uuid, state, start_us, end_us); the last interval
     per id is open (end_us = TS_MAX_US) — the reference closes it at each
     query window's end (model.py:127), which the overlap clamp reproduces
-    for any window.
+    for any window. An ``__order`` column (only ``with_synthetic_deletes``
+    adds one) breaks timestamp ties.
     """
     order_cols = [F.col("event_ts")]
     if "__order" in states.columns:
@@ -157,6 +176,16 @@ def build_state_intervals(states: DataFrame) -> DataFrame:
             F.unix_micros(F.lead("event_ts").over(w)), F.lit(TS_MAX_US)
         ).alias("end_us"),
     )
+
+
+def end_at_deletion(intervals: DataFrame) -> DataFrame:
+    """End each id's interval that contains its deletion at the deletion:
+    ``end_us := deleted_us`` for the one interval with ``start_us ≤
+    deleted_us < end_us`` (intervals of one id are contiguous, so at most
+    one qualifies). ``deleted_us`` is a column of ``intervals``; where it
+    is null nothing changes."""
+    d, s, e = F.col("deleted_us"), F.col("start_us"), F.col("end_us")
+    return intervals.withColumn("end_us", F.when((s <= d) & (d < e), d).otherwise(e))
 
 
 def build_state_intervals_bucketed(states: DataFrame) -> DataFrame:
@@ -218,15 +247,18 @@ def state_micros_in_window(
     window_end: datetime,
     *,
     outages: Iterable[tuple[datetime, datetime]] = (),
+    keys: Sequence[str] = ("instance_uuid",),
 ) -> DataFrame:
     """Per-id microseconds in each billed state within ``[start, end)``,
     minus each outage interval's overlap (reference billing.py:88-102).
 
     Outage math is inline column arithmetic over interval bounds — the
     outage dimension is a handful of driver-side tuples, so it is folded
-    into the projection rather than joined (zero extra shuffles; the only
-    exchange is the groupBy, which reuses the window's hash partitioning
-    on id). Output columns: ``running_us``, ``stopped_us``.
+    into the projection rather than joined (zero extra shuffles; the
+    groupBy reuses the window's hash partitioning on id). ``keys`` are
+    the grouping columns: ``instance_uuid`` first, then any per-id
+    columns to carry through. Output columns: ``keys``, ``running_us``,
+    ``stopped_us``.
     """
     w0, w1 = to_micros(window_start), to_micros(window_end)
     s, e = F.col("start_us"), F.col("end_us")
@@ -239,4 +271,4 @@ def state_micros_in_window(
         .alias(f"{st.lower()}_us")
         for st in BILLED_STATES
     ]
-    return intervals.groupBy("instance_uuid").agg(*aggs)
+    return intervals.groupBy(*keys).agg(*aggs)

@@ -3,20 +3,25 @@
 Reference pipeline (billing.py:116-224 + model.py:90-156) re-expressed as
 one declarative DAG:
 
-    events ∪ synthetic-deletes
-      → window lag/lead sessionization              (1 shuffle: hash by id)
+    events → trigger state (CASE)
+      → window lead() sessionization                (1 shuffle: hash by id)
+      → join instance dim: deleted_at, project,     (broadcast; the dim's
+        SU type, SU count                            one read)
+      → end the interval holding deleted_at there   (projection)
       → clamped overlap vs [start,end) and outages  (projection, no join)
+      → per-instance sum, dim columns carried       (reuses the id
+                                                     partitioning)
       → ceil hours per instance                     (reference ceil-before-sum,
                                                      billing.py:147, §2.11 #1)
-      → join instance dim (project, flavor, SU)     (co-keyed on id)
       → groupBy(project, su_type) sum               (1 shuffle)
-      → broadcast join 6-row rates dim              (no shuffle)
+      → rate from a literal map of the rate card    (no join)
       → decimal cost, HALF_UP round
 
 Scale: the two shuffles are both on high-cardinality keys (instance id,
-then project) — no driver-side loops, no collect, no Python UDFs. The
-rates join is an explicit broadcast. At 100 TB the events scan partitions
-by file; everything downstream is pipelined per AQE.
+then project) — no driver-side loops over data and no Python UDFs. The
+rate card, like the outages, is a handful of driver-side values: it is
+collected (a local relation, so no job) and folded into the projection
+instead of joined.
 """
 
 from __future__ import annotations
@@ -24,7 +29,7 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Iterable, Mapping
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.functions.money import round_money
@@ -33,11 +38,42 @@ from openstack_billing_from_db_spark.operators.intervals import ceil_hours
 from openstack_billing_from_db_spark.operators.sessionize import (
     DEFAULT_TRIGGER_STATES,
     build_state_intervals,
+    end_at_deletion,
     map_event_states,
     state_micros_in_window,
-    with_synthetic_deletes,
 )
 from openstack_billing_from_db_spark.sources.rates import rates_df
+
+
+def _runtime(
+    actions: DataFrame,
+    window_start: datetime,
+    window_end: datetime,
+    instances: DataFrame | None,
+    how: str,
+    outages: Iterable[tuple[datetime, datetime]],
+    trigger_states: Mapping[str, str],
+    message_col: str | None,
+) -> DataFrame:
+    """``instance_runtime`` with the dimension join type as a parameter."""
+    intervals = build_state_intervals(
+        map_event_states(actions, trigger_states=trigger_states, message_col=message_col)
+    )
+    keys = ["instance_uuid"]
+    if instances is not None:
+        carried = [c for c in instances.columns if c not in ("uuid", "deleted_at")]
+        dim = instances.select(
+            F.col("uuid").alias("instance_uuid"),
+            F.unix_micros(F.col("deleted_at").cast("timestamp")).alias("deleted_us"),
+            *carried,
+        )
+        # broadcast: the intervals keep their id partitioning into the
+        # per-instance aggregate (an inner join could otherwise build on them)
+        intervals = end_at_deletion(intervals.join(F.broadcast(dim), "instance_uuid", how))
+        keys += carried
+    return state_micros_in_window(
+        intervals, window_start, window_end, outages=outages, keys=keys
+    )
 
 
 def instance_runtime(
@@ -50,15 +86,39 @@ def instance_runtime(
     trigger_states: Mapping[str, str] = DEFAULT_TRIGGER_STATES,
     message_col: str | None = "message",
 ) -> DataFrame:
-    """(instance_uuid, running_us, stopped_us) within the window."""
-    states = map_event_states(
-        actions, trigger_states=trigger_states, message_col=message_col
+    """(instance_uuid, running_us, stopped_us) within the window.
+
+    ``instances`` (keyed by ``uuid``) ends each instance's runtime at its
+    ``deleted_at``; its other columns are carried through the
+    per-instance aggregation, after ``instance_uuid``. It is left-joined:
+    an instance missing from it keeps its runtime, with nulls there.
+    """
+    return _runtime(
+        actions,
+        window_start,
+        window_end,
+        instances,
+        "left",
+        outages,
+        trigger_states,
+        message_col,
     )
-    if instances is not None:
-        states = with_synthetic_deletes(states, instances)
-    return state_micros_in_window(
-        build_state_intervals(states), window_start, window_end, outages=outages
-    )
+
+
+def _card_lookup(rates: DataFrame, value: str) -> Column:
+    """The rate card's ``value`` column keyed by ``su_type``, as a literal
+    map: the card is collected on the driver (``rates_df`` is a local
+    relation, so this runs no job) and folded into the projection instead
+    of joined. Values keep the card's type, so a decimal rate prices
+    exactly as a joined one (the literals are the values' exact strings,
+    cast once). Null for an ``su_type`` the card lacks; a duplicate
+    ``service_unit_type`` fails the plan (duplicate map key)."""
+    dtype = rates.schema[value].dataType.simpleString()
+    card = rates.select("service_unit_type", value).collect()
+    if not card:
+        raise ValueError("empty rate card: no service unit could be priced")
+    literals = F.create_map(*[F.lit(str(x)) for row in card for x in row])
+    return literals.cast(f"map<string,{dtype}>")[F.col("su_type")]
 
 
 def nova_invoice(
@@ -76,38 +136,40 @@ def nova_invoice(
     """Long-format invoice: (project_id, su_type, su_hours, rate, cost).
 
     ``instance_dim`` columns: uuid, project_id, su_type, service_units,
-    deleted_at (see ``su_instance_dim``). The reference's six
-    ``*_su_hours`` accumulator attributes (billing.py:105-113) become a
-    single ``su_type`` value column — grouped sum instead of attribute
+    deleted_at (see ``su_instance_dim``); instances missing from it are
+    not billed, nor are SU types missing from ``rates``. The reference's
+    six ``*_su_hours`` accumulator attributes (billing.py:105-113) become
+    a single ``su_type`` value column — grouped sum instead of attribute
     dispatch.
     """
-    runtime = instance_runtime(
+    runtime = _runtime(
         actions,
         window_start,
         window_end,
-        instances=instance_dim,
-        outages=outages,
-        trigger_states=trigger_states,
-        message_col=message_col,
+        instance_dim.select("uuid", "deleted_at", "project_id", "su_type", "service_units"),
+        "inner",
+        outages,
+        trigger_states,
+        message_col,
     )
     billed_us = F.col("running_us") + (
         F.col("stopped_us") if include_stopped_runtime else F.lit(0)
     )
     # ceil per instance BEFORE the grouped sum (billing.py:147-153) —
     # non-associative, so ordering is part of the semantics (§2.11 #1)
-    hours = runtime.select(
-        "instance_uuid", ceil_hours(billed_us).alias("runtime_hours")
-    ).filter(F.col("runtime_hours") > 0)
-
-    per_instance = hours.join(
-        instance_dim.select(
-            F.col("uuid").alias("instance_uuid"), "project_id", "su_type", "service_units"
-        ),
-        "instance_uuid",
-    ).select(
-        "project_id",
-        "su_type",
-        (F.col("runtime_hours") * F.col("service_units")).cast("long").alias("su_hours"),
+    per_instance = (
+        runtime.select(
+            "project_id",
+            "su_type",
+            "service_units",
+            ceil_hours(billed_us).alias("runtime_hours"),
+        )
+        .filter(F.col("runtime_hours") > 0)
+        .select(
+            "project_id",
+            "su_type",
+            (F.col("runtime_hours") * F.col("service_units")).cast("long").alias("su_hours"),
+        )
     )
 
     grouped = (
@@ -115,17 +177,13 @@ def nova_invoice(
         .agg(F.sum("su_hours").alias("su_hours"))
         .filter(F.col("su_hours") > 0)  # emit-only-positive (billing.py:204)
     )
-    return (
-        grouped.join(
-            F.broadcast(rates), grouped.su_type == rates.service_unit_type, "inner"
-        )
-        .select(
-            "project_id",
-            "su_type",
-            "su_hours",
-            F.col("rate").cast("double").alias("rate"),
-            round_money(F.col("rate") * F.col("su_hours")).cast("double").alias("cost"),
-        )
+    rate = _card_lookup(rates, "rate")
+    return grouped.filter(rate.isNotNull()).select(
+        "project_id",
+        "su_type",
+        "su_hours",
+        rate.cast("double").alias("rate"),
+        round_money(rate * F.col("su_hours")).cast("double").alias("cost"),
     )
 
 
@@ -145,10 +203,8 @@ def invoice_csv_rows(
 
     start_iso = window_start.replace(tzinfo=timezone.utc).isoformat()
     end_iso = window_end.replace(tzinfo=timezone.utc).isoformat()
-    return invoice.join(
-        F.broadcast(rates.select("service_unit_type", "su_name")),
-        invoice.su_type == F.col("service_unit_type"),
-    ).select(
+    su_name = _card_lookup(rates, "su_name")
+    return invoice.filter(su_name.isNotNull()).select(
         F.lit(invoice_month).alias("Invoice Month"),
         F.lit(start_iso).alias("Report Start Time"),
         F.lit(end_iso).alias("Report End Time"),
@@ -161,7 +217,7 @@ def invoice_csv_rows(
         F.lit("").alias("Institution"),
         F.lit("N/A").alias("Institution - Specific Code"),
         F.col("su_hours").alias("SU Hours (GBhr or SUhr)"),
-        F.col("su_name").alias("SU Type"),
+        su_name.alias("SU Type"),
         F.col("rate").alias("Rate"),
         F.col("cost").alias("Cost"),
         F.lit(generated_at).alias("Generated At"),

@@ -2,8 +2,10 @@
 
 The reference models rates as six Decimal attributes on a dataclass and
 "joins" them via dynamic attribute lookup (billing.py:198-201). Here the
-rate card is a 6-row long-format dimension DataFrame, broadcast-joined on
-``service_unit_type`` — the type is a value, not six columns.
+rate card is a 6-row long-format dimension DataFrame keyed by
+``service_unit_type`` — the type is a value, not six columns. It is a
+local relation, so the invoice plan reads it back on the driver without
+a job and folds it into literal lookups (plans/billing.py).
 
 Example production rates from reference tools/pod.yaml:24-29.
 """
@@ -32,8 +34,28 @@ def default_rates() -> list[tuple[str, str, Decimal]]:
     return [(t, n, Decimal(r)) for t, n, r in DEFAULT_RATE_CARD]
 
 
+def _sql_string(text: str) -> str:
+    """A Spark SQL string literal (backslash escapes are on by default)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def rates_df(spark: SparkSession, card: list[tuple[str, str, Decimal]] | None = None) -> DataFrame:
-    return spark.createDataFrame(card or default_rates(), schema=RATES)
+    """The card (default: ``DEFAULT_RATE_CARD``) as a ``VALUES`` relation
+    with the ``RATES`` schema. A local relation, unlike
+    ``createDataFrame(list)``: collecting it runs no job, and no Python
+    worker is forked to serialize its rows. An empty card is refused."""
+    if card is None:
+        card = default_rates()
+    elif not card:
+        raise ValueError("empty rate card: no service unit could be priced")
+    rate_type = RATES["rate"].dataType.simpleString()
+    rows = ", ".join(
+        f"({_sql_string(su_type)}, {_sql_string(su_name)},"
+        f" CAST({Decimal(rate):f}BD AS {rate_type}))"
+        for su_type, su_name, rate in card
+    )
+    names = ", ".join(f.name for f in RATES.fields)
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS rates({names})")
 
 
 # the reference's rate names (main.py:178-189) keyed by our su_type values

@@ -13,6 +13,7 @@ from decimal import Decimal
 
 import pytest
 
+from openstack_billing_from_db_spark.schemas import RATES
 from openstack_billing_from_db_spark.sources.fetch import (
     download_latest_dump_from_s3,
     find_latest_dump_key,
@@ -129,6 +130,18 @@ def test_rates_from_url_dataframe(spark):
     df = rates_df(spark, card)
     rows = {r.service_unit_type: r for r in df.collect()}
     assert len(rows) == 6 and float(rows["gpu_a100"].rate) == 1.803
+
+
+def test_rates_df_keeps_the_card_verbatim(spark):
+    card = [("cpu", "it's a \\ CPU", Decimal("0.0125")), ("gpu_a2", "A2", Decimal("0"))]
+    df = rates_df(spark, card)
+    assert [tuple(r) for r in df.collect()] == card
+    assert df.schema == RATES
+
+
+def test_rates_df_refuses_an_empty_card(spark):
+    with pytest.raises(ValueError, match="empty rate card"):
+        rates_df(spark, [])
 
 
 def test_rate_missing_month_raises():
@@ -261,6 +274,70 @@ def test_cli_invoices_from_dump(tmp_path, spark):
     # cpu1 10h×2SU @0.013 → 0.26; gpu1 24h×2SU @1.803 → 86.54
     assert any(",20,OpenStack CPU,0.013,0.26," in ln for ln in body), body
     assert any(",48,OpenStack GPUA100,1.803,86.54," in ln for ln in body), body
+
+
+def test_cli_zero_rate_override_prices_at_zero(tmp_path, spark):
+    """``--rate-cpu-su 0`` is an override, not an unset flag."""
+    import csv
+
+    from openstack_billing_from_db_spark.cli import main
+
+    out = str(tmp_path / "inv.csv")
+    main(
+        [
+            "--sql-dump-file", _write_dump(tmp_path),
+            "--start", "2000-01-01",
+            "--end", "2000-02-01",
+            "--output", out,
+            "--rate-cpu-su", "0",
+        ]
+    )
+    with open(out, newline="") as f:
+        rows = list(csv.DictReader(f, quotechar="|"))
+    cpu = [r for r in rows if r["SU Type"] == "OpenStack CPU"]
+    assert len(cpu) == 2, rows
+    assert all(float(r["Rate"]) == 0 and float(r["Cost"]) == 0 for r in cpu), cpu
+    gpu = [r for r in rows if r["SU Type"] == "OpenStack GPUA100"]
+    assert [(r["Rate"], r["Cost"]) for r in gpu] == [("1.803", "86.54")], rows
+
+
+def test_cli_dump_leaves_no_temporary_files(tmp_path, spark, monkeypatch):
+    import tempfile
+
+    from openstack_billing_from_db_spark.cli import main
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    out = str(tmp_path / "inv.csv")
+    main(
+        [
+            "--sql-dump-file", _write_dump(tmp_path),
+            "--start", "2000-01-01",
+            "--end", "2000-02-01",
+            "--output", out,
+        ]
+    )
+    assert os.path.getsize(out) > 0
+    assert os.listdir(tmp) == []
+
+
+def test_dump_tables_own_their_temporary_directory(tmp_path, spark, monkeypatch):
+    """Spark reads the converted files lazily: they stay while any of the
+    three DataFrames lives and go with the last of them."""
+    import gc
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    tables = nova_tables_from_dump(spark, _write_dump(tmp_path))
+    (converted,) = os.listdir(tmp)
+    assert converted.startswith("nova_dump_pq_")
+    gc.collect()
+    assert [df.count() for df in tables] == [3, 3, 4]
+    del tables
+    assert os.listdir(tmp) == []
 
 
 # --- tokenizer fuzz: render random rows as MySQL INSERT syntax, parse back ---

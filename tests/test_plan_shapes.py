@@ -28,10 +28,99 @@ def test_pricing_summary_pushdown(spark, sf_dir):
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan, plan
 
 
-def test_invoice_rates_join_broadcasts(spark, sf_dir):
-    """q01: the 6-row rates dim must broadcast, never shuffle."""
+def test_invoice_has_no_rates_join(spark, sf_dir):
+    """q01: the 6-row rate card is folded into literals — no rates
+    relation in the plan, so nothing of it to join or shuffle. The one
+    join left (the instance dim) broadcasts."""
     plan = _plan(QUERIES["q01_billing_invoice"](spark, sf_dir))
+    assert "LocalTableScan" not in plan and "ExistingRDD" not in plan, plan
+    assert len(re.findall(r"\w*Join ", plan)) == 1, plan
     assert "BroadcastHashJoin" in plan, plan
+
+
+_PLAN_NODE = re.compile(r"^(?P<indent>[\s:+\-*]*)(?P<name>[A-Za-z][\w ]*?) \((?P<id>\d+)\)$")
+
+
+def _final_plan_nodes(description: str) -> list[tuple[int, str, str]]:
+    """(indent, node name, node id) per line of the final physical plan
+    tree of a formatted (``explain mode=formatted``) plan description."""
+    tree = description.split("+- == Initial Plan ==")[0]
+    return [
+        (len(m["indent"]), m["name"].strip(), m["id"])
+        for m in map(_PLAN_NODE.match, tree.splitlines())
+        if m
+    ]
+
+
+def _ancestors(nodes: list[tuple[int, str, str]], i: int) -> list[str]:
+    """Names of node i's ancestors, nearest first."""
+    out, indent = [], nodes[i][0]
+    for j in range(i - 1, -1, -1):
+        if nodes[j][0] < indent:
+            out.append(nodes[j][1])
+            indent = nodes[j][0]
+    return out
+
+
+def test_cli_dump_invoice_plan(spark, tmp_path):
+    """The daily dump invoice as executed: at most 6 jobs; no RDD scan and
+    no rate-card relation (the card is folded into literals); each Nova
+    table scanned once; and no Exchange between the sessionizing Window
+    and the per-instance aggregate."""
+    from test_ingest_sources import _write_dump
+
+    from openstack_billing_from_db_spark.cli import main
+
+    sc = spark.sparkContext
+    group = "test_cli_dump_invoice_plan"
+    sc.setJobGroup(group, group)
+    try:
+        main(
+            [
+                "--sql-dump-file", _write_dump(tmp_path),
+                "--start", "2000-01-01",
+                "--end", "2000-02-01",
+                "--output", str(tmp_path / "inv.csv"),
+            ]
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 6, sorted(jobs)
+
+    # executed plans (AQE's final ones) from the SQL status store
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    recent = store.executionsList(max(0, n - 50), 50)
+    plans = [
+        e.physicalPlanDescription()
+        for e in (recent.apply(i) for i in range(recent.size()))
+        if e.description() == group
+    ]
+    assert all("ExistingRDD" not in p for p in plans), plans
+    (write,) = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert "LocalTableScan" not in write, write
+
+    nodes = _final_plan_nodes(write)
+    scanned = sorted(
+        re.search(
+            rf"^\({node_id}\) Scan parquet.*?^Location: \w+ \[[^\]]*/([^/\]]+)\]",
+            write,
+            re.M | re.S,
+        )[1]
+        for _, name, node_id in nodes
+        if name == "Scan parquet"
+    )
+    assert scanned == [
+        "instance_actions.parquet", "instance_extra.parquet", "instances.parquet"
+    ], write
+
+    (window,) = [i for i, (_, name, _) in enumerate(nodes) if name == "Window"]
+    above = _ancestors(nodes, window)
+    below_aggregate = above[: above.index("HashAggregate")]
+    assert not any("Exchange" in name for name in below_aggregate), write
 
 
 def test_regional_revenue_broadcast_dims(spark, sf_dir):

@@ -302,8 +302,9 @@ def test_zero_events_yields_zero_not_crash(spark):
     )
     instances = _instances_df(spark, datetime(2000, 1, 5))
     out = instance_runtime(events, WINDOW_START, WINDOW_END, instances=instances).collect()
-    # a deleted_at-only instance has one Deleted interval → zero billed time
-    assert all(row.running_us == 0 and row.stopped_us == 0 for row in out)
+    # a deleted_at-only instance has no interval to end → no row, so
+    # nothing billed
+    assert out == []
 
 
 def test_ignored_actions_do_not_transition(spark):

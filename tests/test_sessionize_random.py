@@ -9,8 +9,15 @@ from __future__ import annotations
 import random
 from datetime import datetime, timedelta
 
+import pytest
+
 from openstack_billing_from_db_spark.operators.sessionize import (
     DEFAULT_TRIGGER_STATES,
+    build_state_intervals,
+    build_state_intervals_bucketed,
+    map_event_states,
+    state_micros_in_window,
+    with_synthetic_deletes,
 )
 from openstack_billing_from_db_spark.plans.billing import instance_runtime
 
@@ -118,5 +125,87 @@ def test_random_sequences_with_outages(spark):
         iid: (got.get(iid, (0, 0)), exp)
         for iid, exp in expected.items()
         if got.get(iid, (0, 0)) != exp
+    }
+    assert not mismatches, f"{len(mismatches)} mismatches: {list(mismatches.items())[:5]}"
+
+
+# where each instance's deleted_at falls relative to its events
+_DELETE_KINDS = ("none", "event", "tied", "before", "after", "between")
+
+
+def _deleted_case(rng, instance_id, kind):
+    """(events, deleted_at): a random case plus a deleted_at of ``kind``;
+    "tied" duplicates an event (same timestamp, same state) and deletes
+    at that timestamp."""
+    rows = _random_case(rng, instance_id)
+    times = [ts for _, ts, _, _ in rows]
+    if kind == "tied":
+        k = rng.randrange(len(rows))
+        rows.insert(k, rows[k])
+        return rows, times[k]
+    if kind == "none":
+        return rows, None
+    if kind == "event":
+        return rows, rng.choice(times)
+    if kind == "before":
+        return rows, times[0] - timedelta(minutes=rng.randint(1, 5000))
+    if kind == "after":
+        return rows, times[-1] + timedelta(minutes=rng.randint(1, 50000))
+    return rows, times[0] + (times[-1] - times[0]) * rng.random()
+
+
+@pytest.mark.parametrize(
+    "builder", [build_state_intervals, build_state_intervals_bucketed]
+)
+def test_delete_clamp_equals_synthetic_delete_union(spark, builder):
+    """``instance_runtime(..., instances=...)`` ends the interval holding
+    deleted_at there; the reference formulation appends a synthetic
+    Deleted event instead. Same runtimes for every placement of
+    deleted_at, except that an instance with no state-changing event gets
+    no row instead of a zero row. Dimension columns ride along (left join)."""
+    rng = random.Random(20261017)
+    outages = [(datetime(2000, 1, 5), datetime(2000, 1, 6))]
+    events, dim = [], []
+    for i in range(240):
+        iid = f"d{i}"
+        rows, deleted_at = _deleted_case(rng, iid, _DELETE_KINDS[i % len(_DELETE_KINDS)])
+        events.extend(rows)
+        if i % 7 != 3:  # the rest are missing from the dimension
+            dim.append((iid, deleted_at, f"p{i % 5}"))
+    for j in range(6):  # deleted instances without events
+        dim.append((f"z{j}", WINDOW[0] + timedelta(days=j), "pz"))
+
+    events_df = spark.createDataFrame(
+        events, "instance_uuid string, created_at timestamp, action string, message string"
+    )
+    dim_df = spark.createDataFrame(
+        dim, "uuid string, deleted_at timestamp, project_id string"
+    )
+    union = with_synthetic_deletes(map_event_states(events_df), dim_df)
+    want = {
+        r.instance_uuid: (r.running_us, r.stopped_us)
+        for r in state_micros_in_window(builder(union), *WINDOW, outages=outages).collect()
+    }
+    got = {
+        r.instance_uuid: (r.project_id, r.running_us, r.stopped_us)
+        for r in instance_runtime(
+            events_df, *WINDOW, instances=dim_df, outages=outages
+        ).collect()
+    }
+    projects = {uuid: project for uuid, _, project in dim}
+    with_events = {  # instances with at least one state-changing event
+        iid
+        for iid, _, action, message in events
+        if message == "Error" or action in DEFAULT_TRIGGER_STATES
+    }
+
+    assert set(got) == with_events
+    without = {iid: want[iid] for iid in want if iid not in with_events}
+    assert {f"z{j}" for j in range(6)} <= set(without)
+    assert set(without.values()) == {(0, 0)}
+    mismatches = {
+        iid: (got[iid], want[iid])
+        for iid in with_events
+        if got[iid] != (projects.get(iid), *want[iid])
     }
     assert not mismatches, f"{len(mismatches)} mismatches: {list(mismatches.items())[:5]}"
