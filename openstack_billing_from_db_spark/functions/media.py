@@ -445,10 +445,11 @@ def audio_delta_hash(samples: np.ndarray, *, n_frames: int = AUDIO_FRAMES) -> in
     each frame's |amplitude| sum (equal frame lengths make sum
     comparisons ≡ mean comparisons, exact in int64), and emit one bit
     per consecutive-frame comparison (next frame louder), packed
-    LSB-first into ``n_frames − 1`` bits. 56 sign-safe BIGINT bits at
-    the default, so the output drops straight into
-    dedup.simhash_near_duplicates / the tuned phash banding — audio
-    near-dup reuses the image path's verified join kernels."""
+    LSB-first into ``n_frames − 1`` bits. 56 bits at the default — one
+    sign-safe BIGINT word, the same width as the grid=8 image dHash —
+    so multimodal.audio_dhash splits it into words exactly like an
+    image fingerprint and audio near-dup reuses the image path's
+    verified join kernels (dedup.multiword_hamming_pairs)."""
     x = np.abs(samples.astype(np.int64))
     per = x.shape[0] // n_frames
     if per == 0:

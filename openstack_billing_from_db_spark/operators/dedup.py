@@ -1,8 +1,13 @@
 """Deduplication operators for training-data pipelines: exact,
-MinHash+LSH near-dup, SimHash and multi-word perceptual-hash near-dup —
+MinHash+LSH near-dup, SimHash and word-split perceptual-hash near-dup —
 each designed so the heavy signature computation is a pure map-side
 projection (array expressions, no explode, no shuffle) and the only
 shuffles are the final bucket-equality self-joins on LSH keys.
+
+Perceptual fingerprints (operators/multimodal.py) always arrive as
+(doc_id[, frame_idx], w0 .. w{n-1}) BIGINT words; the 56-bit one-word
+fingerprint is the ``n_words=1`` case of the multi-word kernels, and
+text SimHash (doc_id, simhash) keeps its own entry point.
 
 Every banded hamming kernel (:func:`simhash_near_duplicates`,
 :func:`multiword_hamming_pairs`, :func:`framewise_multiword_hamming_pairs`,
@@ -58,13 +63,15 @@ def _multiword_band_layout(
     returns ``n_bands``. ``band_bits`` must divide
     ``word_bits`` so a band never straddles two words — EXCEPT when
     ``n_words == 1``, where straddling is impossible and any width with
-    ``bpw = word_bits // band_bits >= 1`` reproduces the single-word
-    kernel's banding exactly (band b reads bits [b·band_bits, …) of the
-    one word; the tail bits past ``bpw·band_bits`` are uncovered, which
-    only ever RAISES per-band selectivity and never breaks pigeonhole
-    recall — the check below binds on the surviving band count). This
-    is what lets the audio admission default share the batch path's
-    tuner-derived 11-bit bands over a 56-bit word (ADVICE r11)."""
+    ``bpw = word_bits // band_bits >= 1`` bands the one word exactly as
+    :func:`simhash_near_duplicates` would (band b reads bits
+    [b·band_bits, …); the tail bits past ``bpw·band_bits`` are
+    uncovered, which only ever RAISES per-band selectivity and never
+    breaks pigeonhole recall — the check below binds on the surviving
+    band count). :func:`tune_hamming_band_bits` applies the same
+    one-word rule, so the 56-bit perceptual fingerprints (image, audio,
+    video frame — the first rung of multimodal's escalation ladder)
+    band at the tuner's 11-bit width."""
     if n_words > 1 and word_bits % band_bits:
         raise ValueError(
             f"band_bits ({band_bits}) must divide word_bits ({word_bits})"
@@ -681,10 +688,11 @@ def multiword_hamming_pairs(
     persist_input: bool = True,
 ) -> DataFrame:
     """Banded hamming join over MULTI-WORD fingerprints (doc_id, w0 ..
-    w{n-1}) — the wide-hash form of :func:`simhash_near_duplicates`
-    for fingerprints past 63 bits (e.g. the 72-bit grid=9 dHash,
-    media.dhash_words packing). ``band_bits`` must divide ``word_bits``
-    so every band lives inside one word: band b reads bits
+    w{n-1}) — the word-split form of :func:`simhash_near_duplicates`:
+    one word for the 56-bit perceptual fingerprints, several past 63
+    bits (e.g. the 72-bit grid=9 dHash, media.dhash_words packing).
+    With several words ``band_bits`` must divide ``word_bits`` so every
+    band lives inside one word: band b reads bits
     [band_bits·(b mod bpw), …) of word b div bpw. Wider bands are the
     bucket-saturation lever — 12-bit bands give 4096 buckets/band vs
     256 at 8 bits — while keeping the pigeonhole recall guarantee
@@ -747,7 +755,6 @@ def framewise_multiword_hamming_pairs(
     band_bits: int,
     max_hamming: int = 4,
     min_frames: int = 2,
-    frame_col: str = "frame_idx",
     bits: int | None = None,
     max_bucket_size: int | None = None,
     persist_input: bool = True,
@@ -759,7 +766,7 @@ def framewise_multiword_hamming_pairs(
     ``w0``; two docs pair iff at least ``min_frames`` frame positions
     match at hamming ≤ ``max_hamming``. The per-(pair, frame) match set
     is exactly :func:`multiword_hamming_pairs` scoped within the frame
-    position (``group_col=frame_col`` — banding keys (frame, band,
+    position (``group_col="frame_idx"`` — banding keys (frame, band,
     bucket), so the tuner's occupancy bound applies per frame position,
     and the canonical-band test keeps one row per (pair, frame)); the
     majority count is then a plain count(1) per pair, no distinct
@@ -774,7 +781,7 @@ def framewise_multiword_hamming_pairs(
         band_bits=band_bits,
         max_hamming=max_hamming,
         bits=bits,
-        group_col=frame_col,
+        group_col="frame_idx",
         max_bucket_size=max_bucket_size,
         persist_input=persist_input,
     )
@@ -789,8 +796,6 @@ def framewise_hamming_matches(
     band_bits: int,
     max_hamming: int = 4,
     min_frames: int = 2,
-    frame_col: str = "frame_idx",
-    fp_col: str = "dhash",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Probe NEW multi-fingerprint entities (videos: one ``bits``-bit
@@ -798,7 +803,7 @@ def framewise_hamming_matches(
     index PLUS the new batch itself — the incremental companion of
     :func:`framewise_multiword_hamming_pairs` (what
     :func:`multiword_hamming_matches` is to the single-entity pairs
-    join). Both inputs are (doc_id, frame_idx, fp) rows; a candidate
+    join). Both inputs are (doc_id, frame_idx, w0) rows; a candidate
     shares an exact band WITHIN the same frame position between a NEW
     clip and any index-or-batch clip (self excluded), the verify is the
     per-frame hamming ≤ ``max_hamming``, the canonical-band test keeps
@@ -827,17 +832,13 @@ def framewise_hamming_matches(
     )
     if min_frames < 1:
         raise ValueError(f"min_frames must be >= 1, got {min_frames}")
-
-    def narrow(df: DataFrame) -> DataFrame:
-        return df.select("doc_id", frame_col, F.col(fp_col).alias("w0"))
-
     frame_matches = _hamming_matches(
-        narrow(existing),
-        narrow(new),
+        existing,
+        new,
         ["w0"],
         (bits, band_bits, n_bands),
         max_hamming=max_hamming,
-        gcols=[frame_col],
+        gcols=["frame_idx"],
         max_bucket_size=max_bucket_size,
     )
     return _frame_majority(
@@ -1195,7 +1196,9 @@ def tune_hamming_band_bits(
 
     ``word_bits`` (the multi-word path) additionally requires
     ``band_bits`` to divide the word so a band never straddles words
-    (:func:`multiword_hamming_pairs`' contract).
+    (:func:`multiword_hamming_pairs`' contract) — unless the fingerprint
+    fits one word (``bits <= word_bits``), where no band can straddle
+    (:func:`_multiword_band_layout`'s one-word rule).
 
     Raises ValueError when even the widest admissible band saturates —
     the caller must move to a wider fingerprint (more bits/words, e.g.
@@ -1205,7 +1208,7 @@ def tune_hamming_band_bits(
         raise ValueError(f"n_docs must be >= 0, got {n_docs}")
     widest = bits // (max_hamming + 1)
     for bb in range(min(widest, 62), 0, -1):
-        if word_bits is not None and word_bits % bb:
+        if word_bits is not None and bits > word_bits and word_bits % bb:
             continue
         if n_docs <= max_mean_bucket * (1 << bb):
             return bb
@@ -1268,8 +1271,6 @@ def chunked_hamming_pairs(
     pairs_fn,
     *,
     n_chunks: int,
-    id_col: str = "doc_id",
-    seed: str = "hchunk",
 ) -> DataFrame:
     """Sharding escalation for banded hamming joins past the tuner's
     occupancy ceiling (VERDICT r10 Next #5): hash-partition the corpus
@@ -1296,8 +1297,6 @@ def chunked_hamming_pairs(
     (``persist_input=False`` on the banded kernels) — chunk subsets
     are cheap filters of the cached base, and caching every chunk-pair
     projection would hold ~(C+1)× the corpus in storage at once."""
-    from openstack_billing_from_db_spark.functions.hashing import seeded_hash64
-
     if n_chunks < 1:
         raise ValueError(f"n_chunks must be >= 1, got {n_chunks}")
     if n_chunks == 1:
@@ -1305,11 +1304,11 @@ def chunked_hamming_pairs(
 
     def chunk_of(col: Column) -> Column:
         return F.pmod(
-            seeded_hash64(col.cast("string"), seed), F.lit(n_chunks)
+            seeded_hash64(col.cast("string"), "hchunk"), F.lit(n_chunks)
         )
 
     base = tracked_persist(
-        fingerprints.withColumn("__chunk", chunk_of(F.col(id_col)))
+        fingerprints.withColumn("__chunk", chunk_of(F.col("doc_id")))
     )
     outs: list[DataFrame] = []
     for i in range(n_chunks):

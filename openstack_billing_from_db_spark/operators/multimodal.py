@@ -16,6 +16,7 @@ the output schema is declared so Catalyst plans downstream ops normally.
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 from typing import Iterator
 
 import numpy as np
@@ -281,143 +282,182 @@ def synthesize_textured_image_payloads(
     )
 
 
-def dhash_images(
-    df: DataFrame, payload_col: str = "payload", *, grid: int = 8
+def _fingerprint_words(
+    df: DataFrame, hashes, *, bits: int, word_bits: int, per_frame: bool
 ) -> DataFrame:
-    """Perceptual difference-hash over encoded image payloads: decode
-    (BMP/PPM/PNG — the byte-level codecs in functions/media.py), pool
-    channel-sum intensity to a ``grid × grid`` mesh, pack the
-    horizontal-neighbor comparisons into a ``grid·(grid−1)``-bit
-    BIGINT (media.dhash_pixels). Arrow-batched mapInPandas — the
-    decode+hash is embarrassingly parallel and the output is one narrow
-    (doc_id, dhash) row per image, so the expensive pixel data never
-    shuffles. Feed the result to dedup.simhash_near_duplicates
-    (bits=grid·(grid−1)) for hamming-banded near-duplicate pairs —
-    dHash and SimHash share the banded-hamming join kernel."""
-
-    if grid * (grid - 1) > 63:
-        raise ValueError(
-            f"grid={grid} packs {grid * (grid - 1)} bits — past a single "
-            "sign-safe BIGINT; use dhash_multiword_images"
-        )
+    """The one perceptual-fingerprint body: Arrow-batched mapInPandas
+    over the ``payload`` column, where ``hashes(payload bytes)`` returns
+    the payload's ``bits``-bit fingerprints (one per image or clip, one
+    per sampled frame when ``per_frame``), each split into sign-safe
+    ``word_bits``-bit BIGINT words (media.dhash_words: a fingerprint
+    that fits one word is its own ``w0``). Output: (doc_id[, frame_idx],
+    w0, …); payload bytes never leave the map stage."""
+    n_words = len(media.dhash_words(0, bits=bits, word_bits=word_bits))
+    wcols = [f"w{i}" for i in range(n_words)]
+    keys = ["doc_id", "frame_idx"] if per_frame else ["doc_id"]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            hashes = []
-            for data in pdf[payload_col]:
-                _mime, _w, _h, px = _decode_one_image(bytes(data))
-                hashes.append(media.dhash_pixels(px, grid=grid))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "dhash": hashes})
+            rows = [
+                (doc_id, j, *media.dhash_words(h, bits=bits, word_bits=word_bits))
+                for doc_id, data in zip(pdf["doc_id"], pdf["payload"])
+                for j, h in enumerate(hashes(bytes(data)))
+            ]
+            out = pd.DataFrame(rows, columns=["doc_id", "frame_idx", *wcols])
+            yield out[[*keys, *wcols]]
 
-    return df.mapInPandas(batches, "doc_id long, dhash long")
-
-
-def dhash_multiword_images(
-    df: DataFrame,
-    payload_col: str = "payload",
-    *,
-    grid: int = 9,
-    word_bits: int = 36,
-) -> DataFrame:
-    """Wide perceptual dHash for corpora past the single-BIGINT regime:
-    decode + pool exactly like :func:`dhash_images`, but with
-    ``grid·(grid−1)`` bits (72 at the default grid=9) split into
-    sign-safe BIGINT words (media.dhash_words). Feed the result to
-    dedup.multiword_hamming_pairs with band_bits dividing word_bits —
-    wider bands mean exponentially more buckets per band (4096 at 12
-    bits vs 256 at 8), which is what defers the banded join's bucket
-    saturation from ~10⁵ to ~10⁶⁺ images while 6 bands > max_hamming=4
-    keeps the pigeonhole recall guarantee. Output: (doc_id, w0, w1, …)."""
-    bits = grid * (grid - 1)
-    n_words = -(-bits // word_bits)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f"w{i}": [] for i in range(n_words)}
-            for data in pdf[payload_col]:
-                _mime, _w, _h, px = _decode_one_image(bytes(data))
-                ws = media.dhash_words(
-                    media.dhash_pixels(px, grid=grid),
-                    bits=bits,
-                    word_bits=word_bits,
-                )
-                for i in range(n_words):
-                    rows[f"w{i}"].append(ws[i])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], **rows})
-
-    schema = "doc_id long, " + ", ".join(f"w{i} long" for i in range(n_words))
+    schema = ", ".join(
+        f"{c} {'int' if c == 'frame_idx' else 'long'}" for c in [*keys, *wcols]
+    )
     return df.mapInPandas(batches, schema)
 
 
-# the W-word wide-mesh ladder (VERDICT r11 Next #4): each escalation
-# level is (bits, word_bits) — 72-bit two-word 2×36 first (cheapest
-# decode/hash), then the 132-bit THREE-word 3×44 mesh, whose widest
-# admissible band (22 bits — 44 % 22 == 0, 6 bands > max_hamming 4)
-# gives 2²² buckets per band and defers single-join saturation to
-# ~537M docs at the default occupancy anchor — past the two-word
-# chunked path's documented ≈8.4M ceiling by orders of magnitude.
-# Chunk sharding now applies at the WIDEST level only, pushing the
-# refusal boundary to ~10⁹⁺ docs.
+def dhash_images(df: DataFrame, *, grid: int = 8, word_bits: int = 56) -> DataFrame:
+    """Perceptual difference-hash over encoded image payloads: decode
+    (BMP/PPM/PNG — the byte-level codecs in functions/media.py), pool
+    channel-sum intensity to a ``grid × grid`` mesh, pack the
+    horizontal-neighbor comparisons into ``grid·(grid−1)`` bits
+    (media.dhash_pixels) split into ``word_bits``-bit words. The 8×8
+    default is one 56-bit word; grid=9 / 36-bit words is the 72-bit
+    two-word mesh, grid=12 / 44-bit words the 132-bit three-word one.
+    Output: (doc_id, w0, …) — the input of
+    dedup.multiword_hamming_pairs."""
+    return _fingerprint_words(
+        df,
+        lambda data: [media.dhash_pixels(_decode_one_image(data)[3], grid=grid)],
+        bits=grid * (grid - 1),
+        word_bits=word_bits,
+        per_frame=False,
+    )
+
+
+def audio_dhash(
+    df: DataFrame, *, n_frames: int = media.AUDIO_FRAMES, word_bits: int = 56
+) -> DataFrame:
+    """Delta-energy audio fingerprints over encoded WAV payloads — the
+    audio twin of :func:`dhash_images`: real RIFF parse
+    (media.decode_wav), then media.audio_delta_hash's ``n_frames − 1``
+    consecutive-frame comparison bits split into ``word_bits``-bit
+    words (57 frames: one 56-bit word; WIDE_AUDIO_FRAMES / 36: two
+    words; XWIDE_AUDIO_FRAMES / 44: three). Output: (doc_id, w0, …);
+    PCM never leaves the decode stage."""
+    return _fingerprint_words(
+        df,
+        lambda data: [
+            media.audio_delta_hash(
+                media.decode_wav(data)[2].reshape(-1), n_frames=n_frames
+            )
+        ],
+        bits=n_frames - 1,
+        word_bits=word_bits,
+        per_frame=False,
+    )
+
+
+def video_frame_dhash(
+    df: DataFrame, *, n_samples: int = 3, grid: int = 8, word_bits: int = 56
+) -> DataFrame:
+    """Per-frame perceptual hashes over video payloads: walk the RVID
+    index to ``n_samples`` evenly spaced frames (idx_j = ⌊n·j/k⌋ —
+    skipped frames never decode, same contract as sample_video_frames),
+    BMP-decode only those and dHash each exactly as
+    :func:`dhash_images`. Output: one (doc_id, frame_idx, w0, …) row per
+    sampled frame — the input of dedup.framewise_multiword_hamming_pairs'
+    frame-majority video dedup."""
+
+    def frame_hashes(data: bytes) -> list[int]:
+        n = media.video_frame_count(data)
+        return [
+            media.dhash_pixels(
+                media.extract_video_frame(data, n * j // n_samples)[2], grid=grid
+            )
+            for j in range(n_samples)
+        ]
+
+    return _fingerprint_words(
+        df,
+        frame_hashes,
+        bits=grid * (grid - 1),
+        word_bits=word_bits,
+        per_frame=True,
+    )
+
+
+# The escalation ladder every perceptual entry point walks, narrowest
+# first, as (mesh, word_bits): the 56-bit one-word fingerprint, the
+# 72-bit 2×36 mesh, then the 132-bit 3×44 mesh, whose widest admissible
+# band (22 bits — 44 % 22 == 0, 6 bands > max_hamming 4) gives 2²²
+# buckets per band and defers single-join saturation to ~537M docs at
+# the default occupancy anchor. Chunk sharding applies at the widest
+# level only, pushing the refusal boundary to ~10⁹⁺ docs.
 XWIDE_WORD_BITS = 44
 XWIDE_IMAGE_GRID = 12  # 12×11 = 132 dHash bits = 3 × 44-bit words
 XWIDE_AUDIO_FRAMES = 133  # 132 delta bits = 3 × 44-bit words
+_GRID_LADDER = [(8, 56), (9, 36), (XWIDE_IMAGE_GRID, XWIDE_WORD_BITS)]
+_AUDIO_LADDER = [
+    (media.AUDIO_FRAMES, 56),
+    (media.WIDE_AUDIO_FRAMES, 36),
+    (XWIDE_AUDIO_FRAMES, XWIDE_WORD_BITS),
+]
 
 
 def _wide_or_chunked_pairs(
     df: DataFrame,
-    payload_col: str,
-    n_docs: int,
+    n_docs: int | None,
     *,
-    levels: "list[tuple[int, int, object, object]]",
+    levels: "list[tuple[int, int, object]]",
+    kernel,
     max_hamming: int,
     max_mean_bucket: int,
 ) -> DataFrame:
-    """Shared wide→wider→chunked tail of the three perceptual
-    escalation chains (image/audio/video). ``levels`` is the mesh
-    ladder, narrowest first: each entry is ``(bits, word_bits,
-    fp_fn, pairs_builder)`` where ``fp_fn(df, payload_col)`` hashes
-    the corpus at that width and ``pairs_builder(band_bits)`` returns
-    the banded kernel closure for one (sub)corpus. The first level
-    whose single-join banding passes dedup.tune_hamming_band_bits at
-    the corpus size wins (widening the fingerprint multiplies bucket
-    space exponentially and costs only a finer map-side mesh — always
-    cheaper than the C(C+1)/2 joins of chunk sharding); only when even
-    the WIDEST level saturates is the corpus hash-sharded at that
-    level via dedup.tune_hamming_chunks / chunked_hamming_pairs —
-    which owns the one fingerprint persist, so builders' kernels must
-    pass ``persist_input=False``."""
+    """The one escalation ladder of the perceptual entry points
+    (image/audio/video). ``levels`` lists ``(bits, word_bits,
+    fingerprint)`` narrowest first, where ``fingerprint(df)`` hashes the
+    corpus at that width; ``kernel`` is the banded pairs kernel
+    (dedup.multiword_hamming_pairs or its framewise twin). The first
+    level whose single-join banding passes
+    dedup.tune_hamming_band_bits at the corpus size wins (widening the
+    fingerprint multiplies bucket space exponentially and costs only a
+    finer map-side mesh — always cheaper than the C(C+1)/2 joins of
+    chunk sharding); only when even the WIDEST level saturates is the
+    corpus hash-sharded at that level (dedup.tune_hamming_chunks /
+    chunked_hamming_pairs). chunked_hamming_pairs owns the one
+    fingerprint persist, so the kernel runs with
+    ``persist_input=False``. ``n_docs=None`` counts ``df``."""
     from . import dedup
 
-    for bits, word_bits, fp_fn, pairs_builder in levels[:-1]:
+    if n_docs is None:
+        n_docs = df.count()
+    for bits, word_bits, fingerprint in levels:
+        tune = dict(
+            bits=bits,
+            word_bits=word_bits,
+            max_hamming=max_hamming,
+            max_mean_bucket=max_mean_bucket,
+        )
         try:
-            band_bits = dedup.tune_hamming_band_bits(
-                n_docs,
-                bits=bits,
-                word_bits=word_bits,
-                max_hamming=max_hamming,
-                max_mean_bucket=max_mean_bucket,
-            )
+            n_chunks, band_bits = 1, dedup.tune_hamming_band_bits(n_docs, **tune)
+            break
         except ValueError:
             continue
-        return dedup.chunked_hamming_pairs(
-            fp_fn(df, payload_col), pairs_builder(band_bits), n_chunks=1
-        )
-    bits, word_bits, fp_fn, pairs_builder = levels[-1]
-    n_chunks, band_bits = dedup.tune_hamming_chunks(
-        n_docs,
-        bits=bits,
-        word_bits=word_bits,
-        max_hamming=max_hamming,
-        max_mean_bucket=max_mean_bucket,
-    )
+    else:  # even the widest level saturates one join: shard at it
+        n_chunks, band_bits = dedup.tune_hamming_chunks(n_docs, **tune)
     return dedup.chunked_hamming_pairs(
-        fp_fn(df, payload_col), pairs_builder(band_bits), n_chunks=n_chunks
+        fingerprint(df),
+        lambda subset: kernel(
+            subset,
+            n_words=-(-bits // word_bits),
+            word_bits=word_bits,
+            band_bits=band_bits,
+            max_hamming=max_hamming,
+            persist_input=False,
+        ),
+        n_chunks=n_chunks,
     )
 
 
 def phash_near_duplicates(
     df: DataFrame,
-    payload_col: str = "payload",
     *,
     n_docs: int | None = None,
     max_hamming: int = 4,
@@ -429,161 +469,73 @@ def phash_near_duplicates(
     dedup.tune_hamming_band_bits instead of a fixed default that
     silently saturates.
 
-    Path choice: the 8×8 / 56-bit single-BIGINT dHash (q141's shape,
-    cheapest decode + one hash column) while a band width exists whose
-    expected uniform bucket occupancy stays ≤ ``max_mean_bucket``;
-    past that (``max_mean_bucket · 2^11`` docs — 262k at the
-    empirically-anchored default, see tune_hamming_band_bits) the
-    W-word wide-mesh ladder takes over: the 9×9 / 72-bit two-word path
-    (q142's shape, dedup.multiword_hamming_pairs) with its own tuned
-    width, then — past the two-word 12-bit bands' ceiling (≳524k docs)
-    — the 12×12 / 132-bit THREE-word mesh (q161's shape, 22-bit bands,
+    The ladder (:func:`_wide_or_chunked_pairs`): the 8×8 / 56-bit
+    one-word dHash (q141's shape, 11-bit bands) up to
+    ``max_mean_bucket · 2^11`` docs (262k at the empirically-anchored
+    default, see tune_hamming_band_bits); then the 9×9 / 72-bit
+    two-word mesh (q142's shape, 12-bit bands, ≲524k docs); then the
+    12×12 / 132-bit three-word mesh (q161's shape, 22-bit bands,
     2²² buckets per band: single-join headroom to ~537M docs). Only if
     even that saturates is the corpus hash-sharded
     (dedup.chunked_hamming_pairs at dedup.tune_hamming_chunks' pick):
     C(C+1)/2 memory-bounded wide joins with exact recall — never an
     O(n²/buckets) single join.
 
-    The paths hash different meshes, so pair sets differ at the margin
-    (all honor ``max_hamming``; a wider path sees more bits of
-    texture) — the trade is recall granularity vs bucket space, same
-    contract as minhash's tune_banding. ``n_docs`` skips the count
-    scan when the caller already knows the cardinality.
-    Output: (doc_a, doc_b, hamming)."""
+    The levels hash different meshes, so pair sets differ at the margin
+    (all honor ``max_hamming``; a wider mesh sees more bits of texture)
+    — the trade is recall granularity vs bucket space, same contract as
+    minhash's tune_banding. ``n_docs`` skips the count scan when the
+    caller already knows the cardinality. Output: (doc_a, doc_b,
+    hamming)."""
     from . import dedup
 
-    if n_docs is None:
-        n_docs = df.count()
-    try:
-        band_bits = dedup.tune_hamming_band_bits(
-            n_docs,
-            bits=8 * 7,
-            max_hamming=max_hamming,
-            max_mean_bucket=max_mean_bucket,
-        )
-    except ValueError:
-        def _image_level(grid: int, word_bits: int):
-            bits = grid * (grid - 1)
-            n_words = -(-bits // word_bits)
-            return (
-                bits,
-                word_bits,
-                lambda d, pc: dhash_multiword_images(
-                    d, pc, grid=grid, word_bits=word_bits
-                ),
-                lambda band_bits: lambda subset: (
-                    dedup.multiword_hamming_pairs(
-                        subset,
-                        n_words=n_words,
-                        word_bits=word_bits,
-                        band_bits=band_bits,
-                        max_hamming=max_hamming,
-                        persist_input=False,
-                    )
-                ),
-            )
-
-        return _wide_or_chunked_pairs(
-            df,
-            payload_col,
-            n_docs,
-            levels=[
-                _image_level(9, 36),
-                _image_level(XWIDE_IMAGE_GRID, XWIDE_WORD_BITS),
-            ],
-            max_hamming=max_hamming,
-            max_mean_bucket=max_mean_bucket,
-        )
-    fp = dhash_images(df, payload_col, grid=8)
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("dhash").alias("simhash")),
-        bits=8 * 7,
-        band_bits=band_bits,
+    return _wide_or_chunked_pairs(
+        df,
+        n_docs,
+        levels=[
+            (g * (g - 1), wb, partial(dhash_images, grid=g, word_bits=wb))
+            for g, wb in _GRID_LADDER
+        ],
+        kernel=dedup.multiword_hamming_pairs,
         max_hamming=max_hamming,
+        max_mean_bucket=max_mean_bucket,
     )
 
 
 def audio_near_duplicates(
     df: DataFrame,
-    payload_col: str = "payload",
     *,
     n_docs: int | None = None,
     max_hamming: int = 4,
     max_mean_bucket: int = 128,
 ) -> DataFrame:
     """Corpus-size-driven audio perceptual dedup — the audio member of
-    the :func:`phash_near_duplicates` family: RIFF/WAV decode → 56-bit
+    the :func:`phash_near_duplicates` family: RIFF/WAV decode →
     delta-energy fingerprint (media.audio_delta_hash) → banded hamming
-    pairs at the width dedup.tune_hamming_band_bits picks for the
-    corpus size. Past the 56-bit tuner's occupancy bound (~262k clips
-    at the default) the 73-frame / 72-bit two-word wide mesh
-    (:func:`audio_dhash_multiword`, dedup.multiword_hamming_pairs)
-    takes over with its own tuned width — the same escalation contract
-    as the image grid=8 → grid=9 path (a finer mesh sees 72 bits of
-    temporal texture instead of 56, so pair sets differ at the
-    margin). If even 12-bit wide bands saturate (≳524k clips) the
-    corpus is hash-sharded (dedup.chunked_hamming_pairs at
-    dedup.tune_hamming_chunks' pick) into memory-bounded wide joins
-    with exact recall. ``n_docs`` skips the count scan when the caller
-    already knows the cardinality. PCM never leaves the decode map
-    stage. Output: (doc_a, doc_b, hamming)."""
+    pairs, over the same ladder: 57 frames / 56 bits in one word, then
+    73 frames / 72 bits in two 36-bit words, then 133 frames / 132 bits
+    in three 44-bit words, chunk-sharded only past the widest level's
+    single-join bound. A finer temporal mesh sees more bits, so pair
+    sets differ at the margin. ``n_docs`` skips the count scan when the
+    caller already knows the cardinality. PCM never leaves the decode
+    map stage. Output: (doc_a, doc_b, hamming)."""
     from . import dedup
 
-    if n_docs is None:
-        n_docs = df.count()
-    try:
-        band_bits = dedup.tune_hamming_band_bits(
-            n_docs,
-            bits=56,
-            max_hamming=max_hamming,
-            max_mean_bucket=max_mean_bucket,
-        )
-    except ValueError:
-        def _audio_level(n_frames: int, word_bits: int):
-            bits = n_frames - 1
-            n_words = -(-bits // word_bits)
-            return (
-                bits,
-                word_bits,
-                lambda d, pc: audio_dhash_multiword(
-                    d, pc, n_frames=n_frames, word_bits=word_bits
-                ),
-                lambda band_bits: lambda subset: (
-                    dedup.multiword_hamming_pairs(
-                        subset,
-                        n_words=n_words,
-                        word_bits=word_bits,
-                        band_bits=band_bits,
-                        max_hamming=max_hamming,
-                        bits=bits,
-                        persist_input=False,
-                    )
-                ),
-            )
-
-        return _wide_or_chunked_pairs(
-            df,
-            payload_col,
-            n_docs,
-            levels=[
-                _audio_level(media.WIDE_AUDIO_FRAMES, 36),
-                _audio_level(XWIDE_AUDIO_FRAMES, XWIDE_WORD_BITS),
-            ],
-            max_hamming=max_hamming,
-            max_mean_bucket=max_mean_bucket,
-        )
-    fp = audio_dhash(df, payload_col)
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("ahash").alias("simhash")),
-        bits=56,
-        band_bits=band_bits,
+    return _wide_or_chunked_pairs(
+        df,
+        n_docs,
+        levels=[
+            (f - 1, wb, partial(audio_dhash, n_frames=f, word_bits=wb))
+            for f, wb in _AUDIO_LADDER
+        ],
+        kernel=dedup.multiword_hamming_pairs,
         max_hamming=max_hamming,
+        max_mean_bucket=max_mean_bucket,
     )
 
 
 def video_near_duplicates(
     df: DataFrame,
-    payload_col: str = "payload",
     *,
     n_docs: int | None = None,
     max_hamming: int = 4,
@@ -594,79 +546,38 @@ def video_near_duplicates(
 ) -> DataFrame:
     """Corpus-size-driven video perceptual dedup — frame-majority
     matching over per-frame dHashes: the RVID index walk decodes ONLY
-    the ``n_samples`` sampled frames, each gets the 56-bit dHash (one
-    word), and dedup.framewise_multiword_hamming_pairs joins banded
-    WITHIN frame position at the tuner's width (the banding keys
-    include the frame, so bucket occupancy is per frame position and
-    the documents-count bound applies per frame). Past the 56-bit
-    tuner's occupancy bound (~262k clips at the default) the grid=9 /
-    72-bit two-word per-frame mesh
-    (:func:`video_frame_dhash_multiword`,
-    dedup.framewise_multiword_hamming_pairs) takes over with its own
-    tuned width — the image-family escalation contract; past even the
-    12-bit wide bands (≳524k) the corpus is hash-sharded
-    (dedup.chunked_hamming_pairs at dedup.tune_hamming_chunks' pick)
-    into memory-bounded wide joins with exact recall (a doc's frames
-    all chunk with the doc, so the ≥ min_frames majority stays
+    the ``n_samples`` sampled frames (:func:`video_frame_dhash`) and
+    dedup.framewise_multiword_hamming_pairs joins banded WITHIN frame
+    position (the banding keys include the frame, so bucket occupancy
+    is per frame position and the documents-count bound applies per
+    frame), keeping pairs that match on ≥ ``min_frames`` positions.
+    The per-frame mesh follows the image ladder (56-bit one word,
+    72-bit two words, 132-bit three words, chunk-sharded at the widest;
+    a doc's frames all chunk with the doc, so the majority stays
     per-join-local). ``max_bucket_size`` passes through the
     degenerate-frame skew cap (constant/black frames; under chunking
     the cap applies per chunk-pair join). Output:
     (doc_a, doc_b, n_frames_matched ≥ min_frames)."""
     from . import dedup
 
-    if n_docs is None:
-        n_docs = df.count()
-    try:
-        band_bits = dedup.tune_hamming_band_bits(
-            n_docs,
-            bits=8 * 7,
-            max_hamming=max_hamming,
-            max_mean_bucket=max_mean_bucket,
-        )
-    except ValueError:
-        def _video_level(grid: int, word_bits: int):
-            bits = grid * (grid - 1)
-            n_words = -(-bits // word_bits)
-            return (
-                bits,
-                word_bits,
-                lambda d, pc: video_frame_dhash_multiword(
-                    d, pc, n_samples=n_samples, grid=grid, word_bits=word_bits
-                ),
-                lambda band_bits: lambda subset: (
-                    dedup.framewise_multiword_hamming_pairs(
-                        subset,
-                        n_words=n_words,
-                        word_bits=word_bits,
-                        band_bits=band_bits,
-                        max_hamming=max_hamming,
-                        min_frames=min_frames,
-                        max_bucket_size=max_bucket_size,
-                        persist_input=False,
-                    )
-                ),
+    return _wide_or_chunked_pairs(
+        df,
+        n_docs,
+        levels=[
+            (
+                g * (g - 1),
+                wb,
+                partial(video_frame_dhash, n_samples=n_samples, grid=g, word_bits=wb),
             )
-
-        return _wide_or_chunked_pairs(
-            df,
-            payload_col,
-            n_docs,
-            levels=[
-                _video_level(9, 36),
-                _video_level(XWIDE_IMAGE_GRID, XWIDE_WORD_BITS),
-            ],
-            max_hamming=max_hamming,
-            max_mean_bucket=max_mean_bucket,
-        )
-    fp = video_frame_dhash(df, payload_col, n_samples=n_samples, grid=8)
-    return dedup.framewise_multiword_hamming_pairs(
-        fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
-        n_words=1,
-        word_bits=8 * 7,
-        band_bits=band_bits,
+            for g, wb in _GRID_LADDER
+        ],
+        kernel=partial(
+            dedup.framewise_multiword_hamming_pairs,
+            min_frames=min_frames,
+            max_bucket_size=max_bucket_size,
+        ),
         max_hamming=max_hamming,
-        min_frames=min_frames,
-        max_bucket_size=max_bucket_size,
+        max_mean_bucket=max_mean_bucket,
     )
 
 
@@ -711,69 +622,6 @@ def synthesize_family_audio_payloads(
     return docs.select(*cols).mapInPandas(
         batches, "doc_id long, payload binary"
     )
-
-
-def audio_dhash(
-    df: DataFrame, payload_col: str = "payload", *, n_frames: int | None = None
-) -> DataFrame:
-    """Delta-energy audio fingerprints over encoded WAV payloads: real
-    RIFF parse (media.decode_wav) + media.audio_delta_hash inside
-    Arrow-batched mapInPandas — the audio twin of :func:`dhash_images`.
-    Output is one narrow (doc_id, ahash) row per clip (PCM never
-    shuffles); feed it to dedup.simhash_near_duplicates — audio and
-    image near-dup share the banded-hamming join kernels."""
-    kw = {} if n_frames is None else {"n_frames": n_frames}
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            hashes = []
-            for data in pdf[payload_col]:
-                _ch, _rate, samples = media.decode_wav(bytes(data))
-                hashes.append(
-                    media.audio_delta_hash(samples.reshape(-1), **kw)
-                )
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "ahash": hashes})
-
-    return df.mapInPandas(batches, "doc_id long, ahash long")
-
-
-def audio_dhash_multiword(
-    df: DataFrame,
-    payload_col: str = "payload",
-    *,
-    n_frames: int = media.WIDE_AUDIO_FRAMES,
-    word_bits: int = 36,
-) -> DataFrame:
-    """Wide delta-energy audio fingerprints for corpora past the
-    single-BIGINT tuner ceiling — the audio twin of
-    :func:`dhash_multiword_images`: the SAME media.audio_delta_hash
-    delta rule over a finer ``n_frames`` temporal mesh (72 bits at the
-    WIDE_AUDIO_FRAMES default), split into sign-safe BIGINT words
-    (media.dhash_words). Feed the result to
-    dedup.multiword_hamming_pairs with band_bits dividing word_bits —
-    wider bands defer bucket saturation from ~262k to ~524k+ clips.
-    Output: (doc_id, w0, w1, …); PCM never leaves the decode stage."""
-    bits = n_frames - 1
-    n_words = -(-bits // word_bits)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {f"w{i}": [] for i in range(n_words)}
-            for data in pdf[payload_col]:
-                _ch, _rate, samples = media.decode_wav(bytes(data))
-                ws = media.dhash_words(
-                    media.audio_delta_hash(
-                        samples.reshape(-1), n_frames=n_frames
-                    ),
-                    bits=bits,
-                    word_bits=word_bits,
-                )
-                for i in range(n_words):
-                    rows[f"w{i}"].append(ws[i])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], **rows})
-
-    schema = "doc_id long, " + ", ".join(f"w{i} long" for i in range(n_words))
-    return df.mapInPandas(batches, schema)
 
 
 def synthesize_audio_payloads(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -871,86 +719,6 @@ def synthesize_family_video_payloads(
     return docs.select(*cols).mapInPandas(
         batches, "doc_id long, payload binary"
     )
-
-
-def video_frame_dhash(
-    df: DataFrame,
-    payload_col: str = "payload",
-    *,
-    n_samples: int = 3,
-    grid: int = 8,
-) -> DataFrame:
-    """Per-frame perceptual hashes over video payloads: walk the RVID
-    index to ``n_samples`` evenly spaced frames (idx_j = ⌊n·j/k⌋ —
-    skipped frames never decode, same contract as sample_video_frames),
-    BMP-decode only those, dHash each. Output: one narrow
-    (doc_id, frame_idx, dhash) row per sampled frame — with ``dhash``
-    as ``w0``, the input to dedup.framewise_multiword_hamming_pairs'
-    frame-majority video dedup."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(data)
-                n = media.video_frame_count(data)
-                for j in range(n_samples):
-                    idx = n * j // n_samples
-                    _w, _h, px = media.extract_video_frame(data, idx)
-                    rows.append(
-                        (doc_id, j, media.dhash_pixels(px, grid=grid))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", "dhash"]
-            )
-
-    return df.mapInPandas(
-        batches, "doc_id long, frame_idx int, dhash long"
-    )
-
-
-def video_frame_dhash_multiword(
-    df: DataFrame,
-    payload_col: str = "payload",
-    *,
-    n_samples: int = 3,
-    grid: int = 9,
-    word_bits: int = 36,
-) -> DataFrame:
-    """Wide per-frame perceptual hashes for video corpora past the
-    single-BIGINT tuner ceiling: the :func:`video_frame_dhash` index
-    walk (only sampled frames decode) with the ``grid·(grid−1)``-bit
-    dHash split into sign-safe BIGINT words — 72 bits / two words at
-    the grid=9 default. Output: one narrow (doc_id, frame_idx, w0, …)
-    row per sampled frame — the input to
-    dedup.framewise_multiword_hamming_pairs."""
-    bits = grid * (grid - 1)
-    n_words = -(-bits // word_bits)
-    wcols = [f"w{i}" for i in range(n_words)]
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for doc_id, data in zip(pdf["doc_id"], pdf[payload_col]):
-                data = bytes(data)
-                n = media.video_frame_count(data)
-                for j in range(n_samples):
-                    idx = n * j // n_samples
-                    _w, _h, px = media.extract_video_frame(data, idx)
-                    ws = media.dhash_words(
-                        media.dhash_pixels(px, grid=grid),
-                        bits=bits,
-                        word_bits=word_bits,
-                    )
-                    rows.append((doc_id, j, *ws))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "frame_idx", *wcols]
-            )
-
-    schema = "doc_id long, frame_idx int, " + ", ".join(
-        f"{w} long" for w in wcols
-    )
-    return df.mapInPandas(batches, schema)
 
 
 def synthesize_scene_video_payloads(

@@ -2111,14 +2111,14 @@ def q141_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicates; gradient cells were measured and rejected), the
     byte-level BMP codec decodes it back inside Arrow-batched
     mapInPandas, media.dhash_pixels pools intensity to an 8×8 mesh and
-    packs the 56 horizontal-neighbor comparisons into a BIGINT, and
-    dedup.simhash_near_duplicates — the SAME banded-hamming kernel q37
-    uses, bits=56/band_bits=8 — emits verified pairs at hamming <=
-    {_DH_MAX_HAMMING}. The oracle replays pixel synthesis, pooling
+    packs the 56 horizontal-neighbor comparisons into one BIGINT word,
+    and dedup.multiword_hamming_pairs at n_words=1 — the banded-hamming
+    kernel q37's simhash join shares, word_bits=56/band_bits=8 — emits
+    verified pairs at hamming <= {_DH_MAX_HAMMING}. The oracle replays pixel synthesis, pooling
     (identity on 2×2-constant cells), bit packing, banding, and the
     hamming verify in closed form — any codec, pooling, packing, or
     band-extraction bug hash-fails. Scale shape: pixels never shuffle
-    (narrow (doc_id, dhash) rows after the map stage); the pair space is
+    (narrow (doc_id, w0) rows after the map stage); the pair space is
     band-bucketed with the shared kernel's bucket caps available for
     skewed corpora. The FIXED 56-bit/8-bit banding registered here
     saturates past ~131k uniform images (63× wall measured at x100) —
@@ -2126,12 +2126,16 @@ def q141_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     point (dedup.tune_hamming_band_bits) that auto-widens to q142's
     two-word wide bands instead."""
     docs = load_table(spark, sf_dir, "documents")
+    bits = _DH_GRID * (_DH_GRID - 1)
     fp = multimodal.dhash_images(
-        multimodal.synthesize_textured_image_payloads(docs), grid=_DH_GRID
+        multimodal.synthesize_textured_image_payloads(docs),
+        grid=_DH_GRID,
+        word_bits=bits,
     )
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("dhash").alias("simhash")),
-        bits=_DH_GRID * (_DH_GRID - 1),
+    return dedup.multiword_hamming_pairs(
+        fp,
+        n_words=1,
+        word_bits=bits,
         band_bits=8,
         max_hamming=_DH_MAX_HAMMING,
     )
@@ -2215,7 +2219,7 @@ def q142_image_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-word packing → per-word band extraction → the summed-xor
     hamming verify in closed form."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = multimodal.dhash_multiword_images(
+    fp = multimodal.dhash_images(
         multimodal.synthesize_textured_image_payloads(docs, grid=_DH9_GRID),
         grid=_DH9_GRID,
         word_bits=_DH9_WORD_BITS,
@@ -2398,23 +2402,24 @@ def q144_audio_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame-amplitude profile per family, one member frame bump),
     media.decode_wav parses it back inside Arrow-batched mapInPandas,
     media.audio_delta_hash sums |PCM| per equal frame and packs the 56
-    consecutive-frame comparisons into a BIGINT, and
-    dedup.simhash_near_duplicates — the SAME kernel the image dHash
-    path uses (q141/q142), at the width the hamming tuner picks for
-    this corpus size — emits verified pairs at hamming ≤ 4. The oracle
+    consecutive-frame comparisons into one BIGINT word, and
+    dedup.multiword_hamming_pairs at n_words=1 — the SAME kernel the
+    image dHash path uses (q141/q142), at the width the hamming tuner
+    picks for this corpus size — emits verified pairs at hamming ≤ 4. The oracle
     replays frame amplitudes (portable md5 hash family), delta-bit
     packing, banding, and the hamming verify in closed form — a codec,
     framing, packing, or banding bug hash-fails. Scale shape: PCM never
-    shuffles (narrow (doc_id, ahash) rows after the map stage); the
+    shuffles (narrow (doc_id, w0) rows after the map stage); the
     pair space is band-bucketed with pigeonhole recall (5 bands >
     hamming budget 4)."""
     docs = load_table(spark, sf_dir, "documents")
     fp = multimodal.audio_dhash(
         multimodal.synthesize_family_audio_payloads(docs)
     )
-    return dedup.simhash_near_duplicates(
-        fp.select("doc_id", F.col("ahash").alias("simhash")),
-        bits=56,
+    return dedup.multiword_hamming_pairs(
+        fp,
+        n_words=1,
+        word_bits=56,
         band_bits=_AW_BAND_BITS,
         max_hamming=_DH_MAX_HAMMING,
     )
@@ -2520,15 +2525,15 @@ def q145_video_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distorted pair matches 1 and is dropped). The oracle replays
     texture synthesis, per-frame packing, frame-scoped banding, the
     hamming verify, and the majority count in closed form. Scale
-    shape: video bytes never shuffle (narrow (doc, frame, hash) rows
-    after the map stage); the pair space is banded per frame position
+    shape: video bytes never shuffle (narrow (doc_id, frame_idx, w0)
+    rows after the map stage); the pair space is banded per frame position
     with the pigeonhole guarantee intact (5 bands > hamming 4)."""
     docs = load_table(spark, sf_dir, "documents")
     fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs), n_samples=3
     )
     return dedup.framewise_multiword_hamming_pairs(
-        fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+        fp,
         n_words=1,
         word_bits=56,
         band_bits=_VW_BAND_BITS,
@@ -2814,9 +2819,7 @@ def q153_streaming_video_admission(
     pay = multimodal.synthesize_family_video_payloads(docs)
     b1 = pay.filter(F.col("doc_id") % 2 == 0)
     b2 = pay.filter(F.col("doc_id") % 2 == 1)
-    empty = spark.createDataFrame(
-        [], "doc_id long, frame_idx int, dhash long"
-    )
+    empty = spark.createDataFrame([], "doc_id long, frame_idx int, w0 long")
     # epoch 1's verdict/addition plans are referenced again by epoch 2
     # and the final union, but deliberately NOT persisted: the expensive
     # half (decode + fingerprints) is already cached inside the match
@@ -2859,8 +2862,8 @@ def q153_streaming_video_admission(
 # --- wide-mesh audio/video dedup, driver-certified (round 11) ------------------
 #
 # Round 11 gave audio/video the image family's 72-bit two-word
-# escalation (multimodal.audio_dhash_multiword /
-# video_frame_dhash_multiword; auto-engaged by the *_near_duplicates
+# escalation (multimodal.audio_dhash / video_frame_dhash at the wide
+# meshes; auto-engaged by the *_near_duplicates
 # entry points past the 56-bit tuner ceiling). These entries put the
 # wide meshes themselves under the driver's oracle gate — the q142
 # precedent (register the escalated shape, not just the escalator):
@@ -2945,7 +2948,7 @@ def q154_audio_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaves the decode stage; measured 12.4 s at 500k clips (PLANS.md
     round-11)."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = multimodal.audio_dhash_multiword(
+    fp = multimodal.audio_dhash(
         multimodal.synthesize_family_audio_payloads(
             docs, n_frames=_AW9_FRAMES
         ),
@@ -3019,7 +3022,7 @@ def q155_video_phash72_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is recall-exact by pigeonhole, 6 bands > hamming 4) → majority
     count. Measured 35.0 s at 500k clips (PLANS.md round-11)."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = multimodal.video_frame_dhash_multiword(
+    fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs, grid=_VW9_GRID),
         n_samples=3,
         grid=_VW9_GRID,
@@ -3072,7 +3075,7 @@ def q156_chunked_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         600_000, bits=9 * 8, word_bits=_DH9_WORD_BITS,
         max_hamming=_DH_MAX_HAMMING,
     )
-    fp = multimodal.dhash_multiword_images(
+    fp = multimodal.dhash_images(
         pay, grid=_DH9_GRID, word_bits=_DH9_WORD_BITS
     )
     return dedup.chunked_hamming_pairs(
@@ -3472,7 +3475,7 @@ def q161_image_phash132_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     multimodal.phash_near_duplicates' escalation ladder selects before
     any chunk sharding."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = multimodal.dhash_multiword_images(
+    fp = multimodal.dhash_images(
         multimodal.synthesize_textured_image_payloads(docs, grid=_DH12_GRID),
         grid=_DH12_GRID,
         word_bits=_DH12_WORD_BITS,
@@ -3704,7 +3707,7 @@ def q164_audio_phash132_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay = multimodal.synthesize_family_audio_payloads(
         docs, n_frames=_AW12_FRAMES
     )
-    fp = multimodal.audio_dhash_multiword(
+    fp = multimodal.audio_dhash(
         pay, n_frames=_AW12_FRAMES, word_bits=_AW12_WORD_BITS
     )
     return dedup.multiword_hamming_pairs(

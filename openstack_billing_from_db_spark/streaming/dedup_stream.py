@@ -23,6 +23,7 @@ unique-doc rate; periodic compaction of the epoch partitions
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -78,13 +79,25 @@ def _epoch_snapshot(spark: SparkSession, df: DataFrame):
     return cp, release
 
 
+# the read errors that mean "no index written yet" (the first epoch):
+# a missing directory, or one holding no parquet files
+_NO_INDEX_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def _existing_index(spark: SparkSession, index_dir: str, like: DataFrame) -> DataFrame:
+    """The persisted index in ``like``'s columns (the epoch
+    partition-discovery column dropped), or an empty one before the
+    first epoch has written. Any other read failure — an index in
+    another fingerprint layout, a corrupt file — raises: probing an
+    empty index would admit every duplicate as fresh."""
     try:
-        # epoch partition-discovery column dropped: the index schema is
-        # exactly the minhash_index row shape
         return spark.read.parquet(index_dir).select(*like.columns)
-    except Exception:
-        return spark.createDataFrame([], like.schema)
+    except AnalysisException as e:
+        if e.getCondition() not in _NO_INDEX_YET:
+            raise RuntimeError(
+                f"cannot read the dedup index at {index_dir}: {e}"
+            ) from e
+    return spark.createDataFrame([], like.schema)
 
 
 def admit_batch(
@@ -245,9 +258,9 @@ def _admit_fingerprint_batch(
     )
 
     if existing_index is None and index_dir is None:
-        # _existing_index swallows read failures by design (first epoch
-        # has no index yet) — a None dir would silently probe an EMPTY
-        # index and admit every duplicate as fresh
+        # _existing_index reads a missing index as empty (first epoch)
+        # — a None dir would silently probe an EMPTY index and admit
+        # every duplicate as fresh
         raise ValueError(
             "either index_dir or existing_index must be provided"
         )
@@ -313,9 +326,7 @@ def admit_image_batch(
 
     bits = grid * (grid - 1)
     n_words = -(-bits // word_bits)
-    new_fp = multimodal.dhash_multiword_images(
-        batch_pay, grid=grid, word_bits=word_bits
-    )
+    new_fp = multimodal.dhash_images(batch_pay, grid=grid, word_bits=word_bits)
     return _admit_fingerprint_batch(
         spark,
         new_fp,
@@ -350,8 +361,6 @@ def admit_audio_batch(
     non-divisor widths, see dedup._multiword_band_layout), so the
     certified and default configs coincide (ADVICE r11). Index state:
     (doc_id, w0) ≈ 16 B/clip; PCM never leaves the decode map stage."""
-    from pyspark.sql import functions as F  # noqa: F811 (module-level too)
-
     from openstack_billing_from_db_spark.operators import multimodal
     from openstack_billing_from_db_spark.operators.dedup import (
         tune_hamming_band_bits,
@@ -361,9 +370,7 @@ def admit_audio_batch(
         band_bits = tune_hamming_band_bits(
             index_docs, bits=56, max_hamming=max_hamming
         )
-    new_fp = multimodal.audio_dhash(batch_pay).select(
-        "doc_id", F.col("ahash").alias("w0")
-    )
+    new_fp = multimodal.audio_dhash(batch_pay)
     return _admit_fingerprint_batch(
         spark,
         new_fp,
@@ -399,8 +406,9 @@ def admit_video_batch(
     ``max_hamming``). Admission is the shared min-id-canonical rule: a
     clip enters iff it has NO majority-match in the index and NO
     lower-id majority-match in its own batch. Index state:
-    (doc_id, frame_idx, dhash) ≈ 24 B/frame-row — video bytes never
-    leave the decode map stage. Returns ``(verdicts, additions)``;
+    (doc_id, frame_idx, w0) ≈ 24 B/frame-row — the one-word per-frame
+    fingerprint of :func:`multimodal.video_frame_dhash`; video bytes
+    never leave the decode map stage. Returns ``(verdicts, additions)``;
     ``verdicts`` is (doc_id, n_matches, best_frames_matched, admitted),
     ``additions`` the per-frame fingerprint rows to fold in.
 
@@ -413,16 +421,16 @@ def admit_video_batch(
         framewise_hamming_matches,
     )
 
-    # persist BEFORE framewise_hamming_matches caches its own projection
-    # of this plan: the inner tracked_persist captures its physical plan
-    # at call time, so persisting here lets it read the decoded frames
-    # from this cache instead of running the RVID decode a second time
     if existing_index is None and index_dir is None:
         raise ValueError(
             "either index_dir or existing_index must be provided"
         )
-    new_fp = tracked_persist(
-        multimodal.video_frame_dhash(batch_pay, n_samples=n_samples, grid=grid)
+    bits = grid * (grid - 1)
+    # one word per frame (framewise_hamming_matches' layout); the probe
+    # persists new_fp, and the verdicts and additions below read that
+    # cache, so the RVID decode runs once
+    new_fp = multimodal.video_frame_dhash(
+        batch_pay, n_samples=n_samples, grid=grid, word_bits=bits
     )
     existing = (
         existing_index.select(*new_fp.columns)
@@ -432,7 +440,7 @@ def admit_video_batch(
     matches = framewise_hamming_matches(
         existing,
         new_fp,
-        bits=grid * (grid - 1),
+        bits=bits,
         band_bits=band_bits,
         max_hamming=max_hamming,
         min_frames=min_frames,

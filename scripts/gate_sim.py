@@ -1,17 +1,20 @@
 """Driver-style correctness-gate simulation.
 
-Replays what the round driver does: a bare SparkSession (no extra conf),
-the FIRST 50 entries of ``__spark_entry__.queries()`` in order, each
-compared against its ``oracle_sql()`` run by DuckDB over the same
-parquet — rows, schema (column names), and canonicalized values.
+Replays the correctness gate: a bare SparkSession (no extra conf), the
+FIRST 50 entries of ``__spark_entry__.queries()`` in order (or the
+first ``first_n``, or only the queries named), each compared against
+its ``oracle_sql()`` run by DuckDB over the same parquet — rows, schema
+(column names), and canonicalized values.
 
 Canonicalization mirrors tests/test_oracle_parity.py: DuckDB via
 ``fetchall()`` (native ints + None — NEVER fetchdf, which floats
 nullable int64), floats rounded to 9 significant decimals, rows sorted
 by stringified tuple with columns sorted by name.
 
-Usage: python scripts/gate_sim.py [sf_dir] [first_n]
-Must run with cwd=/root/repo (Python workers resolve the package by cwd).
+Usage: python scripts/gate_sim.py [sf_dir] [first_n | name ...]
+  e.g. python scripts/gate_sim.py <sf_dir> q141_image_phash_dedup q145_video_phash_dedup
+SPARK_GRAFT_CPUS sets the local master width (default 32). Must run
+from the repository root (Python workers resolve the package by cwd).
 """
 
 from __future__ import annotations
@@ -59,13 +62,15 @@ def canon_rows(cols, rows):
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    first_n = int(sys.argv[2]) if len(sys.argv) > 2 else 50
+    picks = sys.argv[2:]
     import duckdb
     from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry_mod
 
-    spark = SparkSession.builder.master("local[32]").getOrCreate()
+    spark = SparkSession.builder.master(
+        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    ).getOrCreate()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -75,7 +80,10 @@ def main() -> int:
 
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
-    names = list(queries)[:first_n]
+    if len(picks) == 1 and picks[0].isdigit():
+        names = list(queries)[: int(picks[0])]
+    else:
+        names = picks or list(queries)[:50]
     n_pass = n_fail = 0
     for name in names:
         t0 = time.time()

@@ -381,3 +381,33 @@ def test_admit_image_batch_existing_index_hook(spark):
 
     with pytest.raises(ValueError, match="either index_dir or existing_index"):
         admit_image_batch(spark, pay([0]), None)
+
+
+def test_unreadable_index_refuses_instead_of_reading_empty(spark, tmp_path):
+    """An index directory that exists but cannot be read in the
+    producer's layout — here a one-word (doc_id, w0) index probed by the
+    two-word image stream — raises with the index path: reading it as
+    empty would admit every duplicate as fresh. A directory that does
+    not exist yet is still the first epoch's empty index."""
+    import pytest
+
+    from openstack_billing_from_db_spark.operators import multimodal
+    from openstack_billing_from_db_spark.streaming.dedup_stream import (
+        admit_image_batch,
+    )
+
+    pay = multimodal.synthesize_textured_image_payloads(
+        spark.createDataFrame([(0,), (1,)], "doc_id long"), grid=9
+    )
+    fresh, _ = admit_image_batch(spark, pay, str(tmp_path / "absent"))
+    assert {r.doc_id: r.admitted for r in fresh.collect()} == {
+        0: True,
+        1: False,
+    }
+
+    index_dir = str(tmp_path / "one_word_idx")
+    spark.createDataFrame([(0, 5)], "doc_id long, w0 long").write.parquet(
+        index_dir
+    )
+    with pytest.raises(RuntimeError, match="one_word_idx"):
+        admit_image_batch(spark, pay, index_dir)

@@ -363,12 +363,11 @@ def test_dhash_resize_fallback_and_family_hamming():
 
 def test_dhash_images_spark_matches_local(spark):
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
-    out = {
-        r.doc_id: r.dhash
-        for r in multimodal.dhash_images(
-            multimodal.synthesize_textured_image_payloads(docs)
-        ).collect()
-    }
+    fp = multimodal.dhash_images(
+        multimodal.synthesize_textured_image_payloads(docs)
+    )
+    assert fp.columns == ["doc_id", "w0"]  # 56 bits: one word
+    out = {r.doc_id: r.w0 for r in fp.collect()}
     for i in range(40):
         assert out[i] == media.dhash_pixels(media.synth_textured_pixels(i))
 
@@ -436,7 +435,7 @@ def test_dhash_multiword_images_spark_matches_local(spark):
     docs = spark.createDataFrame([(i,) for i in range(25)], "doc_id long")
     out = {
         r.doc_id: (r.w0, r.w1)
-        for r in multimodal.dhash_multiword_images(
+        for r in multimodal.dhash_images(
             multimodal.synthesize_textured_image_payloads(docs, grid=9),
             grid=9,
             word_bits=36,
@@ -460,6 +459,14 @@ def test_tune_hamming_band_bits_boundaries():
     assert dedup.tune_hamming_band_bits(128 * 2048, bits=56) == 11
     with pytest.raises(ValueError, match="widen the fingerprint"):
         dedup.tune_hamming_band_bits(128 * 2048 + 1, bits=56)
+    # a fingerprint that fits one word needs no divisor (no band can
+    # straddle words): the ladder's 1×56 first rung tunes like the
+    # bare 56-bit case, 11-bit bands up to 128 * 2^11 docs
+    assert dedup.tune_hamming_band_bits(262_144, bits=56, word_bits=56) == 11
+    with pytest.raises(ValueError, match="widen the fingerprint"):
+        dedup.tune_hamming_band_bits(262_145, bits=56, word_bits=56)
+    # several words still need the divisor: 72//5 = 14 and 13 skipped
+    assert dedup.tune_hamming_band_bits(300_000, bits=72, word_bits=36) == 12
     # multiword 72-bit: width must divide word_bits (14, 13 skipped)
     assert dedup.tune_hamming_band_bits(50, bits=72, word_bits=36) == 12
     assert dedup.tune_hamming_band_bits(128 * 4096, bits=72, word_bits=36) == 12
@@ -488,24 +495,17 @@ def test_single_word_non_divisor_bands(spark):
     Both the multiword kernel at (n_words=1, band_bits=11) and
     simhash_near_duplicates at band_bits=11 must emit exactly the
     all-pairs brute-force set at hamming ≤ 4 (5 bands > 4: exact recall)."""
-    import itertools
-
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
     fp = multimodal.audio_dhash(
         multimodal.synthesize_family_audio_payloads(docs)
     )
-    h = {r.doc_id: r.ahash for r in fp.collect()}
-    want = {
-        (a, b): bin(h[a] ^ h[b]).count("1")
-        for a, b in itertools.combinations(sorted(h), 2)
-        if bin(h[a] ^ h[b]).count("1") <= 4
-    }
+    want = _brute_force_pairs(fp)
     assert want == {
         (r.doc_a, r.doc_b): r.hamming
         for r in dedup.simhash_near_duplicates(
-            fp.select("doc_id", F.col("ahash").alias("simhash")),
+            fp.select("doc_id", F.col("w0").alias("simhash")),
             bits=56,
             band_bits=11,
             max_hamming=4,
@@ -514,7 +514,7 @@ def test_single_word_non_divisor_bands(spark):
     got = {
         (r.doc_a, r.doc_b): r.hamming
         for r in dedup.multiword_hamming_pairs(
-            fp.select("doc_id", F.col("ahash").alias("w0")),
+            fp,
             n_words=1,
             word_bits=56,
             band_bits=11,
@@ -526,11 +526,7 @@ def test_single_word_non_divisor_bands(spark):
     # multi-word fingerprints still require the divisor (straddle guard)
     with pytest.raises(ValueError, match="divide"):
         dedup.multiword_hamming_pairs(
-            fp.select(
-                "doc_id",
-                F.col("ahash").alias("w0"),
-                F.lit(0).alias("w1"),
-            ),
+            fp.select("doc_id", "w0", F.lit(0).alias("w1")),
             n_words=2,
             word_bits=36,
             band_bits=11,
@@ -538,10 +534,7 @@ def test_single_word_non_divisor_bands(spark):
     # band wider than the word refuses
     with pytest.raises(ValueError, match="wider than word_bits"):
         dedup.multiword_hamming_pairs(
-            fp.select("doc_id", F.col("ahash").alias("w0")),
-            n_words=1,
-            word_bits=56,
-            band_bits=60,
+            fp, n_words=1, word_bits=56, band_bits=60
         )
 
 
@@ -592,6 +585,35 @@ def test_multiword_hamming_pairs_padding_bands(spark):
         )
 
 
+def _brute_force_pairs(fp, *, min_frames=None, max_hamming=4):
+    """All-pairs ``popcount(w0a ^ w0b) <= max_hamming`` over a
+    producer's one-word rows: {(a, b): hamming} for (doc_id, w0) rows;
+    with ``min_frames``, {(a, b): n_frames_matched} for
+    (doc_id, frame_idx, w0) rows matching on ≥ ``min_frames`` frame
+    positions."""
+    import itertools
+
+    def ham(x, y):
+        return bin(x ^ y).count("1")
+
+    rows = fp.collect()
+    if min_frames is None:
+        h = {r.doc_id: r.w0 for r in rows}
+        dist = {
+            (a, b): ham(h[a], h[b])
+            for a, b in itertools.combinations(sorted(h), 2)
+        }
+        return {p: d for p, d in dist.items() if d <= max_hamming}
+    h = {(r.doc_id, r.frame_idx): r.w0 for r in rows}
+    ids = sorted({d for d, _ in h})
+    frames = sorted({f for _, f in h})
+    n_match = {
+        (a, b): sum(ham(h[(a, f)], h[(b, f)]) <= max_hamming for f in frames)
+        for a, b in itertools.combinations(ids, 2)
+    }
+    return {p: n for p, n in n_match.items() if n >= min_frames}
+
+
 def test_phash_near_duplicates_selects_by_corpus_size(spark):
     """The composed perceptual-dedup entry point picks its fingerprint
     and band width from the corpus size: single-BIGINT 56-bit dHash
@@ -607,19 +629,22 @@ def test_phash_near_duplicates_selects_by_corpus_size(spark):
     def pairs(df):
         return {(r.doc_a, r.doc_b): r.hamming for r in df.collect()}
 
-    # small corpus -> 56-bit single-word path at the tuned width (11)
+    # small corpus -> the ladder's first rung: the 56-bit one-word dHash
+    # at the tuned 11-bit bands; 5 bands > max_hamming makes the banding
+    # exact (pigeonhole), so the output IS the producer's brute force
     got_small = pairs(multimodal.phash_near_duplicates(pay, n_docs=40))
-    want_small = pairs(
+    fp = multimodal.dhash_images(pay)
+    want_small = _brute_force_pairs(fp)
+    assert got_small == want_small and got_small
+    # ... and the text simhash kernel over the same word agrees
+    assert want_small == pairs(
         dedup.simhash_near_duplicates(
-            multimodal.dhash_images(pay, grid=8).select(
-                "doc_id", F.col("dhash").alias("simhash")
-            ),
+            fp.select("doc_id", F.col("w0").alias("simhash")),
             bits=56,
             band_bits=11,
             max_hamming=4,
         )
     )
-    assert got_small == want_small and got_small
     # n_docs=None counts the corpus itself -> same small-path output
     assert pairs(multimodal.phash_near_duplicates(pay)) == want_small
 
@@ -627,7 +652,7 @@ def test_phash_near_duplicates_selects_by_corpus_size(spark):
     got_big = pairs(multimodal.phash_near_duplicates(pay, n_docs=300_000))
     want_big = pairs(
         dedup.multiword_hamming_pairs(
-            multimodal.dhash_multiword_images(pay, grid=9, word_bits=36),
+            multimodal.dhash_images(pay, grid=9, word_bits=36),
             n_words=2,
             word_bits=36,
             band_bits=12,
@@ -644,7 +669,7 @@ def test_phash_near_duplicates_selects_by_corpus_size(spark):
     # the explicit three-word kernel, margin drift included.
     want_3w = pairs(
         dedup.multiword_hamming_pairs(
-            multimodal.dhash_multiword_images(pay, grid=12, word_bits=44),
+            multimodal.dhash_images(pay, grid=12, word_bits=44),
             n_words=3,
             word_bits=44,
             band_bits=22,
@@ -686,7 +711,7 @@ def test_audio_family_hamming_and_spark_matches_local(spark):
 
     docs = spark.createDataFrame([(i,) for i in range(30)], "doc_id long")
     out = {
-        r.doc_id: r.ahash
+        r.doc_id: r.w0
         for r in multimodal.audio_dhash(
             multimodal.synthesize_family_audio_payloads(docs)
         ).collect()
@@ -715,8 +740,7 @@ def test_video_family_frame_majority(spark):
     got = {
         (r.doc_a, r.doc_b): r.n_frames_matched
         for r in framewise_multiword_hamming_pairs(
-            fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
-            n_words=1, word_bits=56, band_bits=11, max_hamming=4,
+            fp, n_words=1, word_bits=56, band_bits=11, max_hamming=4,
             min_frames=2,
         ).collect()
     }
@@ -733,7 +757,7 @@ def test_video_family_frame_majority(spark):
     assert all(a // 5 == b // 5 for a, b in got)
     # per-frame Spark hash equals the local closed form
     out = {
-        (r.doc_id, r.frame_idx): r.dhash for r in fp.collect()
+        (r.doc_id, r.frame_idx): r.w0 for r in fp.collect()
     }
     for i in (0, 3, 4, 7):
         frames = media.synth_family_video_frames(i)
@@ -918,7 +942,7 @@ def test_framewise_hamming_matches_bucket_cap(spark):
             fp[(d, f)] = h(100 + d)
 
     rows = [(d, f, v) for (d, f), v in fp.items()]
-    union = spark.createDataFrame(rows, "doc_id long, frame_idx int, dhash long")
+    union = spark.createDataFrame(rows, "doc_id long, frame_idx int, w0 long")
     existing = union.filter(union.doc_id < 10)
     new = union.filter(union.doc_id >= 10)
 
@@ -961,11 +985,16 @@ def test_audio_near_duplicates_selects_by_corpus_size(spark):
     def pairs(df):
         return {(r.doc_a, r.doc_b): r.hamming for r in df.collect()}
 
+    # first rung: the 57-frame / 56-bit one-word hash over the wide
+    # fixture, exact by pigeonhole -> the producer's brute force
     got_small = pairs(multimodal.audio_near_duplicates(pay, n_docs=30))
-    assert got_small  # 56-bit mesh over the wide fixture still pairs
+    assert got_small == _brute_force_pairs(multimodal.audio_dhash(pay))
+    assert got_small
     want_wide = pairs(
         dedup.multiword_hamming_pairs(
-            multimodal.audio_dhash_multiword(pay),
+            multimodal.audio_dhash(
+                pay, n_frames=media.WIDE_AUDIO_FRAMES, word_bits=36
+            ),
             n_words=2,
             word_bits=36,
             band_bits=12,
@@ -989,7 +1018,7 @@ def test_audio_near_duplicates_selects_by_corpus_size(spark):
     # the finer mesh)
     want_3w = pairs(
         dedup.multiword_hamming_pairs(
-            multimodal.audio_dhash_multiword(
+            multimodal.audio_dhash(
                 pay, n_frames=multimodal.XWIDE_AUDIO_FRAMES, word_bits=44
             ),
             n_words=3,
@@ -1025,9 +1054,15 @@ def test_video_near_duplicates_selects_by_corpus_size(spark):
             (r.doc_a, r.doc_b): r.n_frames_matched for r in df.collect()
         }
 
+    # first rung: the 56-bit one-word per-frame dHash, exact by
+    # pigeonhole -> the producer's brute force with the 2-of-3 majority
+    got_small = pairs(multimodal.video_near_duplicates(pay, n_docs=10))
+    fp = multimodal.video_frame_dhash(pay)
+    assert got_small == _brute_force_pairs(fp, min_frames=2) and got_small
+
     want_wide = pairs(
         dedup.framewise_multiword_hamming_pairs(
-            multimodal.video_frame_dhash_multiword(pay),
+            multimodal.video_frame_dhash(pay, grid=9, word_bits=36),
             n_words=2,
             word_bits=36,
             band_bits=12,
@@ -1055,9 +1090,7 @@ def test_video_near_duplicates_selects_by_corpus_size(spark):
     # must equal the explicit three-word framewise kernel)
     want_3w = pairs(
         dedup.framewise_multiword_hamming_pairs(
-            multimodal.video_frame_dhash_multiword(
-                pay, grid=12, word_bits=44
-            ),
+            multimodal.video_frame_dhash(pay, grid=12, word_bits=44),
             n_words=3,
             word_bits=44,
             band_bits=22,
@@ -1102,7 +1135,7 @@ def test_chunked_hamming_pairs_equals_single_pass(spark):
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(40)], "doc_id long")
-    fp = multimodal.dhash_multiword_images(
+    fp = multimodal.dhash_images(
         multimodal.synthesize_textured_image_payloads(docs),
         grid=9,
         word_bits=36,
@@ -1182,28 +1215,18 @@ def test_framewise_multiword_matches_narrow_kernel(spark):
     frame-majority set — every frame position compared for every pair
     at hamming ≤ 4 — at the tuned 11-bit bands (non-divisor, 5 bands)
     and at 8-bit bands (divisor, 7 bands): exact recall either way."""
-    import itertools
-
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(10)], "doc_id long")
     fp = multimodal.video_frame_dhash(
         multimodal.synthesize_family_video_payloads(docs), n_samples=3
     )
-    h = {(r.doc_id, r.frame_idx): r.dhash for r in fp.collect()}
-    ids = sorted({d for d, _ in h})
-    n_match = {
-        (a, b): sum(
-            bin(h[(a, f)] ^ h[(b, f)]).count("1") <= 4 for f in range(3)
-        )
-        for a, b in itertools.combinations(ids, 2)
-    }
-    want = {p: n for p, n in n_match.items() if n >= 2}
+    want = _brute_force_pairs(fp, min_frames=2)
     for band_bits in (11, 8):
         got = {
             (r.doc_a, r.doc_b): r.n_frames_matched
             for r in dedup.framewise_multiword_hamming_pairs(
-                fp.select("doc_id", "frame_idx", F.col("dhash").alias("w0")),
+                fp,
                 n_words=1,
                 word_bits=56,
                 band_bits=band_bits,
@@ -1448,7 +1471,7 @@ def test_three_word_plan_shapes(spark):
     from openstack_billing_from_db_spark.operators import dedup
 
     docs = spark.createDataFrame([(i,) for i in range(15)], "doc_id long")
-    fp = multimodal.dhash_multiword_images(
+    fp = multimodal.dhash_images(
         multimodal.synthesize_textured_image_payloads(docs, grid=12),
         grid=12,
         word_bits=44,

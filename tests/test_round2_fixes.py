@@ -391,9 +391,7 @@ def _words(fp, parity=None):
 
 
 def _frames(fp, parity):
-    return _words(fp, parity).select(
-        "doc_id", "frame_idx", F.col("w0").alias("dhash")
-    )
+    return _words(fp, parity).drop("w1")
 
 
 _TWO = dict(n_words=2, word_bits=32, band_bits=8)
