@@ -8,16 +8,8 @@ Money never transits a double.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
-
-def cost(rate: Column, su_hours: Column) -> Column:
-    """rate ($/SU-hr, decimal) × su_hours (bigint) → decimal cost
-    (reference billing.py:64-85 ``rate * hours``)."""
-    return rate * su_hours
-
-
-def round_money(col: Column, scale: int = 2) -> Column:
-    """HALF_UP rounding to cents (reference billing.py:202)."""
-    return F.round(col, scale)
+def round_money(col: str, scale: int = 2) -> str:
+    """HALF_UP rounding to cents (reference billing.py:202), as SQL text
+    over the decimal expression ``col``."""
+    return f"round({col}, {scale})"

@@ -2,14 +2,12 @@
 
 The reference parses the ``pci_requests`` JSON string per row with
 ``json.loads`` (model.py:247-254) and derives the flavor's SU type/count
-imperatively. Here both are native Column expressions — ``from_json`` plus
-CASE arithmetic — so they stay inside whole-stage codegen.
+imperatively. Here both are native SQL expressions — ``from_json`` plus
+CASE arithmetic, returned as SQL text over column names — so they stay
+inside whole-stage codegen.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.schemas import PCI_REQUESTS
 
@@ -18,16 +16,15 @@ from openstack_billing_from_db_spark.schemas import PCI_REQUESTS
 ACCEPTED_GPU_ALIASES = ("a100", "a100-sxm4", "v100", "k80")
 
 
-def parse_pci_requests(pci_col: Column | str) -> Column:
+def parse_pci_requests(pci_col: str) -> str:
     """JSON string → array<struct<count,alias_name>>; malformed input
     parses to null, matching the reference's TypeError→warn+None path
     (model.py:247-254)."""
-    col = F.col(pci_col) if isinstance(pci_col, str) else pci_col
-    return F.from_json(col, PCI_REQUESTS)
+    return f"from_json({pci_col}, '{PCI_REQUESTS.simpleString()}')"
 
 
-def service_unit_columns(pci_col: Column | str, vcpus: Column | str, memory_mb: Column | str):
-    """Returns (su_type, gpu_count, service_units, quarantine) columns.
+def service_unit_columns(pci_col: str, vcpus: str, memory_mb: str) -> tuple[str, str, str, str]:
+    """Returns (su_type, gpu_count, service_units, quarantine) expressions.
 
     - su_type: ``gpu_{alias with '-' removed}`` (model.py:207) or ``cpu``.
     - gpu_count: ``int(pci[0]['count'])`` (model.py:206), 0 for CPU.
@@ -37,35 +34,30 @@ def service_unit_columns(pci_col: Column | str, vcpus: Column | str, memory_mb: 
       multiple pci entries (model.py:199-202) or an unaccepted alias
       (model.py:203-204). At scale a bad row must not kill the job;
       callers fail or divert on ``quarantine IS NOT NULL``.
+
+    The first entry is read with ``get`` (null when the array is empty):
+    under ANSI mode ``pci[0]`` raises on an empty array wherever the
+    optimizer evaluates it ahead of its guard.
     """
     pci = parse_pci_requests(pci_col)
-    vc = F.col(vcpus) if isinstance(vcpus, str) else vcpus
-    mem = F.col(memory_mb) if isinstance(memory_mb, str) else memory_mb
-
-    alias_lower = F.lower(pci[0]["alias_name"])
-    has_gpu = pci.isNotNull() & (F.size(pci) >= 1)
+    alias = f"lower(get({pci}, 0).alias_name)"
+    has_gpu = f"{pci} IS NOT NULL AND size({pci}) >= 1"
+    accepted = ", ".join(f"'{a}'" for a in ACCEPTED_GPU_ALIASES)
     quarantine = (
-        F.when(pci.isNotNull() & (F.size(pci) > 1), F.lit("multiple pci_requests entries"))
-        .when(
-            has_gpu & ~alias_lower.isin(*ACCEPTED_GPU_ALIASES),
-            F.concat(F.lit("unsupported gpu alias: "), alias_lower),
-        )
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN {pci} IS NOT NULL AND size({pci}) > 1 THEN 'multiple pci_requests entries'"
+        f" WHEN {has_gpu} AND {alias} NOT IN ({accepted})"
+        f" THEN concat('unsupported gpu alias: ', {alias}) END"
     )
-    su_type = F.when(
-        has_gpu & quarantine.isNull(),
-        F.concat(F.lit("gpu_"), F.regexp_replace(alias_lower, "-", "")),
-    ).otherwise(F.lit("cpu"))
-    gpu_count = F.when(
-        has_gpu & quarantine.isNull(), pci[0]["count"].cast("int")
-    ).otherwise(F.lit(0))
-    service_units = service_units_expr(gpu_count, vc, mem)
+    billed_gpu = f"{has_gpu} AND ({quarantine}) IS NULL"
+    su_type = f"CASE WHEN {billed_gpu} THEN concat('gpu_', replace({alias}, '-', '')) ELSE 'cpu' END"
+    gpu_count = f"CASE WHEN {billed_gpu} THEN CAST(get({pci}, 0).`count` AS INT) ELSE 0 END"
+    service_units = service_units_expr(gpu_count, vcpus, memory_mb)
     return su_type, gpu_count, service_units, quarantine
 
 
-def service_units_expr(gpu_count: Column, vcpus: Column, memory_mb: Column) -> Column:
+def service_units_expr(gpu_count: str, vcpus: str, memory_mb: str) -> str:
     """``gpu_count or int(max(vcpus, memory/4096))`` (model.py:41-46).
     Python ``int()`` truncates toward zero; values are non-negative so
     floor matches."""
-    cpu_su = F.floor(F.greatest(vcpus.cast("double"), memory_mb.cast("double") / F.lit(4096.0))).cast("int")
-    return F.when(gpu_count > 0, gpu_count).otherwise(cpu_su)
+    cpu_su = f"CAST(floor(greatest(CAST({vcpus} AS DOUBLE), CAST({memory_mb} AS DOUBLE) / 4096D)) AS INT)"
+    return f"CASE WHEN {gpu_count} > 0 THEN {gpu_count} ELSE {cpu_su} END"

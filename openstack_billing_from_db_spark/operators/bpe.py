@@ -30,14 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openstack_billing_from_db_spark.functions.sql import sql_string
 from openstack_billing_from_db_spark.operators.caching import tracked_persist
 from openstack_billing_from_db_spark.operators.dedup import _word_shingles_sql
 from openstack_billing_from_db_spark.operators.text import words
-
-
-def _sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal (backslash escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _apply_merge_sql(syms: str, pair: str, merged: str) -> str:
@@ -59,7 +55,7 @@ def _apply_merge_sql(syms: str, pair: str, merged: str) -> str:
     wrap and halving the separators."""
     enc = f"concat(' ', replace({syms}, ' ', '  '), ' ')"
     target = " " + pair.replace(" ", "  ") + " "
-    applied = f"replace({enc}, {_sql_str(target)}, {_sql_str(' ' + merged + ' ')})"
+    applied = f"replace({enc}, {sql_string(target)}, {sql_string(' ' + merged + ' ')})"
     return f"replace(btrim({applied}), '  ', ' ')"
 
 

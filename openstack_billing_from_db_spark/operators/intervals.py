@@ -1,16 +1,15 @@
-"""Interval-overlap arithmetic in integer microseconds.
+"""Interval-overlap arithmetic in integer microseconds, as SQL fragments.
 
 All session math runs on ``unix_micros`` BIGINTs — exact, portable
 (DuckDB ``epoch_us`` matches bit-for-bit), and immune to float-summation
-order. Seconds/hours are derived at the edges only.
+order. Seconds/hours are derived at the edges only. The helpers return
+Spark SQL text over column names: operators apply them with
+``selectExpr`` / ``where``, a Column caller wraps them in ``F.expr``.
 """
 
 from __future__ import annotations
 
 from datetime import datetime, timezone
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 MICROS_PER_SECOND = 1_000_000
 MICROS_PER_HOUR = 3_600_000_000
@@ -31,12 +30,19 @@ def to_micros(t: datetime) -> int:
     return (delta.days * 86_400 + delta.seconds) * MICROS_PER_SECOND + delta.microseconds
 
 
+def timestamp_sql(t: datetime) -> str:
+    """``t`` as a TIMESTAMP literal, naive meaning UTC as in ``to_micros``
+    (``F.lit(naive datetime)`` would read it in the driver's local time
+    zone)."""
+    return f"timestamp_micros({to_micros(t)}L)"
+
+
 def overlap_micros(
-    start_us: Column,
-    end_us: Column,
-    lo_us: Column | int,
-    hi_us: Column | int,
-) -> Column:
+    start_us: str,
+    end_us: str,
+    lo_us: str | int,
+    hi_us: str | int,
+) -> str:
     """max(0, min(end, hi) - max(start, lo)) — the length of
     ``[start,end) ∩ [lo,hi)``.
 
@@ -45,19 +51,15 @@ def overlap_micros(
     into ``[lo,hi]`` and accumulating exit−enter is exactly the sum of
     interval∩window overlaps (SURVEY.md §2.5 equivalence note).
     """
-    lo = F.lit(lo_us) if isinstance(lo_us, int) else lo_us
-    hi = F.lit(hi_us) if isinstance(hi_us, int) else hi_us
-    return F.greatest(F.lit(0).cast("long"), F.least(end_us, hi) - F.greatest(start_us, lo))
+    return f"greatest(0L, least({end_us}, {hi_us}) - greatest({start_us}, {lo_us}))"
 
 
-def ceil_hours(micros: Column) -> Column:
-    """ceil(seconds/3600) as ``(us + 3599999999) div 3600000000`` —
-    exact integer arithmetic (reference billing.py:147
-    ``math.ceil(runtime_seconds / 3600)``).
+def ceil_hours(micros: str) -> str:
+    """ceil(seconds/3600) as ``floor((us + 3599999999) / 3600000000)``
+    (reference billing.py:147 ``math.ceil(runtime_seconds / 3600)``).
 
     floor of a double division is safe here: runtime micros are bounded
     by the billing window (≪ 2^53), and the fractional remainder
     (≤ (H-1)/H) cannot round up across an integer boundary.
     """
-    bumped = micros + F.lit(MICROS_PER_HOUR - 1)
-    return F.floor(bumped / F.lit(MICROS_PER_HOUR)).cast("long")
+    return f"floor(({micros} + {MICROS_PER_HOUR - 1}L) / {MICROS_PER_HOUR}L)"

@@ -7,13 +7,17 @@ into the query window. That is O(events) driver-side work per instance
 per window — and it is re-run from scratch for every outage interval
 (billing.py:95-100).
 
-Here the same semantics are three declarative steps, each distributed:
+Here the same semantics are three declarative steps, each distributed,
+each written once as SQL text (the trigger CASE, the ``lead`` window,
+the delete clamp, the clamped overlap) and applied with ``selectExpr`` /
+``where``: building the plan costs a few py4j round trips per step
+instead of several per ``F.*`` call.
 
 1. ``map_event_states``   — action/message → state (a CASE expression;
    reference trigger table model.py:141-150, Error path model.py:100-107)
    over the Nova ``instance_actions`` columns (instance_uuid, created_at,
    action, message).
-2. ``build_state_intervals`` — lag/lead over (id, ts): each trigger event
+2. ``build_state_intervals`` — lead over (id, ts): each trigger event
    opens a state interval ``[ts, next_trigger_ts)``; the last interval is
    open-ended. Window-independent, so intervals are computed ONCE and
    reused for every billing window and every outage interval.
@@ -76,9 +80,10 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Iterable, Mapping, Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from openstack_billing_from_db_spark.functions.sql import sql_string
 from openstack_billing_from_db_spark.operators.intervals import (
     TS_MAX_US,
     overlap_micros,
@@ -114,23 +119,16 @@ def map_event_states(
     ``event_ts`` is a ``TIMESTAMP``: a ``TIMESTAMP_NTZ`` ``created_at``
     (naive parquet) is cast, which keeps its instants in the UTC session.
     """
-    # build the CASE from the trigger table; Error checked first
-    expr = None
-    if message_col is not None:
-        expr = F.when(F.col(message_col) == "Error", F.lit("Error"))
-    for action, st in trigger_states.items():
-        cond = F.col("action") == action
-        expr = F.when(cond, F.lit(st)) if expr is None else expr.when(cond, F.lit(st))
-    state = expr.otherwise(F.lit(None))
-    return (
-        events.withColumn("state", state)
-        .filter(F.col("state").isNotNull())
-        .select(
-            F.col("instance_uuid"),
-            F.col("created_at").cast("timestamp").alias("event_ts"),
-            F.col("state"),
-        )
-    )
+    whens = [f"WHEN `{message_col}` = 'Error' THEN 'Error'"] if message_col is not None else []
+    whens += [
+        f"WHEN action = {sql_string(action)} THEN {sql_string(st)}"
+        for action, st in trigger_states.items()
+    ]
+    return events.selectExpr(
+        "instance_uuid",
+        "CAST(created_at AS TIMESTAMP) AS event_ts",
+        f"CASE {' '.join(whens)} END AS state",
+    ).where("state IS NOT NULL")
 
 
 def with_synthetic_deletes(states: DataFrame, instances: DataFrame) -> DataFrame:
@@ -143,16 +141,16 @@ def with_synthetic_deletes(states: DataFrame, instances: DataFrame) -> DataFrame
     No invoice path calls this: ``end_at_deletion`` gives the same
     runtimes from one read of the dimension. It stays as the reference
     formulation the clamp is tested against."""
-    synthetic = (
-        instances.filter(F.col("deleted_at").isNotNull())
-        .select(
-            F.col("uuid").alias("instance_uuid"),
-            F.col("deleted_at").alias("event_ts"),
-            F.lit("Deleted").alias("state"),
-            F.lit(1).alias("__order"),
-        )
+    synthetic = instances.where("deleted_at IS NOT NULL").selectExpr(
+        "uuid AS instance_uuid", "deleted_at AS event_ts", "'Deleted' AS state", "1 AS __order"
     )
-    return states.withColumn("__order", F.lit(0)).unionByName(synthetic)
+    return states.selectExpr("*", "0 AS __order").unionByName(synthetic)
+
+
+def _event_order(states: DataFrame) -> str:
+    """Window ORDER BY: event time, then ``__order`` (only
+    ``with_synthetic_deletes`` adds it) to break timestamp ties."""
+    return "event_ts, __order" if "__order" in states.columns else "event_ts"
 
 
 def build_state_intervals(states: DataFrame) -> DataFrame:
@@ -161,20 +159,14 @@ def build_state_intervals(states: DataFrame) -> DataFrame:
     Output: (instance_uuid, state, start_us, end_us); the last interval
     per id is open (end_us = TS_MAX_US) — the reference closes it at each
     query window's end (model.py:127), which the overlap clamp reproduces
-    for any window. An ``__order`` column (only ``with_synthetic_deletes``
-    adds one) breaks timestamp ties.
+    for any window.
     """
-    order_cols = [F.col("event_ts")]
-    if "__order" in states.columns:
-        order_cols.append(F.col("__order"))
-    w = Window.partitionBy("instance_uuid").orderBy(*order_cols)
-    return states.select(
+    return states.selectExpr(
         "instance_uuid",
         "state",
-        F.unix_micros(F.col("event_ts")).alias("start_us"),
-        F.coalesce(
-            F.unix_micros(F.lead("event_ts").over(w)), F.lit(TS_MAX_US)
-        ).alias("end_us"),
+        "unix_micros(event_ts) AS start_us",
+        "coalesce(unix_micros(lead(event_ts) OVER"
+        f" (PARTITION BY instance_uuid ORDER BY {_event_order(states)})), {TS_MAX_US}L) AS end_us",
     )
 
 
@@ -184,8 +176,10 @@ def end_at_deletion(intervals: DataFrame) -> DataFrame:
     deleted_us < end_us`` (intervals of one id are contiguous, so at most
     one qualifies). ``deleted_us`` is a column of ``intervals``; where it
     is null nothing changes."""
-    d, s, e = F.col("deleted_us"), F.col("start_us"), F.col("end_us")
-    return intervals.withColumn("end_us", F.when((s <= d) & (d < e), d).otherwise(e))
+    return intervals.withColumn(
+        "end_us",
+        F.expr("CASE WHEN start_us <= deleted_us AND deleted_us < end_us THEN deleted_us ELSE end_us END"),
+    )
 
 
 def build_state_intervals_bucketed(states: DataFrame) -> DataFrame:
@@ -204,40 +198,33 @@ def build_state_intervals_bucketed(states: DataFrame) -> DataFrame:
     Output is row-for-row identical to the single-pass operator (pinned by
     tests/test_sessionize_bucketed.py on random and hot-key data).
     """
-    order_cols = [F.col("event_ts")]
-    if "__order" in states.columns:
-        order_cols.append(F.col("__order"))
-    with_bucket = states.withColumn("__bucket", F.date_trunc("month", F.col("event_ts")))
-
-    w1 = Window.partitionBy("instance_uuid", "__bucket").orderBy(*order_cols)
-    local = with_bucket.select(
+    order = _event_order(states)
+    with_bucket = states.selectExpr("*", "date_trunc('month', event_ts) AS __bucket")
+    local = with_bucket.selectExpr(
         "instance_uuid",
         "__bucket",
         "state",
-        F.unix_micros(F.col("event_ts")).alias("start_us"),
-        F.unix_micros(F.lead("event_ts").over(w1)).alias("end_us"),  # null = bucket tail
+        "unix_micros(event_ts) AS start_us",
+        # null = bucket tail
+        "unix_micros(lead(event_ts) OVER"
+        f" (PARTITION BY instance_uuid, __bucket ORDER BY {order})) AS end_us",
     )
 
     # one summary row per (id, bucket): when does the NEXT bucket start?
-    summaries = (
+    next_start = (
         with_bucket.groupBy("instance_uuid", "__bucket")
-        .agg(F.min(F.unix_micros("event_ts")).alias("first_us"))
-    )
-    w2 = Window.partitionBy("instance_uuid").orderBy("__bucket")
-    next_start = summaries.select(
-        "instance_uuid",
-        "__bucket",
-        F.lead("first_us").over(w2).alias("next_first_us"),
-    )
-
-    return (
-        local.join(next_start, ["instance_uuid", "__bucket"])
-        .select(
+        .agg(F.expr("min(unix_micros(event_ts)) AS first_us"))
+        .selectExpr(
             "instance_uuid",
-            "state",
-            "start_us",
-            F.coalesce("end_us", "next_first_us", F.lit(TS_MAX_US)).alias("end_us"),
+            "__bucket",
+            "lead(first_us) OVER (PARTITION BY instance_uuid ORDER BY __bucket) AS next_first_us",
         )
+    )
+    return local.join(next_start, ["instance_uuid", "__bucket"]).selectExpr(
+        "instance_uuid",
+        "state",
+        "start_us",
+        f"coalesce(end_us, next_first_us, {TS_MAX_US}L) AS end_us",
     )
 
 
@@ -252,23 +239,22 @@ def state_micros_in_window(
     """Per-id microseconds in each billed state within ``[start, end)``,
     minus each outage interval's overlap (reference billing.py:88-102).
 
-    Outage math is inline column arithmetic over interval bounds — the
-    outage dimension is a handful of driver-side tuples, so it is folded
-    into the projection rather than joined (zero extra shuffles; the
-    groupBy reuses the window's hash partitioning on id). ``keys`` are
-    the grouping columns: ``instance_uuid`` first, then any per-id
-    columns to carry through. Output columns: ``keys``, ``running_us``,
-    ``stopped_us``.
+    Outage math is inline arithmetic over interval bounds, one overlap
+    term per outage — the outage dimension is a handful of driver-side
+    tuples, so it is folded into the projection rather than joined (zero
+    extra shuffles; the groupBy reuses the window's hash partitioning on
+    id). ``keys`` are the grouping columns: ``instance_uuid`` first, then
+    any per-id columns to carry through. Output columns: ``keys``,
+    ``running_us``, ``stopped_us``.
     """
-    w0, w1 = to_micros(window_start), to_micros(window_end)
-    s, e = F.col("start_us"), F.col("end_us")
-    net = overlap_micros(s, e, w0, w1)
-    for o_start, o_end in outages:
-        net = net - overlap_micros(s, e, to_micros(o_start), to_micros(o_end))
-
-    aggs = [
-        F.sum(F.when(F.col("state") == st, net).otherwise(F.lit(0).cast("long")))
-        .alias(f"{st.lower()}_us")
-        for st in BILLED_STATES
-    ]
-    return intervals.groupBy(*keys).agg(*aggs)
+    terms = [(window_start, window_end), *outages]
+    net = " - ".join(
+        overlap_micros("start_us", "end_us", to_micros(lo), to_micros(hi)) for lo, hi in terms
+    )
+    # grouped by resolved columns: one py4j call each, where a name costs three
+    return intervals.groupBy(*[intervals[k] for k in keys]).agg(
+        *[
+            F.expr(f"sum(CASE WHEN state = '{st}' THEN {net} ELSE 0L END) AS {st.lower()}_us")
+            for st in BILLED_STATES
+        ]
+    )

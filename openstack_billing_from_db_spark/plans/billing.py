@@ -22,19 +22,29 @@ then project) — no driver-side loops over data and no Python UDFs. The
 rate card, like the outages, is a handful of driver-side values: it is
 collected (a local relation, so no job) and folded into the projection
 instead of joined.
+
+Every expression is SQL text, defined once by the helpers in
+``operators/`` and ``functions/`` and applied with ``selectExpr`` /
+``where``. Building the plan is then a few py4j round trips per
+DataFrame step instead of several per ``F.*`` call: an invoice plan
+(dimension, invoice, CSV rows) costs about 200 round trips, not 2,500.
+The steps stay separate DataFrame calls on purpose — ``spark.sql`` over
+the inputs would register a temporary view per input and analyse the
+whole text again, for no saving.
 """
 
 from __future__ import annotations
 
-from datetime import datetime
-from typing import Iterable, Mapping
+from datetime import datetime, timezone
+from typing import Iterable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.functions.money import round_money
+from openstack_billing_from_db_spark.functions.sql import sql_string
 from openstack_billing_from_db_spark.functions.su import service_unit_columns
-from openstack_billing_from_db_spark.operators.intervals import ceil_hours
+from openstack_billing_from_db_spark.operators.intervals import ceil_hours, timestamp_sql
 from openstack_billing_from_db_spark.operators.sessionize import (
     DEFAULT_TRIGGER_STATES,
     build_state_intervals,
@@ -50,22 +60,23 @@ def _runtime(
     window_start: datetime,
     window_end: datetime,
     instances: DataFrame | None,
+    carried: Sequence[str],
     how: str,
     outages: Iterable[tuple[datetime, datetime]],
     trigger_states: Mapping[str, str],
     message_col: str | None,
 ) -> DataFrame:
-    """``instance_runtime`` with the dimension join type as a parameter."""
+    """``instance_runtime`` with the carried dimension columns and the
+    dimension join type as parameters."""
     intervals = build_state_intervals(
         map_event_states(actions, trigger_states=trigger_states, message_col=message_col)
     )
     keys = ["instance_uuid"]
     if instances is not None:
-        carried = [c for c in instances.columns if c not in ("uuid", "deleted_at")]
-        dim = instances.select(
-            F.col("uuid").alias("instance_uuid"),
-            F.unix_micros(F.col("deleted_at").cast("timestamp")).alias("deleted_us"),
-            *carried,
+        dim = instances.selectExpr(
+            "uuid AS instance_uuid",
+            "unix_micros(CAST(deleted_at AS TIMESTAMP)) AS deleted_us",
+            *[f"`{c}`" for c in carried],
         )
         # broadcast: the intervals keep their id partitioning into the
         # per-instance aggregate (an inner join could otherwise build on them)
@@ -93,11 +104,15 @@ def instance_runtime(
     per-instance aggregation, after ``instance_uuid``. It is left-joined:
     an instance missing from it keeps its runtime, with nulls there.
     """
+    carried = [] if instances is None else [
+        c for c in instances.columns if c not in ("uuid", "deleted_at")
+    ]
     return _runtime(
         actions,
         window_start,
         window_end,
         instances,
+        carried,
         "left",
         outages,
         trigger_states,
@@ -105,7 +120,7 @@ def instance_runtime(
     )
 
 
-def _card_lookup(rates: DataFrame, value: str) -> Column:
+def _card_lookup(rates: DataFrame, value: str) -> str:
     """The rate card's ``value`` column keyed by ``su_type``, as a literal
     map: the card is collected on the driver (``rates_df`` is a local
     relation, so this runs no job) and folded into the projection instead
@@ -114,11 +129,13 @@ def _card_lookup(rates: DataFrame, value: str) -> Column:
     cast once). Null for an ``su_type`` the card lacks; a duplicate
     ``service_unit_type`` fails the plan (duplicate map key)."""
     dtype = rates.schema[value].dataType.simpleString()
-    card = rates.select("service_unit_type", value).collect()
+    card = rates.collect()
     if not card:
         raise ValueError("empty rate card: no service unit could be priced")
-    literals = F.create_map(*[F.lit(str(x)) for row in card for x in row])
-    return literals.cast(f"map<string,{dtype}>")[F.col("su_type")]
+    entries = ", ".join(
+        f"{sql_string(str(row.service_unit_type))}, {sql_string(str(row[value]))}" for row in card
+    )
+    return f"CAST(map({entries}) AS map<string,{dtype}>)[su_type]"
 
 
 def nova_invoice(
@@ -146,44 +163,31 @@ def nova_invoice(
         actions,
         window_start,
         window_end,
-        instance_dim.select("uuid", "deleted_at", "project_id", "su_type", "service_units"),
+        instance_dim,
+        ["project_id", "su_type", "service_units"],
         "inner",
         outages,
         trigger_states,
         message_col,
     )
-    billed_us = F.col("running_us") + (
-        F.col("stopped_us") if include_stopped_runtime else F.lit(0)
-    )
     # ceil per instance BEFORE the grouped sum (billing.py:147-153) —
     # non-associative, so ordering is part of the semantics (§2.11 #1)
-    per_instance = (
-        runtime.select(
-            "project_id",
-            "su_type",
-            "service_units",
-            ceil_hours(billed_us).alias("runtime_hours"),
-        )
-        .filter(F.col("runtime_hours") > 0)
-        .select(
-            "project_id",
-            "su_type",
-            (F.col("runtime_hours") * F.col("service_units")).cast("long").alias("su_hours"),
-        )
-    )
-
-    grouped = (
-        per_instance.groupBy("project_id", "su_type")
-        .agg(F.sum("su_hours").alias("su_hours"))
-        .filter(F.col("su_hours") > 0)  # emit-only-positive (billing.py:204)
-    )
+    hours = ceil_hours("running_us + stopped_us" if include_stopped_runtime else "running_us")
+    billed = runtime.where(f"{hours} > 0")
     rate = _card_lookup(rates, "rate")
-    return grouped.filter(rate.isNotNull()).select(
-        "project_id",
-        "su_type",
-        "su_hours",
-        rate.cast("double").alias("rate"),
-        round_money(rate * F.col("su_hours")).cast("double").alias("cost"),
+    return (
+        # resolved columns: one py4j call each, where a name costs three
+        billed.groupBy(billed["project_id"], billed["su_type"])
+        .agg(F.expr(f"sum(CAST({hours} * service_units AS BIGINT)) AS su_hours"))
+        # emit-only-positive (billing.py:204)
+        .where(f"su_hours > 0 AND {rate} IS NOT NULL")
+        .selectExpr(
+            "project_id",
+            "su_type",
+            "su_hours",
+            f"CAST({rate} AS DOUBLE) AS rate",
+            f"CAST({round_money(f'{rate} * su_hours')} AS DOUBLE) AS cost",
+        )
     )
 
 
@@ -199,28 +203,29 @@ def invoice_csv_rows(
 ) -> DataFrame:
     """The 16-column CSV projection (reference billing.py:167-224):
     constants + UTC-stamped window bounds + per-(project, SU) facts."""
-    from datetime import timezone
-
+    su_name = _card_lookup(rates, "su_name")
     start_iso = window_start.replace(tzinfo=timezone.utc).isoformat()
     end_iso = window_end.replace(tzinfo=timezone.utc).isoformat()
-    su_name = _card_lookup(rates, "su_name")
-    return invoice.filter(su_name.isNotNull()).select(
-        F.lit(invoice_month).alias("Invoice Month"),
-        F.lit(start_iso).alias("Report Start Time"),
-        F.lit(end_iso).alias("Report End Time"),
-        F.col("project_id").alias("Project - Allocation"),
-        F.col("project_id").alias("Project - Allocation ID"),
-        F.lit("").alias("Manager (PI)"),
-        F.lit(cluster_name).alias("Cluster Name"),
-        F.lit("").alias("Invoice Email"),
-        F.lit("").alias("Invoice Address"),
-        F.lit("").alias("Institution"),
-        F.lit("N/A").alias("Institution - Specific Code"),
-        F.col("su_hours").alias("SU Hours (GBhr or SUhr)"),
-        su_name.alias("SU Type"),
-        F.col("rate").alias("Rate"),
-        F.col("cost").alias("Cost"),
-        F.lit(generated_at).alias("Generated At"),
+    columns = [
+        (sql_string(invoice_month), "Invoice Month"),
+        (sql_string(start_iso), "Report Start Time"),
+        (sql_string(end_iso), "Report End Time"),
+        ("project_id", "Project - Allocation"),
+        ("project_id", "Project - Allocation ID"),
+        ("''", "Manager (PI)"),
+        (sql_string(cluster_name), "Cluster Name"),
+        ("''", "Invoice Email"),
+        ("''", "Invoice Address"),
+        ("''", "Institution"),
+        ("'N/A'", "Institution - Specific Code"),
+        ("su_hours", "SU Hours (GBhr or SUhr)"),
+        (su_name, "SU Type"),
+        ("rate", "Rate"),
+        ("cost", "Cost"),
+        (sql_string(generated_at), "Generated At"),
+    ]
+    return invoice.where(f"{su_name} IS NOT NULL").selectExpr(
+        *[f"{expr} AS `{name}`" for expr, name in columns]
     )
 
 
@@ -231,13 +236,13 @@ def su_instance_dim(instances: DataFrame) -> DataFrame:
     su_type, gpu_count, service_units, quarantine = service_unit_columns(
         "pci_requests", "vcpus", "memory_mb"
     )
-    return instances.select(
+    return instances.selectExpr(
         "uuid",
         "project_id",
-        su_type.alias("su_type"),
-        gpu_count.alias("gpu_count"),
-        service_units.alias("service_units"),
-        quarantine.alias("quarantine"),
+        f"{su_type} AS su_type",
+        f"{gpu_count} AS gpu_count",
+        f"{service_units} AS service_units",
+        f"{quarantine} AS quarantine",
         "deleted_at",
     )
 
@@ -252,28 +257,24 @@ def nova_instance_dim(
     """Ingest parity for real Nova-shaped tables (reference model.py:224-293):
 
     - liveness filter ``deleted_at > start OR deleted = 0`` (model.py:240-244,
-      P2) on proper timestamps instead of SQLite ISO-string comparison;
+      P2) on proper timestamps instead of SQLite ISO-string comparison,
+      with a naive ``window_start`` meaning UTC;
     - ``instances ⟕ instance_extra`` left equi-join (model.py:238-239, J1);
     - pci_requests JSON parse + SU-type derivation (F1-F7), with the
       reference's raise-paths (multi-entry pci, unsupported alias incl. the
       'a2' quirk, SURVEY.md §2.11 #2) surfaced as a ``quarantine`` column —
       a bad row must not kill a 100 TB job unless the caller asks it to.
     """
-    live = instances.filter(
-        (F.col("deleted_at") > F.lit(window_start)) | (F.col("deleted") == 0)
-    )
+    live = instances.where(f"deleted_at > {timestamp_sql(window_start)} OR deleted = 0")
     if instance_extra is not None:
         joined = live.join(
-            instance_extra,
-            live.uuid == instance_extra.instance_uuid,
-            "left",
-        ).drop("instance_uuid")
+            instance_extra.selectExpr("instance_uuid AS uuid", "pci_requests"), "uuid", "left"
+        )
     else:
-        joined = live.withColumn("pci_requests", F.lit(None).cast("string"))
+        joined = live.selectExpr("*", "CAST(NULL AS STRING) AS pci_requests")
     dim = su_instance_dim(joined)
     if fail_on_quarantine:
-        bad = dim.filter(F.col("quarantine").isNotNull())
-        first = bad.select("uuid", "quarantine").take(1)
+        first = dim.where("quarantine IS NOT NULL").select("uuid", "quarantine").take(1)
         if first:
             raise ValueError(
                 f"quarantined instance {first[0].uuid}: {first[0].quarantine}"
@@ -306,28 +307,19 @@ def testdata_billing_tables(spark: SparkSession, sf_dir: str) -> tuple[DataFrame
     from openstack_billing_from_db_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    actions = ev.select(
-        F.col("user_id").alias("instance_uuid"),
-        F.col("ts").alias("created_at"),
-        F.col("event_type").alias("action"),
+    actions = ev.selectExpr(
+        "user_id AS instance_uuid", "ts AS created_at", "event_type AS action"
     )
-    uid = F.col("user_id")
-    is_gpu = uid % 7 == 0
-    alias_idx = (F.expr("user_id div 7") % 4).cast("int")
-    pci_json = F.concat(
-        F.lit('[{"count": "'),
-        ((uid % 3) + 1).cast("string"),
-        F.lit('", "alias_name": "'),
-        F.element_at(F.array(*[F.lit(a) for a in GPU_ALIAS_CYCLE]), alias_idx + 1),
-        F.lit('"}]'),
-    )
-    base = ev.select("user_id").distinct().select(
-        uid.alias("uuid"),
-        F.concat(F.lit("proj_"), (uid % 5).cast("string")).alias("project_id"),
-        ((uid % 8) + 1).cast("int").alias("vcpus"),
-        (4096 * ((uid % 4) + 1)).cast("int").alias("memory_mb"),
-        F.when(is_gpu, pci_json).otherwise(F.lit(None).cast("string")).alias("pci_requests"),
-        F.lit(None).cast("timestamp").alias("deleted_at"),
+    aliases = ", ".join(sql_string(a) for a in GPU_ALIAS_CYCLE)
+    pci_json = f"""concat('[{{"count": "', CAST(user_id % 3 + 1 AS STRING), '", "alias_name": "',
+        element_at(array({aliases}), CAST((user_id div 7) % 4 AS INT) + 1), '"}}]')"""
+    base = ev.select("user_id").distinct().selectExpr(
+        "user_id AS uuid",
+        "concat('proj_', CAST(user_id % 5 AS STRING)) AS project_id",
+        "CAST(user_id % 8 + 1 AS INT) AS vcpus",
+        "CAST(4096 * (user_id % 4 + 1) AS INT) AS memory_mb",
+        f"CASE WHEN user_id % 7 = 0 THEN {pci_json} END AS pci_requests",
+        "CAST(NULL AS TIMESTAMP) AS deleted_at",
     )
     return actions, su_instance_dim(base)
 

@@ -333,7 +333,7 @@ def q42_pci_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     su_type, _gpu, _su, quarantine = service_unit_columns(
         "pci_requests", "vcpus", "memory_mb"
     )
-    return base.select("uuid", quarantine.alias("quarantine"), su_type.alias("su_type"))
+    return base.selectExpr("uuid", f"{quarantine} AS quarantine", f"{su_type} AS su_type")
 
 
 _SU_TYPES = [t for t, _, _ in DEFAULT_RATE_CARD]

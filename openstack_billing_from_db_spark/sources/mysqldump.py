@@ -8,15 +8,15 @@ which every read is a distributed columnar scan.
 Design: a single streaming pass over the (possibly gzipped) dump file —
 CREATE TABLE blocks give each table's column names and an arrow schema
 (int-ish MySQL types → int64, float-ish → float64, everything else →
-string); INSERT statements are tokenized with a small scanner that
+string); each INSERT line is tokenized by one C-level regex pass that
 understands MySQL quoting/escapes, and rows are flushed to a
 ParquetWriter in batches, so memory stays bounded by the batch size and
 never by the dump size.
 
-Scale note: conversion is driver-side Python and runs at ~21k rows/s
+Scale note: conversion is driver-side Python and runs at ~45k rows/s
 (traced ``mysqldump.rows_per_s`` on a 7k-row Nova dump, 4 CPUs) — about
-a minute for a million rows. Bulk history should use the parallel JDBC
-reader (sources/tables.py:nova_jdbc_reader) or land as parquet upstream.
+25 s for a million rows. Bulk history should use the parallel JDBC reader
+(sources/tables.py:nova_jdbc_reader) or land as parquet upstream.
 """
 
 from __future__ import annotations
@@ -51,71 +51,61 @@ def parse_create_columns(lines: list[str]) -> list[tuple[str, str]]:
     return cols
 
 
+# One value per match: a '(' opening a row (after the commas between
+# rows), then a quoted string body (unrolled loop over the \x and ''
+# escapes, possessive so a long value never backtracks) or a bare
+# NULL/number, then the ',' or ')' after it. Any other character is its own
+# match (malformed input, or the ';' ending the statement), so nothing but
+# trailing whitespace is skipped.
+_VALUE_RE = re.compile(
+    r"\s*+(?:(?:(?:,[\s,]*+)?(\()\s*+)?"
+    r"(?:'([^'\\]*+(?:(?:\\.|'')[^'\\]*+)*+)'|([^\s,()';]++))\s*+([,)])|(.))",
+    re.S,
+)
+_ESCAPE_RE = re.compile(r"\\(.)|''", re.S)
+_ESCAPES = {"n": "\n", "t": "\t", "r": "\r", "0": "\0"}
+
+
+def _unescape(m: re.Match) -> str:
+    c = m.group(1)
+    return "'" if c is None else _ESCAPES.get(c, c)
+
+
 def iter_value_tuples(text: str) -> Iterator[list]:
     """Tokenize the ``(...),(...)`` tail of an INSERT statement.
 
     Handles MySQL quoting: single-quoted strings with backslash escapes
     and '' doubling; bare NULL; int/float literals. Yields one Python
-    list per row tuple."""
-    i, n = 0, len(text)
-    while i < n:
-        while i < n and text[i] in " ,\n\r\t":
-            i += 1
-        if i >= n or text[i] == ";":
-            return
-        if text[i] != "(":
-            raise ValueError(f"expected '(' at offset {i}: {text[i:i+40]!r}")
-        i += 1
-        row: list = []
-        while True:
-            while i < n and text[i] in " \n\r\t":
-                i += 1
-            c = text[i]
-            if c == "'":
-                # quoted string: scan for closing quote, honoring \x and ''
-                i += 1
-                buf = []
-                while True:
-                    c = text[i]
-                    if c == "\\":
-                        nxt = text[i + 1]
-                        buf.append(
-                            {"n": "\n", "t": "\t", "r": "\r", "0": "\0"}.get(nxt, nxt)
-                        )
-                        i += 2
-                    elif c == "'":
-                        if i + 1 < n and text[i + 1] == "'":
-                            buf.append("'")
-                            i += 2
-                        else:
-                            i += 1
-                            break
-                    else:
-                        buf.append(c)
-                        i += 1
-                row.append("".join(buf))
+    list per row tuple; anything after the closing ``;`` is ignored, and
+    malformed input raises ``ValueError``."""
+    row: list | None = None
+    for opens, quoted, bare, delim, other in _VALUE_RE.findall(text):
+        if other:
+            if other == ";" and row is None:
+                return
+            raise ValueError(f"malformed VALUES at {other!r} after {row!r}")
+        if opens:
+            if row is not None:
+                raise ValueError(f"'(' inside row {row!r}")
+            row = []
+        elif row is None:
+            raise ValueError(f"value {quoted or bare!r} outside a row")
+        if bare:
+            if bare.isdigit() or (bare[0] == "-" and bare[1:].isdigit()):
+                row.append(int(bare))
+            elif bare.upper() == "NULL":
+                row.append(None)
             else:
-                # bare token: NULL or a number
-                j = i
-                while text[j] not in ",)":
-                    j += 1
-                tok = text[i:j].strip()
-                if tok.upper() == "NULL":
-                    row.append(None)
-                elif re.fullmatch(r"-?\d+", tok):
-                    row.append(int(tok))
-                else:
-                    row.append(float(tok))
-                i = j
-            while i < n and text[i] in " \n\r\t":
-                i += 1
-            if text[i] == ",":
-                i += 1
-                continue
-            if text[i] == ")":
-                i += 1
-                break
-        yield row
+                row.append(float(bare))
+        elif "\\" in quoted or "''" in quoted:
+            row.append(_ESCAPE_RE.sub(_unescape, quoted))
+        else:
+            row.append(quoted)
+        if delim == ")":
+            yield row
+            row = None
+    if row is not None:
+        raise ValueError(f"unterminated row {row!r}")
 
 
 def _arrow_schema(columns: list[tuple[str, str]]):
@@ -155,10 +145,13 @@ def mysqldump_to_parquet(
         if not rows:
             return
         schema = schemas[table]
-        cols = [
-            pa.array([r[k] for r in rows], type=schema.field(k).type)
-            for k in range(len(schema))
-        ]
+        cols = []
+        for field, values in zip(schema, zip(*rows)):
+            if field.type == pa.string():
+                # datetime/decimal literals arrive as parsed str already;
+                # a bare number landing in a string column gets str()'d
+                values = [v if v is None or isinstance(v, str) else str(v) for v in values]
+            cols.append(pa.array(values, type=field.type))
         writers[table].write_table(pa.Table.from_arrays(cols, schema=schema))
         buffers[table] = []
 
@@ -188,29 +181,13 @@ def mysqldump_to_parquet(
             m = _INSERT_RE.match(line)
             if m and m.group(1) in writers:
                 table = m.group(1)
-                schema = schemas[table]
-                width = len(schema)
+                width = len(schemas[table])
                 for row in iter_value_tuples(line[m.end() :]):
                     if len(row) != width:
                         raise ValueError(
                             f"{table}: row width {len(row)} != schema {width}"
                         )
-                    # stringify non-null values for string-typed columns
-                    # (datetime/decimal literals arrive as parsed str already;
-                    # ints landing in string columns get str()'d)
-                    buffers[table].append(
-                        [
-                            None
-                            if v is None
-                            else (
-                                str(v)
-                                if schema.field(k).type == "string"
-                                and not isinstance(v, str)
-                                else v
-                            )
-                            for k, v in enumerate(row)
-                        ]
-                    )
+                    buffers[table].append(row)
                     if len(buffers[table]) >= batch_rows:
                         flush(table)
 
@@ -242,7 +219,6 @@ def nova_tables_from_dump(spark, dump_path: str, out_dir: str | None = None):
     import tempfile
 
     import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import from_arrow_schema
 
     owner = None
@@ -255,10 +231,10 @@ def nova_tables_from_dump(spark, dump_path: str, out_dir: str | None = None):
         if table not in paths:
             raise ValueError(f"dump has no `{table}` table")
         schema = from_arrow_schema(pq.read_schema(paths[table]))
-        df = spark.read.schema(schema).parquet(paths[table])
-        for c in _TS_COLUMNS.get(table, ()):
-            if c in df.columns:
-                df = df.withColumn(c, F.to_timestamp(c))
+        ts = _TS_COLUMNS.get(table, ())
+        df = spark.read.schema(schema).parquet(paths[table]).selectExpr(
+            *[f"to_timestamp(`{c}`) AS `{c}`" if c in ts else f"`{c}`" for c in schema.names]
+        )
         df._converted_dump_dir = owner
         out.append(df)
     return tuple(out)

@@ -15,6 +15,8 @@ from datetime import datetime, timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from openstack_billing_from_db_spark.operators.intervals import timestamp_sql
+
 
 def write_events_partitioned(
     events: DataFrame, out_dir: str, ts_col: str = "ts"
@@ -48,6 +50,6 @@ def read_events_window(
     return spark.read.parquet(events_dir).filter(
         (F.col("event_date") >= F.lit(window_start.date()))
         & (F.col("event_date") <= F.lit(last_date))
-        & (F.col(ts_col) >= F.lit(window_start))
-        & (F.col(ts_col) < F.lit(window_end))
+        & (F.col(ts_col) >= F.expr(timestamp_sql(window_start)))
+        & (F.col(ts_col) < F.expr(timestamp_sql(window_end)))
     )

@@ -16,6 +16,7 @@ from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 
+from openstack_billing_from_db_spark.functions.sql import sql_string
 from openstack_billing_from_db_spark.schemas import RATES
 
 # (service_unit_type, display name, $/SU-hr) — display names from
@@ -34,11 +35,6 @@ def default_rates() -> list[tuple[str, str, Decimal]]:
     return [(t, n, Decimal(r)) for t, n, r in DEFAULT_RATE_CARD]
 
 
-def _sql_string(text: str) -> str:
-    """A Spark SQL string literal (backslash escapes are on by default)."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def rates_df(spark: SparkSession, card: list[tuple[str, str, Decimal]] | None = None) -> DataFrame:
     """The card (default: ``DEFAULT_RATE_CARD``) as a ``VALUES`` relation
     with the ``RATES`` schema. A local relation, unlike
@@ -50,7 +46,7 @@ def rates_df(spark: SparkSession, card: list[tuple[str, str, Decimal]] | None = 
         raise ValueError("empty rate card: no service unit could be priced")
     rate_type = RATES["rate"].dataType.simpleString()
     rows = ", ".join(
-        f"({_sql_string(su_type)}, {_sql_string(su_name)},"
+        f"({sql_string(su_type)}, {sql_string(su_name)},"
         f" CAST({Decimal(rate):f}BD AS {rate_type}))"
         for su_type, su_name, rate in card
     )

@@ -376,3 +376,40 @@ def test_iter_value_tuples_round_trip(rows):
     text = ",".join("(" + ",".join(_render_sql_value(v) for v in r) + ")" for r in rows)
     got = list(iter_value_tuples(text + ";"))
     assert got == rows
+
+
+@pytest.mark.parametrize(
+    "text, rows",
+    [
+        # \' and '' both quote; \\ is one backslash
+        (r"('it\'s','it''s','a\\b','\\'),('''','\\''')", [["it's", "it's", "a\\b", "\\"], ["'", "\\'"]]),
+        (r"('tab\there','nl\nx','nul\0','\z')", [["tab\there", "nl\nx", "nul\0", "z"]]),
+        # NULL is a value, 'NULL' a string, '' the empty string
+        ("(NULL,null,'NULL','')", [[None, None, "NULL", ""]]),
+        # a row delimiter inside a string is data
+        ("('x),(y','(',')',','),('a;b')", [["x),(y", "(", ")", ","], ["a;b"]]),
+        ("('héllo','日本語','☃ ok')", [["héllo", "日本語", "☃ ok"]]),
+        ("(-7,0,-0.5,2.25,1e3,-1.5E-2)", [[-7, 0, -0.5, 2.25, 1000.0, -0.015]]),
+        # whitespace around values and between rows; text after ';' ignored
+        (" ( 1 , 'a' ) ,\n( 2,NULL ) ; (junk", [[1, "a"], [2, None]]),
+    ],
+)
+def test_iter_value_tuples_fixed_examples(text, rows):
+    assert list(iter_value_tuples(text)) == rows
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        "('abc",  # unterminated string
+        "('abc\\'),(1);",  # the quote is escaped, so the string never ends
+        "(1,2)x(3);",  # garbage between tuples
+        "(1,2) , junk (3);",
+        "(1,,2);",  # missing value
+        "(1 2);",  # missing comma
+        "(1,2",  # unterminated row
+    ],
+)
+def test_iter_value_tuples_rejects_malformed(text):
+    with pytest.raises(ValueError):
+        list(iter_value_tuples(text))

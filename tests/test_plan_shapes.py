@@ -63,7 +63,7 @@ def _ancestors(nodes: list[tuple[int, str, str]], i: int) -> list[str]:
 
 
 def test_cli_dump_invoice_plan(spark, tmp_path):
-    """The daily dump invoice as executed: at most 6 jobs; no RDD scan and
+    """The daily dump invoice as executed: at most 5 jobs; no RDD scan and
     no rate-card relation (the card is folded into literals); each Nova
     table scanned once; and no Exchange between the sessionizing Window
     and the per-instance aggregate."""
@@ -87,7 +87,7 @@ def test_cli_dump_invoice_plan(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert 0 < len(jobs) <= 6, sorted(jobs)
+    assert 0 < len(jobs) <= 5, sorted(jobs)
 
     # executed plans (AQE's final ones) from the SQL status store
     sc._jsc.sc().listenerBus().waitUntilEmpty()
@@ -121,6 +121,57 @@ def test_cli_dump_invoice_plan(spark, tmp_path):
     above = _ancestors(nodes, window)
     below_aggregate = above[: above.index("HashAggregate")]
     assert not any("Exchange" in name for name in below_aggregate), write
+
+
+def test_dump_invoice_plan_build_py4j_budget(spark, tmp_path, monkeypatch):
+    """Building the dump invoice's plans (dimension, invoice, CSV rows)
+    takes at most 250 py4j round trips: every expression is SQL text, so
+    a DataFrame step costs a few calls instead of several per ``F.*``
+    call (about 2,500 in all). Only this thread's calls count: py4j's
+    finalizer thread releases Java objects at times of its own choosing."""
+    import threading
+    from datetime import datetime
+
+    from py4j.clientserver import JavaClient
+    from test_ingest_sources import _write_dump
+
+    from openstack_billing_from_db_spark.plans.billing import (
+        invoice_csv_rows,
+        nova_instance_dim,
+        nova_invoice,
+    )
+    from openstack_billing_from_db_spark.sources.mysqldump import nova_tables_from_dump
+    from openstack_billing_from_db_spark.sources.rates import rates_df
+
+    instances, extra, actions = nova_tables_from_dump(
+        spark, _write_dump(tmp_path), str(tmp_path / "pq")
+    )
+    actions = actions.select("instance_uuid", "created_at", "action", "message")
+    rates = rates_df(spark)
+    start, end = datetime(2000, 1, 1), datetime(2000, 2, 1)
+
+    calls = 0
+    send = JavaClient.send_command
+    building_thread = threading.get_ident()
+
+    def counting_send(client, *args, **kwargs):
+        nonlocal calls
+        calls += threading.get_ident() == building_thread
+        return send(client, *args, **kwargs)
+
+    monkeypatch.setattr(JavaClient, "send_command", counting_send)
+    dim = nova_instance_dim(instances, extra, start)
+    invoice = nova_invoice(actions, dim, rates, start, end)
+    invoice_csv_rows(
+        invoice,
+        rates,
+        invoice_month="2000-01",
+        window_start=start,
+        window_end=end,
+        generated_at="2000-02-01T00:00:00+00:00",
+    )
+    monkeypatch.undo()
+    assert calls <= 250, calls
 
 
 def test_regional_revenue_broadcast_dims(spark, sf_dir):

@@ -88,6 +88,6 @@ def test_random_logs_match_python_reference(spark, log):
 def test_overlap_clamp_matches_python(spark, a0, alen, b0, blen):
     df = spark.createDataFrame([(a0, a0 + alen)], "s long, e long")
     got = df.select(
-        overlap_micros(F.col("s"), F.col("e"), b0, b0 + blen).alias("o")
+        F.expr(overlap_micros("s", "e", b0, b0 + blen)).alias("o")
     ).collect()[0].o
     assert got == _py_overlap(a0, a0 + alen, b0, b0 + blen)
