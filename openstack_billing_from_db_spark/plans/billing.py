@@ -3,7 +3,9 @@
 Reference pipeline (billing.py:116-224 + model.py:90-156) re-expressed as
 one declarative DAG:
 
-    events → trigger state (CASE)
+    events → drop events at or after the latest     (pushed into the scan;
+        end of the window and the outages            invoice only, exact)
+      → trigger state (CASE)
       → window lead() sessionization                (1 shuffle: hash by id)
       → join instance dim: deleted_at, project,     (broadcast; the dim's
         SU type, SU count                            one read)
@@ -22,6 +24,13 @@ then project) — no driver-side loops over data and no Python UDFs. The
 rate card, like the outages, is a handful of driver-side values: it is
 collected (a local relation, so no job) and folded into the projection
 instead of joined.
+
+The invoice reads only the history it can see: no billed term ends after
+the latest end ``hi`` of the window and the outages, so events at or
+after ``hi`` are dropped before the shuffle and the window sort, and on a
+TIMESTAMP parquet column the predicate prunes row groups at the scan.
+``instance_runtime`` keeps every event: it emits zero-runtime rows,
+which the pruning would delete.
 
 Every expression is SQL text, defined once by the helpers in
 ``operators/`` and ``functions/`` and applied with ``selectExpr`` /
@@ -44,7 +53,7 @@ from pyspark.sql import functions as F
 from openstack_billing_from_db_spark.functions.money import round_money
 from openstack_billing_from_db_spark.functions.sql import sql_string
 from openstack_billing_from_db_spark.functions.su import service_unit_columns
-from openstack_billing_from_db_spark.operators.intervals import ceil_hours, timestamp_sql
+from openstack_billing_from_db_spark.operators.intervals import ceil_hours, timestamp_sql, to_micros
 from openstack_billing_from_db_spark.operators.sessionize import (
     DEFAULT_TRIGGER_STATES,
     build_state_intervals,
@@ -158,7 +167,21 @@ def nova_invoice(
     six ``*_su_hours`` accumulator attributes (billing.py:105-113) become
     a single ``su_type`` value column — grouped sum instead of attribute
     dispatch.
+
+    Events at or after ``hi``, the latest end of the window and of every
+    outage, are dropped before the sessionizing shuffle (and pushed into
+    the scan). That is exact: every billed term ends at or before ``hi``,
+    so an interval starting there overlaps none; the interval straddling
+    ``hi`` is clamped there either way, and so is a ``deleted_at`` at or
+    after it. An instance left without events has zero hours, which
+    billing drops anyway. A null ``created_at`` is kept (it is billed
+    from the window start).
     """
+    outages = tuple(outages)
+    hi = max(to_micros(t) for t in (window_end, *(end for _, end in outages)))
+    actions = actions.where(
+        f"created_at IS NULL OR CAST(created_at AS TIMESTAMP) < timestamp_micros({hi}L)"
+    )
     runtime = _runtime(
         actions,
         window_start,
@@ -191,6 +214,12 @@ def nova_invoice(
     )
 
 
+def _utc_iso(t: datetime) -> str:
+    """``t`` in UTC as ISO text; naive means UTC, as in ``to_micros``."""
+    utc = t.replace(tzinfo=timezone.utc) if t.tzinfo is None else t.astimezone(timezone.utc)
+    return utc.isoformat()
+
+
 def invoice_csv_rows(
     invoice: DataFrame,
     rates: DataFrame,
@@ -204,12 +233,10 @@ def invoice_csv_rows(
     """The 16-column CSV projection (reference billing.py:167-224):
     constants + UTC-stamped window bounds + per-(project, SU) facts."""
     su_name = _card_lookup(rates, "su_name")
-    start_iso = window_start.replace(tzinfo=timezone.utc).isoformat()
-    end_iso = window_end.replace(tzinfo=timezone.utc).isoformat()
     columns = [
         (sql_string(invoice_month), "Invoice Month"),
-        (sql_string(start_iso), "Report Start Time"),
-        (sql_string(end_iso), "Report End Time"),
+        (sql_string(_utc_iso(window_start)), "Report Start Time"),
+        (sql_string(_utc_iso(window_end)), "Report End Time"),
         ("project_id", "Project - Allocation"),
         ("project_id", "Project - Allocation ID"),
         ("''", "Manager (PI)"),

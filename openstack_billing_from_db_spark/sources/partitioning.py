@@ -1,11 +1,15 @@
-"""Date-partitioned event storage — the ingest-side layout that makes
-billing-window queries prune at the scan.
+"""Date-partitioned event storage: hive-partition by event date (coarse
+pruning) and optionally bucket by instance within partitions
+(shuffle-free sessionization, see sources/bucketing.py).
+tests/test_partitioning.py verifies the PartitionFilters actually appear
+in the scan.
 
-At 100 TB the event table must be laid out so a one-month billing window
-reads one month of files: hive-partition by event date (coarse pruning)
-and optionally bucket by instance within partitions (shuffle-free
-sessionization, see sources/bucketing.py). tests/test_partitioning.py
-verifies the PartitionFilters actually appear in the scan.
+``read_events_window`` reads the events inside a window. It is not a
+billing input: its ``>= window_start`` bound drops each instance's last
+event before the window, which sets the state the window opens in. The
+invoice (``plans.billing.nova_invoice``) therefore prunes only at the
+window's end: it drops events at or after the latest end of the window
+and its outages, and needs every earlier event.
 """
 
 from __future__ import annotations

@@ -174,6 +174,35 @@ def test_dump_invoice_plan_build_py4j_budget(spark, tmp_path, monkeypatch):
     assert calls <= 250, calls
 
 
+def test_invoice_pushes_window_end_into_event_scan(spark, tmp_path):
+    """The invoice's ``instance_actions`` scan carries the end bound (events
+    at or after the latest window or outage end cannot change a billed
+    hour); ``instance_runtime``, which emits zero-runtime rows, reads all."""
+    from datetime import datetime
+
+    from openstack_billing_from_db_spark.plans.billing import instance_runtime, nova_invoice
+    from openstack_billing_from_db_spark.sources.rates import rates_df
+
+    path = str(tmp_path / "instance_actions.parquet")
+    spark.createDataFrame(
+        [("i1", datetime(2000, 1, 2), "create", ""), ("i1", datetime(2000, 3, 1), "stop", "")],
+        "instance_uuid string, created_at timestamp, action string, message string",
+    ).write.parquet(path)
+    actions = spark.read.parquet(path)
+    dim = spark.createDataFrame(
+        [("i1", "p1", "cpu", 1, None)],
+        "uuid string, project_id string, su_type string, service_units int, deleted_at timestamp",
+    )
+    start, end = datetime(2000, 1, 1), datetime(2000, 2, 1)
+
+    def scan(df):
+        (line,) = [ln for ln in _plan(df).splitlines() if "FileScan parquet" in ln]
+        return line
+
+    assert "LessThan(created_at" in scan(nova_invoice(actions, dim, rates_df(spark), start, end))
+    assert "LessThan(created_at" not in scan(instance_runtime(actions, start, end, instances=dim))
+
+
 def test_regional_revenue_broadcast_dims(spark, sf_dir):
     """q11: nation/region/supplier dims broadcast."""
     plan = _plan(QUERIES["q11_regional_revenue"](spark, sf_dir))

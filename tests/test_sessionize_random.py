@@ -6,8 +6,9 @@ evaluated in a single DataFrame pass."""
 
 from __future__ import annotations
 
+import bisect
 import random
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
@@ -19,7 +20,8 @@ from openstack_billing_from_db_spark.operators.sessionize import (
     state_micros_in_window,
     with_synthetic_deletes,
 )
-from openstack_billing_from_db_spark.plans.billing import instance_runtime
+from openstack_billing_from_db_spark.plans.billing import instance_runtime, nova_invoice
+from openstack_billing_from_db_spark.sources.rates import rates_df
 
 WINDOW = (datetime(2000, 1, 1), datetime(2000, 2, 1))
 ACTIONS = ["create", "start", "stop", "shelve", "unshelve", "delete", "resize", "noop"]
@@ -209,3 +211,98 @@ def test_delete_clamp_equals_synthetic_delete_union(spark, builder):
         if got[iid] != (projects.get(iid), *want[iid])
     }
     assert not mismatches, f"{len(mismatches)} mismatches: {list(mismatches.items())[:5]}"
+
+
+# --- the invoice drops events at or after the latest end of its terms ------
+
+PRUNED_WINDOW = (datetime(2000, 1, 1), datetime(2000, 1, 6))  # most events end later
+_DIM_SCHEMA = "uuid string, project_id string, su_type string, service_units int, deleted_at timestamp"
+_EVENTS_SCHEMA = "instance_uuid string, created_at timestamp, action string, message string"
+_UTC_P1, _UTC_M2 = timezone(timedelta(hours=1)), timezone(timedelta(hours=-2))
+
+
+def _utc_naive(t):
+    return t if t.tzinfo is None else t.astimezone(timezone.utc).replace(tzinfo=None)
+
+
+def _with_delete(events, deleted_at):
+    """The reference's synthetic Deleted event at ``deleted_at``, after a
+    real event at the same time."""
+    if deleted_at is None:
+        return events
+    k = bisect.bisect_right([ts for ts, _, _ in events], deleted_at)
+    return [*events[:k], (deleted_at, "delete", ""), *events[k:]]
+
+
+def _invoice_hours(spark, events, dim, window, outages):
+    return {
+        r.project_id: r.su_hours
+        for r in nova_invoice(
+            spark.createDataFrame(events, _EVENTS_SCHEMA),
+            spark.createDataFrame(dim, _DIM_SCHEMA),
+            rates_df(spark),
+            *window,
+            outages=outages,
+        ).collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "outages",
+    [
+        (),
+        ((datetime(2000, 1, 2), datetime(2000, 1, 3)), (datetime(2000, 1, 5, 12), datetime(2000, 1, 8))),
+        # aware outages against a naive window; the later one ends past it
+        (
+            (datetime(2000, 1, 3, 1, tzinfo=_UTC_P1), datetime(2000, 1, 3, 12, tzinfo=timezone.utc)),
+            (datetime(2000, 1, 5, 18, tzinfo=timezone.utc), datetime(2000, 1, 7, 6, tzinfo=_UTC_M2)),
+        ),
+    ],
+    ids=["window-end", "outage-past-end", "aware-outages"],
+)
+def test_invoice_pruning_matches_simulator(spark, outages):
+    """Per-project SU hours of ``nova_invoice`` equal the simulator's, on
+    windows where the end bound drops events: events after the window's
+    end, an event exactly at ``hi`` (the latest term end), an outage
+    ending past the window, deletions at and after ``hi``. The outages
+    are passed as a generator."""
+    rng = random.Random(20261017)
+    hi = max(_utc_naive(t) for t in (PRUNED_WINDOW[1], *(end for _, end in outages)))
+    events, dim, want = [], [], {}
+    for i in range(240):
+        iid, project, units = f"h{i}", f"p{i % 5}", i % 3 + 1
+        rows, deleted_at = _deleted_case(rng, iid, _DELETE_KINDS[i % len(_DELETE_KINDS)])
+        if i % 4 == 0:
+            rows = sorted([*rows, (iid, hi, rng.choice(ACTIONS[:5]), "")], key=lambda r: r[1])
+        if i % 9 == 0:
+            deleted_at = hi
+        elif i % 9 == 1:
+            deleted_at = hi + timedelta(minutes=rng.randint(1, 5000))
+        events.extend(rows)
+        dim.append((iid, project, "cpu", units, deleted_at))
+        events_in_order = _with_delete([(ts, a, m) for _, ts, a, m in rows], deleted_at)
+        running, stopped = simulate(
+            events_in_order, *PRUNED_WINDOW, [(_utc_naive(a), _utc_naive(b)) for a, b in outages]
+        )
+        hours = -(-(running + stopped) // 3600)
+        if hours > 0:
+            want[project] = want.get(project, 0) + hours * units
+    assert sum(ts >= hi for _, ts, _, _ in events) > 100
+    assert any(d == hi for *_, d in dim) and any(d is not None and d > hi for *_, d in dim)
+
+    got = _invoice_hours(spark, events, dim, PRUNED_WINDOW, iter(outages))
+    assert got == want
+
+
+def test_invoice_keeps_null_created_at_events(spark):
+    """A trigger event with a null ``created_at`` sorts first and is billed
+    from the window's start (``greatest`` skips the null start): the end
+    bound keeps it. Running 48 h + Stopped 72 h; the start after the
+    window is dropped."""
+    events = [
+        ("n1", None, "create", ""),
+        ("n1", datetime(2000, 1, 3), "stop", ""),
+        ("n1", datetime(2000, 1, 10), "start", ""),
+    ]
+    dim = [("n1", "p1", "cpu", 2, None)]
+    assert _invoice_hours(spark, events, dim, PRUNED_WINDOW, ()) == {"p1": 2 * (48 + 72)}

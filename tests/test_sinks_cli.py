@@ -60,6 +60,31 @@ def test_invoice_csv_header_and_dialect(spark, sf_dir, tmp_path):
     assert rows[1][10] == "N/A"
 
 
+def test_invoice_csv_aware_bounds_stamped_in_utc(spark):
+    """An aware window bound is converted to UTC, not relabelled: the
+    invoice bills ``--start 2024-03-01T00:00:00-05:00`` from 05:00 UTC,
+    so that is the Report Start Time. Naive bounds mean UTC."""
+    from datetime import timedelta, timezone
+
+    from openstack_billing_from_db_spark.plans.billing import invoice_csv_rows
+    from openstack_billing_from_db_spark.sources.rates import rates_df
+
+    invoice = spark.createDataFrame(
+        [("p1", "cpu", 10, 0.013, 0.13)],
+        "project_id string, su_type string, su_hours long, rate double, cost double",
+    )
+    (row,) = invoice_csv_rows(
+        invoice,
+        rates_df(spark),
+        invoice_month="2024-03",
+        window_start=datetime(2024, 3, 1, tzinfo=timezone(timedelta(hours=-5))),
+        window_end=datetime(2024, 4, 1),
+        generated_at="2024-04-01T00:00:00+00:00",
+    ).collect()
+    assert row["Report Start Time"] == "2024-03-01T05:00:00+00:00"
+    assert row["Report End Time"] == "2024-04-01T00:00:00+00:00"
+
+
 def test_s3_key_templates():
     keys = invoice_s3_keys(
         "2024-01",
