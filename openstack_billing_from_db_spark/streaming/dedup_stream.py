@@ -3,11 +3,9 @@ micro-batch is signature-checked against the persisted MinHash index
 (operators/dedup.minhash_index — no raw text retained), and only unique
 docs' band rows are folded back in.
 
-Exactly-once without a transactional format (same pattern as
-streaming/incremental.py): every epoch's index additions and verdicts
-land in their own ``epoch=<id>`` partition with overwrite semantics, so
-a replayed micro-batch is idempotent; the live index is simply the union
-of all epoch partitions.
+Every epoch's index additions and verdicts are one epoch of two epoch
+logs, kept exactly-once by :func:`streaming.sessions.run_epoch_stream`;
+the live index is simply the union of all epochs.
 
 Within-batch duplicate families keep their minimum-id member: a doc is
 admitted iff its best match is not a duplicate at all, or is a LATER
@@ -28,60 +26,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.operators.caching import tracked_persist
-from openstack_billing_from_db_spark.streaming.sessions import (
-    run_foreachbatch_stream,
-)
 from openstack_billing_from_db_spark.operators.dedup import (
     incremental_near_duplicates,
     minhash_index,
 )
-
-
-def _epoch_snapshot(spark: SparkSession, df: DataFrame):
-    """Lineage-truncating snapshot of an epoch result, with a
-    deterministic release handle.
-
-    ``localCheckpoint(eager=True)`` is the snapshot-integrity half: a
-    lost cached partition FAILS the (idempotent) epoch instead of
-    silently recomputing against the post-write mixed index. Its
-    MEMORY_AND_DISK blocks, however, are otherwise only released when
-    the JVM garbage-collects the RDD reference — in a long-running
-    stream that lets storage grow with epoch count. The checkpointed
-    RDD id is diffed from the public
-    ``JavaSparkContext.getPersistentRDDs`` map and then filtered to
-    ids whose RDD ``isLocallyCheckpointed()`` — the eager checkpoint
-    job can itself lazily materialize ``tracked_persist`` caches
-    (InMemoryRelation cached RDDs register at first materialization),
-    and unpersisting those behind the CacheManager's back would
-    silently send plans believed cached cold. ``release()`` unpersists
-    exactly the checkpoint's own ids once the epoch's writes are
-    committed."""
-    jsc = spark.sparkContext._jsc
-    before = set(jsc.getPersistentRDDs().keySet().toArray())
-    cp = df.localCheckpoint(eager=True)
-    after = jsc.getPersistentRDDs()
-    new_ids = [
-        i
-        for i in after.keySet().toArray()
-        if i not in before and after.get(i).rdd().isLocallyCheckpointed()
-    ]
-
-    def release() -> None:
-        try:
-            live = jsc.getPersistentRDDs()
-            for i in new_ids:
-                jrdd = live.get(i)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-        except Exception:
-            pass  # cleanup is best-effort; the epoch already committed
-
-    return cp, release
-
-
-# the read errors that mean "no index written yet" (the first epoch):
-# a missing directory, or one holding no parquet files
-_NO_INDEX_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+from openstack_billing_from_db_spark.streaming.sessions import (
+    file_stream,
+    read_epoch_log,
+    run_epoch_stream,
+)
 
 
 def _existing_index(spark: SparkSession, index_dir: str, like: DataFrame) -> DataFrame:
@@ -91,13 +44,14 @@ def _existing_index(spark: SparkSession, index_dir: str, like: DataFrame) -> Dat
     another fingerprint layout, a corrupt file — raises: probing an
     empty index would admit every duplicate as fresh."""
     try:
-        return spark.read.parquet(index_dir).select(*like.columns)
+        index = read_epoch_log(spark, index_dir)
+        if index is None:
+            return spark.createDataFrame([], like.schema)
+        return index.select(*like.columns)
     except AnalysisException as e:
-        if e.getCondition() not in _NO_INDEX_YET:
-            raise RuntimeError(
-                f"cannot read the dedup index at {index_dir}: {e}"
-            ) from e
-    return spark.createDataFrame([], like.schema)
+        raise RuntimeError(
+            f"cannot read the dedup index at {index_dir}: {e}"
+        ) from e
 
 
 def admit_batch(
@@ -186,39 +140,36 @@ def run_streaming_dedup_index(
     additions. Runs to completion on the available files
     (processAllAvailable) and stops; re-running picks up new files from
     the checkpoint."""
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts, additions = admit_batch(
-            spark, batch_df.select("doc_id", "text"), index_dir, **dedup_kwargs
-        )
-        # snapshot BOTH results against the pre-epoch index BEFORE
-        # writing into index_dir — the additions DAG reads the very
-        # directory the epoch write lands in (_epoch_snapshot: lineage
-        # truncation + deterministic per-epoch block release).
-        verdicts, release_v = _epoch_snapshot(spark, verdicts)
-        additions, release_a = _epoch_snapshot(spark, additions)
-        try:
-            verdicts.write.mode("overwrite").parquet(
-                f"{verdicts_dir}/epoch={epoch_id}"
-            )
-            additions.write.mode("overwrite").parquet(
-                f"{index_dir}/epoch={epoch_id}"
-            )
-        finally:
-            release_v()
-            release_a()
-
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
+    run_epoch_stream(
+        file_stream(spark, docs_stream_dir, "doc_id long, text string"),
+        _dedup_step(
+            spark, admit_batch, "text", index_dir, verdicts_dir, dedup_kwargs
         ),
-        stream.sparkSession,
+        checkpoint_dir,
     )
+
+
+def _dedup_step(
+    spark: SparkSession,
+    admit_fn,
+    content_col: str,
+    index_dir: str,
+    verdicts_dir: str,
+    dedup_kwargs: dict,
+):
+    """The epoch step of every dedup stream: ``admit_fn`` judges the
+    batch's (doc_id, ``content_col``) rows against the index; the epoch
+    writes the verdicts, then the index additions. Both are snapshotted
+    against the pre-epoch index before either write, because the
+    additions DAG reads the very directory its own write lands in."""
+
+    def step(batch_df: DataFrame, epoch_id: int, snapshot) -> dict:
+        verdicts, additions = admit_fn(
+            spark, batch_df.select("doc_id", content_col), index_dir, **dedup_kwargs
+        )
+        return {verdicts_dir: snapshot(verdicts), index_dir: snapshot(additions)}
+
+    return step
 
 
 def read_index(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -472,56 +423,6 @@ def admit_video_batch(
     return verdicts, additions
 
 
-def _run_streaming_payload_dedup(
-    spark: SparkSession,
-    stream_dir: str,
-    index_dir: str,
-    verdicts_dir: str,
-    checkpoint_dir: str,
-    admit_fn,
-    **dedup_kwargs,
-) -> None:
-    """Shared runner for binary-payload fingerprint streams: files of
-    (doc_id, payload) → per-epoch dedup verdicts + fingerprint-index
-    additions via ``admit_fn``, with the same ``epoch=<id>`` overwrite
-    idempotency as :func:`run_streaming_dedup_index` (a replayed
-    micro-batch rewrites its own partition)."""
-    stream = (
-        spark.readStream.schema("doc_id long, payload binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        verdicts, additions = admit_fn(
-            spark,
-            batch_df.select("doc_id", "payload"),
-            index_dir,
-            **dedup_kwargs,
-        )
-        # lineage-truncating snapshot against the pre-epoch index BEFORE
-        # the epoch write lands in index_dir (see run_streaming_dedup_index)
-        verdicts, release_v = _epoch_snapshot(spark, verdicts)
-        additions, release_a = _epoch_snapshot(spark, additions)
-        try:
-            verdicts.write.mode("overwrite").parquet(
-                f"{verdicts_dir}/epoch={epoch_id}"
-            )
-            additions.write.mode("overwrite").parquet(
-                f"{index_dir}/epoch={epoch_id}"
-            )
-        finally:
-            release_v()
-            release_a()
-
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
-    )
-
-
 def run_streaming_image_dedup(
     spark: SparkSession,
     images_stream_dir: str,
@@ -532,14 +433,12 @@ def run_streaming_image_dedup(
 ) -> None:
     """Image-payload stream → perceptual-dedup verdicts + wide-band
     fingerprint index (see :func:`admit_image_batch`)."""
-    _run_streaming_payload_dedup(
-        spark,
-        images_stream_dir,
-        index_dir,
-        verdicts_dir,
+    run_epoch_stream(
+        file_stream(spark, images_stream_dir, "doc_id long, payload binary"),
+        _dedup_step(
+            spark, admit_image_batch, "payload", index_dir, verdicts_dir, dedup_kwargs
+        ),
         checkpoint_dir,
-        admit_image_batch,
-        **dedup_kwargs,
     )
 
 
@@ -554,14 +453,12 @@ def run_streaming_audio_dedup(
     """Audio-payload stream → delta-energy-fingerprint dedup verdicts +
     index (see :func:`admit_audio_batch`) — the q144 fingerprint under
     the q94 streaming contract."""
-    _run_streaming_payload_dedup(
-        spark,
-        audio_stream_dir,
-        index_dir,
-        verdicts_dir,
+    run_epoch_stream(
+        file_stream(spark, audio_stream_dir, "doc_id long, payload binary"),
+        _dedup_step(
+            spark, admit_audio_batch, "payload", index_dir, verdicts_dir, dedup_kwargs
+        ),
         checkpoint_dir,
-        admit_audio_batch,
-        **dedup_kwargs,
     )
 
 
@@ -577,12 +474,10 @@ def run_streaming_video_dedup(
     + per-frame fingerprint index (see :func:`admit_video_batch`) —
     q145's kernel under the q94 streaming contract, completing the
     text/image/audio/video streaming-admission set."""
-    _run_streaming_payload_dedup(
-        spark,
-        video_stream_dir,
-        index_dir,
-        verdicts_dir,
+    run_epoch_stream(
+        file_stream(spark, video_stream_dir, "doc_id long, payload binary"),
+        _dedup_step(
+            spark, admit_video_batch, "payload", index_dir, verdicts_dir, dedup_kwargs
+        ),
         checkpoint_dir,
-        admit_video_batch,
-        **dedup_kwargs,
     )

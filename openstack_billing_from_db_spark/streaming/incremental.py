@@ -1,12 +1,11 @@
 """Incremental billing maintenance: a streaming pipeline that keeps a
 queryable runtime aggregate up to date as events arrive.
 
-Without a transactional table format (Delta/Iceberg jars are not in this
-container) the exactly-once pattern is ``foreachBatch`` + idempotent
-per-epoch output: each micro-batch's aggregate lands in an
-``epoch=<id>`` partition (overwrite → replays are idempotent), and the
-reader sums across epochs. With Delta available this becomes a single
-MERGE INTO — the stream topology is unchanged.
+Each micro-batch's aggregate is one epoch of an epoch log, kept
+exactly-once by :func:`streaming.sessions.run_epoch_stream`, and the
+reader sums across epochs. With a transactional table format (Delta,
+Iceberg) this becomes a single MERGE INTO — the stream topology is
+unchanged.
 
 At scale: each epoch writes only the instances active in that
 micro-batch; the reader-side sum is a partition-pruned aggregation, and
@@ -19,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from openstack_billing_from_db_spark.streaming.sessions import (
-    fast_local_checkpoints,
-    pinned_state_partitions,
+    run_epoch_stream,
     stream_events,
     streaming_state_intervals,
 )
@@ -36,26 +34,15 @@ def run_incremental_runtime(
     """Stream events → stateful sessionization → per-epoch runtime
     aggregates under ``target_dir/epoch=N/``. Runs to completion on the
     available files (processAllAvailable) and stops."""
-    intervals = streaming_state_intervals(stream_events(spark, sf_dir), trigger_states)
-
-    def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.groupBy("instance_uuid", "state")
-            .agg(F.sum(F.col("end_us") - F.col("start_us")).alias("micros"))
-            .write.mode("overwrite")
-            .parquet(f"{target_dir}/epoch={epoch_id}")
-        )
-
-    with pinned_state_partitions(spark), fast_local_checkpoints(spark):
-        q = (
-            intervals.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    run_epoch_stream(
+        streaming_state_intervals(stream_events(spark, sf_dir), trigger_states),
+        lambda batch_df, epoch_id, snapshot: {
+            target_dir: batch_df.groupBy("instance_uuid", "state").agg(
+                F.sum(F.col("end_us") - F.col("start_us")).alias("micros")
+            )
+        },
+        checkpoint_dir,
+    )
 
 
 def read_incremental_runtime(spark: SparkSession, target_dir: str) -> DataFrame:

@@ -2,11 +2,11 @@
 doc_id order — the stream contract that makes incremental packing
 equivalent to one batch run), each micro-batch continues the per-shard
 open-bin state with operators/curation.greedy_pack_continue, and the
-epoch's assignments plus the MERGED state snapshot land in their own
-``epoch=<id>`` partitions (the dedup_stream exactly-once pattern: a
-replayed micro-batch overwrites its own partitions, and it re-reads the
-PRE-epoch state because the latest-state lookup is bounded to epochs
-strictly before its own id).
+epoch's assignments plus the MERGED state snapshot are one epoch of two
+epoch logs, kept exactly-once by
+:func:`streaming.sessions.run_epoch_stream`. A replayed micro-batch
+re-reads the PRE-epoch state because the latest-state lookup is bounded
+to epochs strictly before its own id.
 
 State is shards-sized ((shard, open_bin, open_acc) — bytes per shard),
 so every epoch snapshot is trivially cheap; assignments are the
@@ -20,15 +20,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from openstack_billing_from_db_spark.streaming.sessions import (
-    run_foreachbatch_stream,
-)
+from openstack_billing_from_db_spark.functions.hashing import seeded_hash64
 from openstack_billing_from_db_spark.operators.curation import (
     greedy_pack_continue,
     merge_pack_state,
     pack_state,
 )
 from openstack_billing_from_db_spark.operators.text import words
+from openstack_billing_from_db_spark.streaming.sessions import (
+    file_stream,
+    read_epoch_log,
+    run_epoch_stream,
+)
 
 
 def _check_pack_config(spark: SparkSession, state_dir: str, **config) -> None:
@@ -73,10 +76,10 @@ def _latest_state(
 ) -> DataFrame | None:
     """State snapshot of the newest epoch strictly before
     ``before_epoch`` (replay-safe: a re-run epoch must not read its own
-    previous output), or None when no prior epoch exists."""
-    try:
-        all_epochs = spark.read.parquet(state_dir)
-    except Exception:
+    previous output), or None when no prior epoch exists. An
+    unreadable state log raises (:func:`read_epoch_log`)."""
+    all_epochs = read_epoch_log(spark, state_dir)
+    if all_epochs is None:
         return None
     prior = all_epochs.filter(F.col("epoch") < before_epoch)
     row = prior.agg(F.max("epoch").alias("m")).collect()[0]
@@ -109,20 +112,26 @@ def run_streaming_greedy_pack(
     with different values would silently continue with mismatched hash
     sharding — assignments equal to no batch run — so resume asserts
     the sidecar matches before processing any batch."""
-    from openstack_billing_from_db_spark.functions.hashing import seeded_hash64
-    from openstack_billing_from_db_spark.streaming.dedup_stream import (
-        _epoch_snapshot,
-    )
-
     _check_pack_config(spark, state_dir, shards=shards, budget=budget, seed=seed)
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(docs_stream_dir)
+    run_epoch_stream(
+        file_stream(spark, docs_stream_dir, "doc_id long, text string"),
+        _pack_step(spark, assignments_dir, state_dir, budget, shards, seed),
+        checkpoint_dir,
     )
 
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
+
+def _pack_step(
+    spark: SparkSession,
+    assignments_dir: str,
+    state_dir: str,
+    budget: int,
+    shards: int,
+    seed: str,
+):
+    """The packing epoch: continue each shard's open bin from the
+    pre-epoch state, then write the assignments and the merged state."""
+
+    def step(batch_df: DataFrame, epoch_id: int, snapshot) -> dict:
         toks = batch_df.select(
             "doc_id",
             (seeded_hash64(F.col("doc_id").cast("string"), seed) % shards).alias(
@@ -131,30 +140,16 @@ def run_streaming_greedy_pack(
             F.size(words(F.col("text"))).cast("long").alias("n_tokens"),
         )
         prev = _latest_state(spark, state_dir, epoch_id)
-        assigns = greedy_pack_continue(toks, prev, budget=budget)
-        # snapshot BEFORE the epoch writes land (the state DAG reads
-        # state_dir); release the blocks once the epoch commits
-        assigns, release_a = _epoch_snapshot(spark, assigns)
-        new_state, release_s = _epoch_snapshot(
-            spark, merge_pack_state(prev, pack_state(assigns))
-        )
-        try:
-            assigns.write.mode("overwrite").parquet(
-                f"{assignments_dir}/epoch={epoch_id}"
-            )
-            new_state.write.mode("overwrite").parquet(
-                f"{state_dir}/epoch={epoch_id}"
-            )
-        finally:
-            release_a()
-            release_s()
+        # prev reads state_dir, which this epoch writes into: snapshot
+        # the assignments first and merge the state from that snapshot,
+        # so the Arrow packing stage runs once per epoch
+        assigns = snapshot(greedy_pack_continue(toks, prev, budget=budget))
+        return {
+            assignments_dir: assigns,
+            state_dir: snapshot(merge_pack_state(prev, pack_state(assigns))),
+        }
 
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
-    )
+    return step
 
 
 def read_assignments(spark: SparkSession, assignments_dir: str) -> DataFrame:

@@ -11,6 +11,9 @@ event-log semantics to a live stream:
   interval lives in state and closes when the next trigger event arrives.
   Batch-equivalence is pinned by tests/test_streaming.py (same intervals
   as operators/sessionize.build_state_intervals on the same data).
+- ``run_epoch_stream``: the one foreachBatch driver behind every
+  epoch-log stream in this package (sketch, dedup, pack and incremental
+  runtime); its docstring holds their shared exactly-once contract.
 
 Local tests drive streams from the static parquet dirs (one file = one
 micro-batch) with a memory sink and processAllAvailable() — the public
@@ -32,6 +35,7 @@ from contextlib import contextmanager
 from typing import Iterator, Tuple
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -219,13 +223,129 @@ def pinned_state_partitions(spark: SparkSession):
             spark.conf.unset("spark.sql.shuffle.partitions")
 
 
-def run_foreachbatch_stream(writer, spark: SparkSession) -> None:
-    """start → processAllAvailable → stop for a configured foreachBatch
-    writer, with the ephemeral-checkpoint I/O conf applied for the run
-    (see :func:`fast_local_checkpoints`) — the shared tail of every
-    foreachBatch surface (dedup/pack/sketch/incremental streams)."""
-    with fast_local_checkpoints(spark):
-        q = writer.start()
+# the read errors that mean "no epoch written yet" (the first epoch):
+# a missing directory, or one holding no parquet files
+_NO_EPOCH_YET = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
+def read_epoch_log(spark: SparkSession, log_dir: str) -> DataFrame | None:
+    """Every epoch written under ``log_dir`` (with its ``epoch``
+    partition column), or None before the first epoch has written. Any
+    other read failure — a corrupt part file, an unreadable directory —
+    raises: a stream that read its own state as absent would restart
+    from empty and write results no batch run produces."""
+    try:
+        return spark.read.parquet(log_dir)
+    except AnalysisException as e:
+        if e.getCondition() in _NO_EPOCH_YET:
+            return None
+        raise
+
+
+def file_stream(spark: SparkSession, stream_dir: str, schema: str) -> DataFrame:
+    """Parquet-file stream of ``stream_dir`` with one file per
+    micro-batch, so each file dropped into the directory is one epoch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(stream_dir)
+    )
+
+
+def _epoch_snapshot(spark: SparkSession, df: DataFrame):
+    """Lineage-truncating snapshot of an epoch result, with a
+    deterministic release handle.
+
+    ``localCheckpoint(eager=True)`` is the snapshot-integrity half: a
+    lost cached partition FAILS the (idempotent) epoch instead of
+    silently recomputing against the post-write mixed index. Its
+    MEMORY_AND_DISK blocks, however, are otherwise only released when
+    the JVM garbage-collects the RDD reference — in a long-running
+    stream that lets storage grow with epoch count. The checkpointed
+    RDD id is diffed from the public
+    ``JavaSparkContext.getPersistentRDDs`` map and then filtered to
+    ids whose RDD ``isLocallyCheckpointed()`` — the eager checkpoint
+    job can itself lazily materialize ``tracked_persist`` caches
+    (InMemoryRelation cached RDDs register at first materialization),
+    and unpersisting those behind the CacheManager's back would
+    silently send plans believed cached cold. ``release()`` unpersists
+    exactly the checkpoint's own ids once the epoch's writes are
+    committed."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    cp = df.localCheckpoint(eager=True)
+    after = jsc.getPersistentRDDs()
+    new_ids = [
+        i
+        for i in after.keySet().toArray()
+        if i not in before and after.get(i).rdd().isLocallyCheckpointed()
+    ]
+
+    def release() -> None:
+        try:
+            live = jsc.getPersistentRDDs()
+            for i in new_ids:
+                jrdd = live.get(i)
+                if jrdd is not None:
+                    jrdd.unpersist(False)
+        except Exception:
+            pass  # cleanup is best-effort; the epoch already committed
+
+    return cp, release
+
+
+def run_epoch_stream(stream: DataFrame, step, checkpoint_dir: str) -> None:
+    """Drive ``stream`` through ``step`` one micro-batch at a time until
+    the available input is consumed (processAllAvailable), then stop;
+    re-running resumes from ``checkpoint_dir``.
+
+    ``step(batch_df, epoch_id, snapshot)`` returns an ordered
+    ``{dir: DataFrame}``. Each DataFrame is written, in that order, to
+    ``f"{dir}/epoch={epoch_id}"``.
+
+    The exactly-once contract every foreachBatch stream in this package
+    shares, without a transactional table format:
+
+    - **Overwrite per epoch.** Each epoch owns its ``epoch=<id>``
+      partitions and writes them with overwrite, so a micro-batch
+      replayed after a failure (same id, same input) replaces its own
+      output instead of duplicating it. Readers merge the epoch log.
+    - **Snapshot before any write when a sink reads its own output
+      directory.** A step whose DataFrame reads a directory this epoch
+      writes into (the dedup index, the pack state) passes it through
+      ``snapshot(df)`` first: :func:`_epoch_snapshot` materializes it
+      against the pre-epoch log, so the write cannot change what it
+      reads.
+    - **Release after commit.** Every snapshot taken during the epoch
+      is released in one ``finally`` once its writes are done.
+
+    State partitions are pinned to the local parallelism for the run
+    and the ephemeral-checkpoint I/O conf applied (see
+    :func:`pinned_state_partitions`, :func:`fast_local_checkpoints`);
+    both are restored afterwards."""
+    spark = stream.sparkSession
+
+    def run_epoch(batch_df: DataFrame, epoch_id: int) -> None:
+        releases = []
+
+        def snapshot(df: DataFrame) -> DataFrame:
+            cp, release = _epoch_snapshot(spark, df)
+            releases.append(release)
+            return cp
+
+        try:
+            for out_dir, df in step(batch_df, epoch_id, snapshot).items():
+                df.write.mode("overwrite").parquet(f"{out_dir}/epoch={epoch_id}")
+        finally:
+            for release in releases:
+                release()
+
+    with pinned_state_partitions(spark), fast_local_checkpoints(spark):
+        q = (
+            stream.writeStream.foreachBatch(run_epoch)
+            .option("checkpointLocation", checkpoint_dir)
+            .start()
+        )
         try:
             q.processAllAvailable()
         finally:

@@ -9,14 +9,14 @@ distinct values). That bounded state is what `dropDuplicates`-then-count
 can NOT give a stream: exact streaming distinct-count state grows with
 the true cardinality and eventually evicts (watermark) or OOMs.
 
-Exactly-once without a transactional format (same epoch-partition
-pattern as streaming/dedup_stream.py): each micro-batch's per-group
-k-minima land in their own ``epoch=<id>`` partition with overwrite
-semantics, so a replayed micro-batch is idempotent; the live sketch is
-the union of all epoch partitions re-truncated to k per group
+Each micro-batch's per-group k-minima are one epoch of an epoch log,
+kept exactly-once by :func:`streaming.sessions.run_epoch_stream`; the
+live sketch is the union of all epochs re-truncated to k per group
 (:func:`operators.sketch.kmv_merge` — merge-and-truncate is exactly the
 KMV union law, so the streamed estimate equals the batch estimate over
-the same data, pinned by test_kmv_stream).
+the same data, pinned by test_kmv_stream). The count-min, histogram,
+HLL, bootstrap and priority-sample streams below follow the same
+partial / merge / finalize shape.
 
 At 100 TB/day: per micro-batch work is one DISTINCT-reduce of the batch
 plus a k-min window over the batch's vocabulary; state directory growth
@@ -26,28 +26,32 @@ sources/maintenance.compact_parquet like any epoch log.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from openstack_billing_from_db_spark.operators.quantiles import (
+    DEFAULT_P_MICRO,
+    histogram_cells,
+    quantiles_from_cells,
+)
+from openstack_billing_from_db_spark.operators.sampling import (
+    bootstrap_finalize,
+    bootstrap_partial,
+    priority_sample,
+)
 from openstack_billing_from_db_spark.operators.sketch import (
+    countmin_build,
+    hll_estimate,
+    hll_merge,
+    hll_registers,
     kmv_finalize,
     kmv_merge,
     kmv_partial,
 )
 from openstack_billing_from_db_spark.streaming.sessions import (
-    run_foreachbatch_stream,
+    file_stream,
+    run_epoch_stream,
 )
-
-
-def update_batch(
-    batch_df: DataFrame,
-    *,
-    group_col: str,
-    value_col: str,
-    k: int = 16,
-) -> DataFrame:
-    """One micro-batch → its per-group KMV state rows (≤ k per group)."""
-    return kmv_partial(batch_df, group_col=group_col, value_col=value_col, k=k)
 
 
 def run_streaming_kmv(
@@ -64,23 +68,14 @@ def run_streaming_kmv(
     """Stream files → per-epoch KMV state partitions. Runs to completion
     on the available files (processAllAvailable) and stops; re-running
     picks up new files from the checkpoint."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        part = update_batch(
-            batch_df, group_col=group_col, value_col=value_col, k=k
-        )
-        part.write.mode("overwrite").parquet(f"{state_dir}/epoch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
+    run_epoch_stream(
+        file_stream(spark, stream_dir, schema),
+        lambda batch_df, epoch_id, snapshot: {
+            state_dir: kmv_partial(
+                batch_df, group_col=group_col, value_col=value_col, k=k
+            )
+        },
+        checkpoint_dir,
     )
 
 
@@ -109,28 +104,6 @@ def read_kmv_estimate(
 # stream has carried.
 
 
-def update_batch_countmin(
-    batch_df: DataFrame,
-    *,
-    value_col: str,
-    depth: int | None = None,
-    width: int | None = None,
-) -> DataFrame:
-    """One micro-batch → its count-min cell counts (≤ d·w rows)."""
-    from openstack_billing_from_db_spark.operators.sketch import (
-        CM_DEPTH,
-        CM_WIDTH,
-        countmin_build,
-    )
-
-    return countmin_build(
-        batch_df,
-        value_col=value_col,
-        depth=depth or CM_DEPTH,
-        width=width or CM_WIDTH,
-    )
-
-
 def run_streaming_countmin(
     spark: SparkSession,
     stream_dir: str,
@@ -142,21 +115,12 @@ def run_streaming_countmin(
 ) -> None:
     """Stream files → per-epoch count-min cell partitions
     (processAllAvailable, then stop; the checkpoint resumes new files)."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = update_batch_countmin(batch_df, value_col=value_col)
-        cells.write.mode("overwrite").parquet(f"{state_dir}/epoch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
+    run_epoch_stream(
+        file_stream(spark, stream_dir, schema),
+        lambda batch_df, epoch_id, snapshot: {
+            state_dir: countmin_build(batch_df, value_col=value_col)
+        },
+        checkpoint_dir,
     )
 
 
@@ -164,30 +128,11 @@ def read_countmin_sketch(spark: SparkSession, state_dir: str) -> DataFrame:
     """The live sketch: every epoch's cells summed — equals the batch
     sketch over the union of all streamed data (merge-by-addition law,
     pinned by test_kmv_stream). Probe with operators.sketch.countmin_probe."""
-    from pyspark.sql import functions as F
-
     state = spark.read.parquet(state_dir).select("cm_row", "cm_bucket", "cnt")
     return state.groupBy("cm_row", "cm_bucket").agg(F.sum("cnt").alias("cnt"))
 
 
 # --- histogram quantiles: streaming percentile state -------------------------
-
-
-def update_batch_histogram(
-    batch_df: DataFrame,
-    *,
-    group_col: str,
-    value_col: str,
-    bin_width: int,
-) -> DataFrame:
-    """One micro-batch → its (group, bin, cnt) histogram cells."""
-    from openstack_billing_from_db_spark.operators.quantiles import (
-        histogram_cells,
-    )
-
-    return histogram_cells(
-        batch_df, group_col=group_col, value_col=value_col, bin_width=bin_width
-    )
 
 
 def run_streaming_histogram(
@@ -205,26 +150,14 @@ def run_streaming_histogram(
     epoch is bounded by groups × occupied bins, independent of row
     volume — live percentiles over an unbounded stream without keeping
     a single raw value."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = update_batch_histogram(
-            batch_df,
-            group_col=group_col,
-            value_col=value_col,
-            bin_width=bin_width,
-        )
-        cells.write.mode("overwrite").parquet(f"{state_dir}/epoch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
+    run_epoch_stream(
+        file_stream(spark, stream_dir, schema),
+        lambda batch_df, epoch_id, snapshot: {
+            state_dir: histogram_cells(
+                batch_df, group_col=group_col, value_col=value_col, bin_width=bin_width
+            )
+        },
+        checkpoint_dir,
     )
 
 
@@ -239,11 +172,6 @@ def read_histogram_quantiles(
     """The live per-group quantile estimates: all epoch cells summed
     (merge-by-addition) then finalized — equals the batch sketch over
     the union of the streamed data."""
-    from openstack_billing_from_db_spark.operators.quantiles import (
-        DEFAULT_P_MICRO,
-        quantiles_from_cells,
-    )
-
     state = spark.read.parquet(state_dir).select(group_col, "bin", "cnt")
     return quantiles_from_cells(
         state,
@@ -262,19 +190,6 @@ def read_histogram_quantiles(
 # groupBy-max over all epochs, then the closed-form finalize.
 
 
-def update_batch_hll(
-    batch_df: DataFrame,
-    *,
-    group_col: str,
-    value_col: str,
-) -> DataFrame:
-    """One micro-batch → its per-(group, register) max-rank rows
-    (≤ HLL_M per group)."""
-    from openstack_billing_from_db_spark.operators.sketch import hll_registers
-
-    return hll_registers(batch_df, group_col=group_col, value_col=value_col)
-
-
 def run_streaming_hll(
     spark: SparkSession,
     stream_dir: str,
@@ -288,23 +203,14 @@ def run_streaming_hll(
     """Stream files → per-epoch HLL register partitions
     (processAllAvailable, then stop; the checkpoint resumes new files).
     Idempotent per epoch (overwrite), mergeable forever (max)."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        regs = update_batch_hll(
-            batch_df, group_col=group_col, value_col=value_col
-        )
-        regs.write.mode("overwrite").parquet(f"{state_dir}/epoch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
+    run_epoch_stream(
+        file_stream(spark, stream_dir, schema),
+        lambda batch_df, epoch_id, snapshot: {
+            state_dir: hll_registers(
+                batch_df, group_col=group_col, value_col=value_col
+            )
+        },
+        checkpoint_dir,
     )
 
 
@@ -318,11 +224,6 @@ def read_hll_estimate(
     equals the batch estimate over the union of the streamed data
     (register-max union law, pinned by test_kmv_stream).
     Output: (group, n_registers_used, est_milli)."""
-    from openstack_billing_from_db_spark.operators.sketch import (
-        hll_estimate,
-        hll_merge,
-    )
-
     state = spark.read.parquet(state_dir).select(group_col, "reg", "rho")
     return hll_estimate(
         hll_merge(state, group_col=group_col), group_col=group_col
@@ -330,28 +231,6 @@ def read_hll_estimate(
 
 
 # --- Poisson-bootstrap CI: streaming uncertainty state ------------------------
-
-
-def update_batch_bootstrap(
-    batch_df: DataFrame,
-    *,
-    id_col: str,
-    value_col: str,
-    n_replicas: int = 40,
-    seed: str = "boot",
-) -> DataFrame:
-    """One micro-batch → its (B+1) bootstrap sum rows (b, s, n)."""
-    from openstack_billing_from_db_spark.operators.sampling import (
-        bootstrap_partial,
-    )
-
-    return bootstrap_partial(
-        batch_df,
-        id_col=id_col,
-        value_col=value_col,
-        n_replicas=n_replicas,
-        seed=seed,
-    )
 
 
 def run_streaming_bootstrap(
@@ -372,31 +251,22 @@ def run_streaming_bootstrap(
     weights are a pure function of (row id, replica) — seeded-hash
     inverse-CDF draws — so a replayed micro-batch recomputes the exact
     same sums and the epoch-partition overwrite stays idempotent
-    (exactly-once without a transactional format, the dedup_stream
-    pattern). Because every state component is a SUM, the live CI over
-    all epochs equals the batch CI over the union of the streamed data
-    (merge-by-addition law, pinned by test_kmv_stream)."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        part = update_batch_bootstrap(
-            batch_df,
-            id_col=id_col,
-            value_col=value_col,
-            n_replicas=n_replicas,
-            seed=seed,
-        )
-        part.write.mode("overwrite").parquet(f"{state_dir}/epoch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
+    (:func:`streaming.sessions.run_epoch_stream`). Because every state
+    component is a SUM, the live CI over all epochs equals the batch CI
+    over the union of the streamed data (merge-by-addition law, pinned
+    by test_kmv_stream)."""
+    run_epoch_stream(
+        file_stream(spark, stream_dir, schema),
+        lambda batch_df, epoch_id, snapshot: {
+            state_dir: bootstrap_partial(
+                batch_df,
+                id_col=id_col,
+                value_col=value_col,
+                n_replicas=n_replicas,
+                seed=seed,
+            )
+        },
+        checkpoint_dir,
     )
 
 
@@ -406,10 +276,6 @@ def read_bootstrap_ci(
     """The live CI: every epoch's sums merged by addition, then the
     batch finalizer — identical output to running the batch operator
     over all streamed rows."""
-    from openstack_billing_from_db_spark.operators.sampling import (
-        bootstrap_finalize,
-    )
-
     state = spark.read.parquet(state_dir).select("b", "s", "n")
     return bootstrap_finalize(state, n_replicas=n_replicas)
 
@@ -428,24 +294,6 @@ def read_bootstrap_ci(
 # before compaction).
 
 
-def update_batch_priority(
-    batch_df: DataFrame,
-    *,
-    key_col: str,
-    weight_col: str,
-    k: int = 16,
-    seed: str = "pri",
-) -> DataFrame:
-    """One micro-batch → its own k best (key, weight, priority) rows."""
-    from openstack_billing_from_db_spark.operators.sampling import (
-        priority_sample,
-    )
-
-    return priority_sample(
-        batch_df, key_col=key_col, weight_col=weight_col, k=k, seed=seed
-    ).drop("rnk")
-
-
 def run_streaming_priority_sample(
     spark: SparkSession,
     stream_dir: str,
@@ -462,23 +310,14 @@ def run_streaming_priority_sample(
     (≤ k rows each, idempotent overwrite). Runs to completion on the
     available files and stops; re-running picks up new files from the
     checkpoint."""
-
-    def step(batch_df: DataFrame, epoch_id: int) -> None:
-        part = update_batch_priority(
-            batch_df, key_col=key_col, weight_col=weight_col, k=k, seed=seed
-        )
-        part.write.mode("overwrite").parquet(f"{state_dir}/epoch={epoch_id}")
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stream_dir)
-    )
-    run_foreachbatch_stream(
-        stream.writeStream.foreachBatch(step).option(
-            "checkpointLocation", checkpoint_dir
-        ),
-        stream.sparkSession,
+    run_epoch_stream(
+        file_stream(spark, stream_dir, schema),
+        lambda batch_df, epoch_id, snapshot: {
+            state_dir: priority_sample(
+                batch_df, key_col=key_col, weight_col=weight_col, k=k, seed=seed
+            ).drop("rnk")
+        },
+        checkpoint_dir,
     )
 
 
@@ -488,8 +327,6 @@ def read_priority_sample(
     """The live sample: merge every epoch's candidates and re-rank to
     the global k best (merge-and-truncate). Output matches
     ``sampling.priority_sample``: (key, weight, priority, rnk)."""
-    from pyspark.sql.window import Window
-
     state = spark.read.parquet(state_dir).select("key", "weight", "priority")
     top = state.orderBy("priority", "key").limit(k)
     w = Window.orderBy("priority", "key")

@@ -336,7 +336,7 @@ def test_epoch_snapshot_releases_blocks(spark):
     AND releases the checkpoint's cached blocks deterministically —
     in a long-running stream GC-based cleanup lets storage grow with
     epoch count (self-review round 10)."""
-    from openstack_billing_from_db_spark.streaming.dedup_stream import (
+    from openstack_billing_from_db_spark.streaming.sessions import (
         _epoch_snapshot,
     )
 

@@ -223,3 +223,36 @@ def test_merge_pack_state_explicit_shard_col(spark):
     assert got == {0: (2, 8), 1: (1, 4)}
     with pytest.raises(ValueError, match="shard_col"):
         merge_pack_state(prev, batch.withColumnRenamed("shard", "s"))
+
+
+def test_streaming_pack_refuses_unreadable_state(spark, tmp_path):
+    """A state log that exists but cannot be read fails the run: read
+    as "no prior state", it would pack the new docs from bin 0 —
+    assignments no batch run produces."""
+    import glob
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    docs_dir = str(tmp_path / "docs_stream")
+    assigns_dir = str(tmp_path / "assigns")
+    state_dir = str(tmp_path / "state")
+    ckpt = str(tmp_path / "ckpt")
+    rows = [_doc(i, 1 + (i * 7) % 11) for i in range(40)]
+    _write_docs(f"{docs_dir}/b0.parquet", rows[:20])
+    _write_docs(f"{docs_dir}/b1.parquet", rows[20:])
+    run_streaming_greedy_pack(
+        spark, docs_dir, assigns_dir, state_dir, ckpt, budget=16, shards=2
+    )
+    for part in glob.glob(f"{state_dir}/epoch=*/part-*"):
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    for crc in glob.glob(f"{state_dir}/epoch=*/.part-*.crc"):
+        os.remove(crc)
+    _write_docs(f"{docs_dir}/b2.parquet", [_doc(i, 3) for i in range(40, 50)])
+    with pytest.raises(
+        StreamingQueryException, match="CANNOT_READ_FILE_FOOTER"
+    ):
+        run_streaming_greedy_pack(
+            spark, docs_dir, assigns_dir, state_dir, ckpt, budget=16, shards=2
+        )
